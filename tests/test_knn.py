@@ -1,5 +1,7 @@
 """kNN ring-expansion exactness vs brute force, determinism, edge cases."""
 
+import logging
+
 import numpy as np
 import pytest
 
@@ -44,6 +46,39 @@ def _brute(pts_rows, q_rows, k):
         out[q.query_id] = [(pid, dist) for dist, pid in d]
     return out
 
+
+def _assert_brute(got, pts, qs, k):
+    """The WHOLE result equals brute force: same queries, ranks 1..n in
+    (dist2, neighbor_id) order, same neighbors and distances."""
+    by_q = {}
+    for r in sorted(got.collect(), key=lambda r: (r.query_id, r.rank)):
+        by_q.setdefault(r.query_id, []).append((r.rank, r.neighbor_id, r.dist2))
+    want = _brute(pts.collect(), qs.collect(), k)
+    assert set(by_q) == set(want)
+    for qid, rows in by_q.items():
+        assert [r[0] for r in rows] == list(range(1, len(rows) + 1)), qid
+        assert [(r[1], r[2]) for r in rows] == want[qid], qid
+
+
+def _rounds(caplog):
+    """(r, pts_cached) of every ring round knn_join logged."""
+    out = []
+    for rec in caplog.records:
+        msg = rec.getMessage()
+        if rec.name == "osmgraft.operators.knn" and "round r=" in msg:
+            fields = dict(f.split("=") for f in msg.split()[2:])
+            out.append((int(fields["r"]), fields["pts_cached"] == "True"))
+    return out
+
+
+def _pts_df(spark, rows):
+    return spark.createDataFrame(rows, "point_id long, lat7 int, lon7 int")
+
+
+def _qs_df(spark, rows):
+    return spark.createDataFrame(rows, "query_id long, lat7 int, lon7 int")
+
+
 def test_knn_exact_vs_brute(spark, small_world):
     pts, qs = small_world
     got = knn_join(pts, qs, k=5).collect()
@@ -81,9 +116,87 @@ def test_knn_k_exceeds_points(spark):
         [(1, 0, 0), (2, 10, 10)], "point_id long, lat7 int, lon7 int"
     )
     qs = spark.createDataFrame([(9, 5, 5)], "query_id long, lat7 int, lon7 int")
-    got = knn_join(pts, qs, k=5).collect()
-    assert len(got) == 2
-    assert [r.rank for r in sorted(got, key=lambda r: r.rank)] == [1, 2]
+    got = knn_join(pts, qs, k=5)
+    assert got.count() == 2
+    _assert_brute(got, pts, qs, 5)
+
+
+def test_knn_k_exceeds_points_skips_rings(spark, caplog):
+    """|points| <= k: no ring round can resolve a query, so none runs."""
+    caplog.set_level(logging.DEBUG, logger="osmgraft.operators.knn")
+    pts = _pts_df(spark, [(1, 0, 0), (2, 10, 10), (3, -400_000_000, 900_000_000)])
+    qs = _qs_df(spark, [(9, 5, 5), (10, 300_000_000, -1_000_000_000)])
+    _assert_brute(knn_join(pts, qs, k=3), pts, qs, 3)
+    assert _rounds(caplog) == []
+    assert any("brute-force fallback for 2 queries" in r.getMessage() for r in caplog.records)
+
+
+# sparse background far from one query, plus a dense cluster that keeps the
+# density estimate (and so r0) at one cell: the far query needs round two
+_G = 10_000_000  # 1-degree cells
+
+
+def _far_inputs(spark, id0=0):
+    rng = np.random.default_rng(7)
+    cluster = [
+        (id0 + i, 5_000_000 + int(a), 5_000_000 + int(b))
+        for i, (a, b) in enumerate(rng.integers(-4_000_000, 4_000_000, (60, 2)))
+    ]
+    sparse = [(id0 + 100 + i, 200_000_000 + 3 * _G * i, 300_000_000) for i in range(6)]
+    pts = _pts_df(spark, cluster + sparse)
+    qs = _qs_df(spark, [(1, 5_000_000, 5_000_000), (2, 230_000_000, 330_000_000)])
+    return pts, qs
+
+
+@pytest.fixture(scope="module")
+def far_world(spark):
+    return _far_inputs(spark)
+
+
+def test_knn_multi_round_caches_points_from_round_two(spark, far_world, caplog):
+    caplog.set_level(logging.DEBUG, logger="osmgraft.operators.knn")
+    pts, qs = far_world
+    _assert_brute(knn_join(pts, qs, k=3, cell_size=_G), pts, qs, 3)
+    rounds = _rounds(caplog)
+    assert len(rounds) >= 2 and rounds[0] == (1, False)
+    assert all(cached for _, cached in rounds[1:])
+
+
+def test_knn_point_exactly_at_ring_bound(spark, caplog):
+    """The kth neighbor at exactly r·cell_size along one axis resolves in
+    round r (dist2 <= (r·G)² keeps it); a nearer-looking in-disk diagonal
+    beyond the bound must lose to an out-of-disk point."""
+    caplog.set_level(logging.DEBUG, logger="osmgraft.operators.knn")
+    h = _G // 2  # query at the centre of cell (0, 0)
+    pts = _pts_df(
+        spark,
+        [
+            (1, h + _G, h),  # dist2 == G²: exactly on the r=1 bound
+            (2, h + 12 * _G // 10, h + 12 * _G // 10),  # in the disk, 2.88 G²
+            (3, h + 16 * _G // 10, h),  # outside the r=1 disk, 2.56 G²
+        ],
+    )
+    qs = _qs_df(spark, [(7, h, h)])
+    _assert_brute(knn_join(pts, qs, k=1, cell_size=_G), pts, qs, 1)
+    assert _rounds(caplog) == [(1, False)]
+    caplog.clear()
+    _assert_brute(knn_join(pts, qs, k=2, cell_size=_G), pts, qs, 2)
+    assert [r for r, _ in _rounds(caplog)] == [1, 4]
+
+
+def test_knn_coarse_cells_wrap_alias(spark, caplog):
+    """ncl = 6 lon cells: the r=4 disk spans 9 lon offsets, so lon offsets
+    2..4 alias -4..-2. The points sit two lon cells from the query, in an
+    aliased cell that must still be scanned once per query."""
+    caplog.set_level(logging.DEBUG, logger="osmgraft.operators.knn")
+    cell = 600_000_000  # 60 degrees
+    rng = np.random.default_rng(3)
+    lat = rng.integers(-100_000_000, 100_000_000, 12)
+    lon = rng.integers(1_500_000_000, 1_700_000_000, 12)
+    pts = _pts_df(spark, [(i, int(a), int(b)) for i, (a, b) in enumerate(zip(lat, lon))])
+    qs = _qs_df(spark, [(1, 0, 300_000_000), (2, 50_000_000, 100_000_000)])
+    _assert_brute(knn_join(pts, qs, k=3, cell_size=cell), pts, qs, 3)
+    assert any(2 * r + 1 > 6 for r, _ in _rounds(caplog))
 
 
 def test_knn_within_radius_matches_iterative(spark):
@@ -176,3 +289,28 @@ def test_knn_h3_ball_matches_bruteforce(spark):
     want = sorted(map(tuple, _topk(brute_cand, 5)
                       .select("query_id", "neighbor_id", "dist2", "rank").collect()))
     assert got == want and len(got) > 0
+
+
+def _cached_rdds(spark) -> int:
+    """Persistent RDDs that are caches. The local checkpoints a result reads
+    are persistent RDDs too, but they live exactly as long as that result."""
+    m = spark.sparkContext._jsc.getPersistentRDDs()
+    return sum(not m.get(i).rdd().isLocallyCheckpointed() for i in m.keySet().toArray())
+
+
+@pytest.mark.parametrize("path", ["single_round", "multi_round"])
+def test_knn_leaves_no_cache(spark, path, caplog):
+    caplog.set_level(logging.DEBUG, logger="osmgraft.operators.knn")
+    # fresh point ids: a cache left by another call on equal data would
+    # already count in `before`
+    pts, qs = _far_inputs(spark, id0=1000 if path == "single_round" else 2000)
+    if path == "single_round":
+        qs = qs.filter("query_id = 1")  # inside the cluster: resolves at r0
+    before = _cached_rdds(spark)
+    got = knn_join(pts, qs, k=3, cell_size=_G)
+    assert _cached_rdds(spark) == before
+    assert got.count() == 3 * qs.count()
+    assert _cached_rdds(spark) == before
+    rounds = _rounds(caplog)
+    assert (len(rounds) == 1) == (path == "single_round")
+    assert any(cached for _, cached in rounds) == (path == "multi_round")
