@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 
 COORD_SCALE = 10_000_000.0
 LAT_MAX7 = 900_000_000
-LON_MAX7 = 1_800_000_000
+LON_MAX7 = 1_800_000_000  # ±180°: half the longitude span
+LON_SPAN = 2 * LON_MAX7  # 360°: longitudes wrap modulo this
 
 
 # --- Spark Column forms ----------------------------------------------------

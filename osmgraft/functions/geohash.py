@@ -20,9 +20,10 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from osmgraft.functions.coords import LON_SPAN
+
 ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"
 
-_LON_SPAN = 3_600_000_000  # 1e-7 deg units
 _LAT_SPAN = 1_800_000_000
 
 
@@ -51,7 +52,7 @@ def geohash_int(lat7: np.ndarray, lon7: np.ndarray, precision: int = 8) -> np.nd
     nbits = 5 * precision
     lon_bits = (nbits + 1) // 2
     lat_bits = nbits // 2
-    ix = _quant(np.asarray(lon7), _LON_SPAN, lon_bits)
+    ix = _quant(np.asarray(lon7), LON_SPAN, lon_bits)
     iy = _quant(np.asarray(lat7), _LAT_SPAN, lat_bits)
     # lon MSB must land at bit nbits-1: even nbits -> lon on odd LSB
     # positions (shift lon), odd nbits -> lon on even positions (shift lat)
@@ -111,7 +112,7 @@ def geohash_int_col(lat7: Column, lon7: Column, precision: int = 8) -> Column:
     # correctly-rounded division — same argument applies to the DuckDB twin
     ix = _clamp(
         F.floor(
-            F.shiftleft(lon7.cast("long") + _LON_SPAN // 2, lon_bits) / _LON_SPAN
+            F.shiftleft(lon7.cast("long") + LON_SPAN // 2, lon_bits) / LON_SPAN
         ).cast("long"),
         (1 << lon_bits) - 1,
     )
@@ -160,8 +161,8 @@ def sql_geohash_int(lat7: str, lon7: str, precision: int = 8) -> str:
     lon_bits = (nbits + 1) // 2
     lat_bits = nbits // 2
     ix = (
-        f"least(greatest(CAST(floor(((CAST(({lon7}) AS BIGINT) + {_LON_SPAN // 2})"
-        f" * {1 << lon_bits}) / {_LON_SPAN}) AS BIGINT), 0), {(1 << lon_bits) - 1})"
+        f"least(greatest(CAST(floor(((CAST(({lon7}) AS BIGINT) + {LON_SPAN // 2})"
+        f" * {1 << lon_bits}) / {LON_SPAN}) AS BIGINT), 0), {(1 << lon_bits) - 1})"
     )
     iy = (
         f"least(greatest(CAST(floor(((CAST(({lat7}) AS BIGINT) + {_LAT_SPAN // 2})"
@@ -221,7 +222,7 @@ def geohash_decode(hashes) -> tuple[np.ndarray, np.ndarray]:
             ix = _compact(vals)
             iy = _compact(vals >> 1)
         # center = (i + 0.5) * span / 2^bits - span/2, exact in integers
-        lon.ravel()[sel] = ((2 * ix + 1) * _LON_SPAN) // (2 << lon_bits) - _LON_SPAN // 2
+        lon.ravel()[sel] = ((2 * ix + 1) * LON_SPAN) // (2 << lon_bits) - LON_SPAN // 2
         lat.ravel()[sel] = ((2 * iy + 1) * _LAT_SPAN) // (2 << lat_bits) - _LAT_SPAN // 2
     return lat, lon
 
@@ -299,8 +300,8 @@ def sql_geohash_counts(pts_cte: str, precision: int = 6) -> str:
     prev = "q"
     q = (
         f"q AS (SELECT point_id,\n"
-        f"  least(greatest(CAST(floor(((CAST(lon7 AS BIGINT) + {_LON_SPAN // 2})"
-        f" * {1 << lon_bits}) / {_LON_SPAN}) AS BIGINT), 0), {(1 << lon_bits) - 1})"
+        f"  least(greatest(CAST(floor(((CAST(lon7 AS BIGINT) + {LON_SPAN // 2})"
+        f" * {1 << lon_bits}) / {LON_SPAN}) AS BIGINT), 0), {(1 << lon_bits) - 1})"
         f" & {0xFFFFFFFF} AS sx,\n"
         f"  least(greatest(CAST(floor(((CAST(lat7 AS BIGINT) + {_LAT_SPAN // 2})"
         f" * {1 << lat_bits}) / {_LAT_SPAN}) AS BIGINT), 0), {(1 << lat_bits) - 1})"
@@ -338,8 +339,8 @@ def with_geohash(df, lat_col: str, lon_col: str, precision: int = 8, out: str = 
     lat_bits = nbits // 2
     sx = _clamp(
         F.floor(
-            F.shiftleft(F.col(lon_col).cast("long") + _LON_SPAN // 2, lon_bits)
-            / _LON_SPAN
+            F.shiftleft(F.col(lon_col).cast("long") + LON_SPAN // 2, lon_bits)
+            / LON_SPAN
         ).cast("long"),
         (1 << lon_bits) - 1,
     ).bitwiseAND(F.lit(0xFFFFFFFF))

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from osmgraft.functions.cells import floordiv
+
 TEN7 = 10**7
 
 
@@ -79,7 +81,7 @@ def dec7_col(x: Column) -> Column:
     projection is messier than restating it with Column ops — text parity is
     asserted in tests)."""
     a = F.abs(x.cast("long"))
-    ip = ((a - F.pmod(a, F.lit(TEN7))) / F.lit(TEN7)).cast("long")
+    ip = floordiv(a, TEN7)
     fr = F.lpad(F.pmod(a, F.lit(TEN7)).cast("string"), 7, "0")
     return F.concat(
         F.when(x < 0, F.lit("-")).otherwise(F.lit("")),

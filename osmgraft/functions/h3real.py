@@ -1,9 +1,8 @@
 """Uber-H3-compatible cell index (latLngToCell, res 0-15) from scratch.
 
 This module produces cell ids BIT-IDENTICAL to Uber H3's ``latLngToCell`` —
-a user can join them against externally-produced H3 data.  It exists because
-the north rule names "H3 res-7/-9" and round-2's ``h3ish`` aperture-7 kernel
-deliberately diverged (documented non-goal then; closed now).
+a user can join them against externally-produced H3 data; it is the
+engine's one H3 implementation (the north rule names "H3 res-7/-9").
 
 Everything here derives from PUBLIC knowledge:
 
@@ -56,6 +55,8 @@ any partitioning/parallelism.
 from __future__ import annotations
 
 import numpy as np
+
+from osmgraft.functions.coords import LON_SPAN
 
 MAX_RES = 15
 _SQRT7 = 2.6457513110645905905016157536393
@@ -848,9 +849,9 @@ def _fill_sweep(ring, holes, res: int) -> dict:
         # unwrapped frame: negative lons shifted +360 so the ring (and the
         # center ray-cast below) is contiguous across the antimeridian
         ring = ring.copy()
-        ring[:, 1] = np.where(ring[:, 1] < 0, ring[:, 1] + 3_600_000_000, ring[:, 1])
+        ring[:, 1] = np.where(ring[:, 1] < 0, ring[:, 1] + LON_SPAN, ring[:, 1])
         holes = [
-            [(p[0], p[1] + 3_600_000_000 if p[1] < 0 else p[1]) for p in hh]
+            [(p[0], p[1] + LON_SPAN if p[1] < 0 else p[1]) for p in hh]
             for hh in holes
         ]
     edges = polygon_edges({"ring": [tuple(p) for p in ring],
@@ -910,7 +911,7 @@ def _fill_sweep(ring, holes, res: int) -> dict:
     clat7 = np.round(cla * 1e7).astype(np.int64)
     clon7_enc = np.round(clo * 1e7).astype(np.int64)
     if wrap:
-        clon7_pip = np.where(clon7_enc < 0, clon7_enc + 3_600_000_000, clon7_enc)
+        clon7_pip = np.where(clon7_enc < 0, clon7_enc + LON_SPAN, clon7_enc)
     else:
         clon7_pip = clon7_enc
     return {

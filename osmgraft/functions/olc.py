@@ -34,11 +34,12 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from osmgraft.functions.coords import LON_SPAN
+
 ALPHABET = "23456789CFGHJMPQRVWX"
 
 STEP = 1250  # E7 units per finest-pair cell (0.000125 deg)
 _LAT_SPAN = 1_800_000_000
-_LON_SPAN = 3_600_000_000
 _LATQ_MAX = _LAT_SPAN // STEP - 1  # 1_439_999: lat=90 clamps into the top row
 _POWS = [20**k for k in (4, 3, 2, 1, 0)]
 
@@ -48,7 +49,7 @@ _POWS = [20**k for k in (4, 3, 2, 1, 0)]
 def olc_quantize(lat7: np.ndarray, lon7: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     latq = np.clip(lat7.astype(np.int64) + _LAT_SPAN // 2, 0, _LAT_SPAN) // STEP
     latq = np.minimum(latq, _LATQ_MAX)
-    lonq = np.mod(lon7.astype(np.int64) + _LON_SPAN // 2, _LON_SPAN) // STEP
+    lonq = np.mod(lon7.astype(np.int64) + LON_SPAN // 2, LON_SPAN) // STEP
     return latq, lonq
 
 
@@ -74,7 +75,7 @@ def olc_decode_sw(codes) -> tuple[np.ndarray, np.ndarray]:
         ds = [lut[c] for c in code if c != "+"]
         latq[i] = sum(d * p for d, p in zip(ds[0::2], _POWS))
         lonq[i] = sum(d * p for d, p in zip(ds[1::2], _POWS))
-    return latq * STEP - _LAT_SPAN // 2, lonq * STEP - _LON_SPAN // 2
+    return latq * STEP - _LAT_SPAN // 2, lonq * STEP - LON_SPAN // 2
 
 
 # --- JVM Column twin -----------------------------------------------------------
@@ -84,7 +85,7 @@ def _quant_cols(lat7: Column, lon7: Column) -> tuple[Column, Column]:
     # argument as geohash_int_col; quotients sit >= 1/STEP from integers)
     lat_t = F.least(F.greatest(lat7.cast("long") + _LAT_SPAN // 2, F.lit(0)), F.lit(_LAT_SPAN))
     latq = F.least(F.floor(lat_t / STEP).cast("long"), F.lit(_LATQ_MAX))
-    lon_t = F.pmod(lon7.cast("long") + _LON_SPAN // 2, F.lit(_LON_SPAN))
+    lon_t = F.pmod(lon7.cast("long") + LON_SPAN // 2, F.lit(LON_SPAN))
     lonq = F.floor(lon_t / STEP).cast("long")
     return latq, lonq
 
@@ -121,7 +122,7 @@ def olc_parse_sw_exprs(code_col: str) -> tuple[Column, Column]:
     lonq = " + ".join(f"{d(p)} * {w}" for p, w in zip(lon_pos, _POWS))
     return (
         F.expr(f"({latq}) * {STEP} - {_LAT_SPAN // 2}").cast("long"),
-        F.expr(f"({lonq}) * {STEP} - {_LON_SPAN // 2}").cast("long"),
+        F.expr(f"({lonq}) * {STEP} - {LON_SPAN // 2}").cast("long"),
     )
 
 
@@ -133,8 +134,8 @@ def sql_olc(lat7: str, lon7: str) -> str:
         f" {_LAT_SPAN}) / {STEP}) AS BIGINT), {_LATQ_MAX})"
     )
     lonq = (
-        f"CAST(floor(((CAST(({lon7}) AS BIGINT) + {_LON_SPAN // 2}) % {_LON_SPAN}"
-        f" + {_LON_SPAN}) % {_LON_SPAN} / {STEP}) AS BIGINT)"
+        f"CAST(floor(((CAST(({lon7}) AS BIGINT) + {LON_SPAN // 2}) % {LON_SPAN}"
+        f" + {LON_SPAN}) % {LON_SPAN} / {STEP}) AS BIGINT)"
     )
     parts = []
     for k, p in enumerate(_POWS):
@@ -156,5 +157,5 @@ def sql_olc_parse_sw(code: str) -> tuple[str, str]:
     lonq = " + ".join(f"{d(p)} * {w}" for p, w in zip(lon_pos, _POWS))
     return (
         f"CAST(({latq}) * {STEP} - {_LAT_SPAN // 2} AS BIGINT)",
-        f"CAST(({lonq}) * {STEP} - {_LON_SPAN // 2} AS BIGINT)",
+        f"CAST(({lonq}) * {STEP} - {LON_SPAN // 2} AS BIGINT)",
     )

@@ -20,6 +20,8 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from osmgraft.functions.coords import LON_MAX7, LON_SPAN
+
 
 # --- Spark Column form -------------------------------------------------------
 def tile_x(lon7: Column, z: int) -> Column:
@@ -75,20 +77,16 @@ def sql_tile_y(lat7_expr: str, z: int) -> str:
 
 
 # --- raster -> vector (inverse slippy: tile id -> geometry) ---------------------
-LON7_SPAN = 3_600_000_000
-LON7_HALF = 1_800_000_000
-
-
 def tile_lon7_west(x: Column, z: int) -> Column:
     """Exact fixed-point west edge of tile column x: x·span/2^z − half.
     Integer arithmetic — bitwise identical on every engine."""
-    return (x.cast("long") * F.lit(LON7_SPAN) / F.lit(2**z)).cast("long") - F.lit(LON7_HALF)
+    return (x.cast("long") * F.lit(LON_SPAN) / F.lit(2**z)).cast("long") - F.lit(LON_MAX7)
 
 
 def sql_tile_lon7_west(x_expr: str, z: int) -> str:
     return (
-        f"(CAST(CAST(({x_expr}) AS BIGINT) * {LON7_SPAN} / {2**z} AS BIGINT)"
-        f" - {LON7_HALF})"
+        f"(CAST(CAST(({x_expr}) AS BIGINT) * {LON_SPAN} / {2**z} AS BIGINT)"
+        f" - {LON_MAX7})"
     )
 
 
@@ -106,8 +104,8 @@ def np_tile_lat_bounds(y: np.ndarray, z: int) -> tuple[np.ndarray, np.ndarray]:
 def np_tile_polygon(x: int, y: int, z: int) -> list[tuple[int, int]]:
     """Tile cell as a closed fixed-point ring (lat7, lon7) — the raster→vector
     bridge: a z/x/y cell becomes a polygon consumable by pip_join/cell join."""
-    w = int(x * LON7_SPAN // 2**z - LON7_HALF)
-    e = int((x + 1) * LON7_SPAN // 2**z - LON7_HALF)
+    w = int(x * LON_SPAN // 2**z - LON_MAX7)
+    e = int((x + 1) * LON_SPAN // 2**z - LON_MAX7)
     s, n = np_tile_lat_bounds(np.array([y]), z)
     s7, n7 = int(round(s[0] * 1e7)), int(round(n[0] * 1e7))
     return [(s7, w), (s7, e), (n7, e), (n7, w), (s7, w)]

@@ -1,5 +1,6 @@
 """Geometry kernels: vectorized ray-casting point-in-polygon, STR-tree bbox
-index, haversine, and the exact fixed-point planar metric used for kNN.
+index and haversine. (The exact wrap-aware planar metric of kNN and its cell
+grid live in functions/cells.py.)
 
 All coordinates are fixed-point int (lat7/lon7 = degrees × 1e7 — osmio
 lib.rs:66-71). PIP arithmetic runs in float64 on the raw fixed-point values
@@ -16,6 +17,8 @@ produce bit-identical booleans (same expression shape everywhere):
 from __future__ import annotations
 
 import numpy as np
+
+from osmgraft.functions.coords import LON_MAX7, LON_SPAN
 
 
 # --- point-in-polygon ----------------------------------------------------------
@@ -41,6 +44,19 @@ def pnpoly(lat7: np.ndarray, lon7: np.ndarray, edges: np.ndarray) -> np.ndarray:
         xcross = (x2 - x1) * (y - y1) / (y2 - y1) + x1
         crosses = straddles & (x < xcross)
     return (crosses.sum(axis=1) % 2).astype(bool)
+
+
+def pnpoly_pairs(lat7: np.ndarray, lon7: np.ndarray, poly: np.ndarray, edges, test) -> np.ndarray:
+    """Even-odd test of candidate (point, polygon) pairs → bool mask (P,).
+
+    lat7/lon7/poly are per-pair arrays; ``edges[g]`` is polygon g's edge
+    array and ``test`` the kernel (:func:`pnpoly` or :func:`pnpoly_int`),
+    called once per distinct polygon over that polygon's pairs."""
+    inside = np.zeros(len(poly), dtype=bool)
+    for g in np.unique(poly):
+        sel = np.flatnonzero(poly == g)
+        inside[sel] = test(lat7[sel], lon7[sel], edges[g])
+    return inside
 
 
 def sql_pip_predicate(polys: list[dict]) -> str:
@@ -160,10 +176,6 @@ def polygon_bbox(poly: dict) -> tuple[float, float, float, float]:
     return (r[:, 0].min(), r[:, 1].min(), r[:, 0].max(), r[:, 1].max())
 
 
-LON7_SPAN = 3_600_000_000
-LON7_HALF = 1_800_000_000
-
-
 def polygon_bbox_wrapped(poly: dict) -> tuple[int, int, int, int, bool]:
     """(lat_min, lon_west, lat_max, lon_east, wrapped) with antimeridian
     awareness: a ring hop of |Δlon| > 180° between consecutive vertices means
@@ -173,12 +185,12 @@ def polygon_bbox_wrapped(poly: dict) -> tuple[int, int, int, int, bool]:
     r = np.asarray(poly["ring"], dtype=np.int64)
     lat_min, lat_max = int(r[:, 0].min()), int(r[:, 0].max())
     lon = r[:, 1]
-    wrapped = bool((np.abs(np.diff(lon)) > LON7_HALF).any())
+    wrapped = bool((np.abs(np.diff(lon)) > LON_MAX7).any())
     if not wrapped:
         return lat_min, int(lon.min()), lat_max, int(lon.max()), False
-    shifted = np.where(lon < 0, lon + LON7_SPAN, lon)
+    shifted = np.where(lon < 0, lon + LON_SPAN, lon)
     west_s, east_s = int(shifted.min()), int(shifted.max())
-    to_signed = lambda v: v - LON7_SPAN if v >= LON7_HALF else v
+    to_signed = lambda v: v - LON_SPAN if v >= LON_MAX7 else v
     return lat_min, to_signed(west_s), lat_max, to_signed(east_s), True
 
 
@@ -192,16 +204,6 @@ def np_haversine_m(lat7a, lon7a, lat7b, lon7b) -> np.ndarray:
     dlo = np.radians((lon7b - lon7a) / 1e7)
     h = np.sin(dla / 2) ** 2 + np.cos(la) * np.cos(lb) * np.sin(dlo / 2) ** 2
     return 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(h))
-
-
-def sql_dist2(a_lat: str, a_lon: str, b_lat: str, b_lon: str) -> str:
-    """Exact int64 planar metric used for cross-engine-deterministic kNN."""
-    return (
-        f"(CAST(({a_lat}) AS BIGINT) - CAST(({b_lat}) AS BIGINT)) * "
-        f"(CAST(({a_lat}) AS BIGINT) - CAST(({b_lat}) AS BIGINT)) + "
-        f"(CAST(({a_lon}) AS BIGINT) - CAST(({b_lon}) AS BIGINT)) * "
-        f"(CAST(({a_lon}) AS BIGINT) - CAST(({b_lon}) AS BIGINT))"
-    )
 
 
 def haversine_m_col(a_lat, a_lon, b_lat, b_lon):

@@ -30,13 +30,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from osmgraft.functions.cells import LON_SPAN, grid_cell
-from osmgraft.geom import pnpoly, polygon_bbox, polygon_edges
+from osmgraft.functions.cells import grid_cell, lon_cells
+from osmgraft.geom import pnpoly, pnpoly_pairs, polygon_bbox, polygon_edges
 
 
 def polygon_cover_cells(poly: dict, cell_size: int) -> list[int]:
     """Grid cells intersecting the polygon bbox (wrapped lon)."""
-    ncl = LON_SPAN // cell_size
+    ncl = lon_cells(cell_size)
     lat0, lon0, lat1, lon1 = polygon_bbox(poly)
     out = []
     for clat in range(int(lat0 // cell_size), int(lat1 // cell_size) + 1):
@@ -125,13 +125,10 @@ def cell_pip_join(
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            keep = np.zeros(rb.num_rows, dtype=bool)
             lat = rb.column(lat_i).to_numpy(zero_copy_only=False)
             lon = rb.column(lon_i).to_numpy(zero_copy_only=False)
             bid = rb.column(bid_i).to_numpy(zero_copy_only=False)
-            for b in np.unique(bid):
-                sel = np.nonzero(bid == b)[0]
-                keep[sel] = pnpoly(lat[sel], lon[sel], edges[b])
+            keep = pnpoly_pairs(lat, lon, bid, edges, pnpoly)
             yield rb.take(pa.array(np.flatnonzero(keep), type=pa.int64()))
 
     return cand.mapInArrow(refine, schema=out_schema)

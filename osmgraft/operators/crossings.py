@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osmgraft.functions.cells import floordiv
+
 
 def crossing_formula_sql(
     ax: str, ay: str, bx: str, by: str, cx: str, cy: str, dx: str, dy: str
@@ -55,22 +57,21 @@ def segment_crossings(segments: DataFrame, pitch: int) -> DataFrame:
     strictly-crossing unordered pair (seg_a < seg_b).  ``pitch`` must be
     ≥ the per-axis segment-length bound so each bbox covers ≤ 2 cells per
     axis."""
-    g = pitch
-
-    def fdiv(col):  # exact integer floor division (snap.py discipline)
-        return ((col - F.pmod(col, F.lit(g))) / F.lit(g)).cast("long")
-
     cells = (
         segments.select(
             "seg_id", "ax", "ay", "bx", "by",
             F.explode(
-                F.sequence(fdiv(F.least("ax", "bx")), fdiv(F.greatest("ax", "bx")))
+                F.sequence(
+                    floordiv(F.least("ax", "bx"), pitch), floordiv(F.greatest("ax", "bx"), pitch)
+                )
             ).alias("cx"),
         )
         .select(
             "*",
             F.explode(
-                F.sequence(fdiv(F.least("ay", "by")), fdiv(F.greatest("ay", "by")))
+                F.sequence(
+                    floordiv(F.least("ay", "by"), pitch), floordiv(F.greatest("ay", "by"), pitch)
+                )
             ).alias("cy"),
         )
     )

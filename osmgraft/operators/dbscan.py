@@ -13,8 +13,8 @@ reached it first (scan-order dependent). This implementation assigns it to
 the MINIMUM cluster label among its reachable cores, making the output a
 pure function of the input — hash-gateable and partitioning-independent.
 
-Distance is the kNN operator's exact integer metric (knn.py): squared
-planar fixed-point with antimeridian-wrapped longitude, so clusters
+Distance is the kNN operators' exact integer metric (``cells.dist2``):
+squared planar fixed-point with antimeridian-wrapped longitude, so clusters
 straddling ±180° merge correctly.
 
 Relational shape (no driver loop; the component residual is size-gated):
@@ -42,8 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osmgraft.functions.cells import dist2, grid_yx, lon_cells, sql_dist2, sql_grid_yx
 from osmgraft.operators.graph import cc_two_level_banded
-from osmgraft.operators.knn import LON_SPAN, _floordiv
 
 
 def _candidate_pairs(
@@ -52,13 +52,14 @@ def _candidate_pairs(
     """Directed pairs (u, v), u != v, wrap-aware dist2 <= eps^2 — each
     ordered pair appears exactly once (v's probe explosion lands in u's cell
     for exactly one of the 9 offsets)."""
-    ncl = LON_SPAN // eps
+    ncl = lon_cells(eps)
+    cy, cx = grid_yx(F.col(lat_col), F.col(lon_col), eps)
     base = points.select(
         F.col(id_col).alias("pid"),
         F.col(lat_col).cast("long").alias("plat"),
         F.col(lon_col).cast("long").alias("plon"),
-        _floordiv(F.col(lat_col), eps).alias("cy"),
-        F.pmod(_floordiv(F.col(lon_col), eps), F.lit(ncl)).alias("cx"),
+        cy.alias("cy"),
+        cx.alias("cx"),
     )
     probe = base.select(
         F.col("pid").alias("qid"),
@@ -78,9 +79,6 @@ def _candidate_pairs(
             )
         ).alias("cell"),
     )
-    dlat = F.col("plat") - F.col("qlat")
-    adlon = F.abs(F.col("plon") - F.col("qlon"))
-    dlon = F.least(adlon, F.lit(LON_SPAN) - adlon)
     return (
         base.join(
             probe,
@@ -88,7 +86,7 @@ def _candidate_pairs(
         )
         .where(
             (F.col("pid") != F.col("qid"))
-            & (dlat * dlat + dlon * dlon <= F.lit(eps * eps))
+            & (dist2(F.col("plat"), F.col("plon"), F.col("qlat"), F.col("qlon")) <= eps * eps)
         )
         .select(
             F.col("pid").alias("u"),
@@ -118,9 +116,6 @@ def dbscan(
     (uniform wrap); ``min_pts`` counts the point itself (>= 2)."""
     if min_pts < 2:
         raise ValueError("min_pts must be >= 2 (1 would mark every point core)")
-    if LON_SPAN % eps:
-        raise ValueError(f"eps must divide {LON_SPAN} for uniform lon wrap")
-
     pairs = _candidate_pairs(points, eps, id_col, lat_col, lon_col).localCheckpoint(
         eager=False
     )
@@ -174,23 +169,13 @@ def sql_dbscan(pts_cte: str, eps: int, min_pts: int) -> str:
     """DuckDB twin over a (point_id, lat7, lon7) CTE body: identical cell
     candidates + metric text, but components via recursive-CTE transitive
     closure (the dedup_components discipline — two algorithms, one hash)."""
-    ncl = LON_SPAN // eps
-
-    def fdiv(expr: str) -> str:
-        return (
-            f"CAST((CAST({expr} AS BIGINT) - ((CAST({expr} AS BIGINT) % {eps} + {eps}) % {eps})) / {eps} AS BIGINT)"
-        )
-
-    dist2 = (
-        "(a.plat - b.qlat) * (a.plat - b.qlat) + "
-        f"LEAST(ABS(a.plon - b.qlon), {LON_SPAN} - ABS(a.plon - b.qlon)) * "
-        f"LEAST(ABS(a.plon - b.qlon), {LON_SPAN} - ABS(a.plon - b.qlon))"
-    )
+    ncl = lon_cells(eps)
+    cy, cx = sql_grid_yx("lat7", "lon7", eps)
+    d2 = sql_dist2("a.plat", "a.plon", "b.qlat", "b.qlon")
     return f"""WITH RECURSIVE pts AS ({pts_cte}),
 c AS (
   SELECT point_id AS pid, CAST(lat7 AS BIGINT) AS plat, CAST(lon7 AS BIGINT) AS plon,
-         {fdiv('lat7')} AS cy,
-         (({fdiv('lon7')} % {ncl}) + {ncl}) % {ncl} AS cx
+         {cy} AS cy, {cx} AS cx
   FROM pts
 ),
 probe AS (
@@ -201,7 +186,7 @@ probe AS (
 pairs AS (
   SELECT a.pid AS u, b.qid AS v
   FROM c a JOIN probe b ON a.cy = b.py AND a.cx = b.px
-  WHERE a.pid <> b.qid AND {dist2} <= {eps * eps}
+  WHERE a.pid <> b.qid AND {d2} <= {eps * eps}
 ),
 deg AS (SELECT u, count(*) AS cnt FROM pairs GROUP BY u),
 cores AS (SELECT u AS cid FROM deg WHERE cnt + 1 >= {min_pts}),

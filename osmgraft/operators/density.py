@@ -27,6 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osmgraft.functions.cells import dist2, grid_yx, lon_cells, sql_dist2, sql_grid_yx
+from osmgraft.functions.coords import LON_SPAN
+
 
 def density_smooth(
     cells: DataFrame, radius: int, cx: str = "cx", cy: str = "cy",
@@ -363,18 +366,15 @@ def idw_terms(
     map-side-combined aggregation. Output (cy, cx, n_samples, idw_num,
     idw_den) for every OCCUPIED cell (sparse-raster convention).
     """
-    from osmgraft.operators.knn import LON_SPAN, _floordiv
-
-    if LON_SPAN % pitch:
-        raise ValueError(f"pitch must divide {LON_SPAN} for uniform lon wrap")
-    ncl = LON_SPAN // pitch
+    ncl = lon_cells(pitch)
     r2 = (radius_cells * pitch) ** 2
+    cy, cx = grid_yx(F.col("lat7"), F.col("lon7"), pitch)
     base = samples.select(
         F.col("lat7").cast("long").alias("slat"),
         F.col("lon7").cast("long").alias("slon"),
         F.col("v").cast("long").alias("v"),
-        _floordiv(F.col("lat7"), pitch).alias("cy"),
-        F.pmod(_floordiv(F.col("lon7"), pitch), F.lit(ncl)).alias("cx"),
+        cy.alias("cy"),
+        cx.alias("cx"),
     )
     occupied = base.select("cy", "cx").distinct()
     offs = range(-radius_cells, radius_cells + 1)
@@ -402,10 +402,7 @@ def idw_terms(
     # live in the SAME frame and the wrap-min metric is exact.
     clat = F.col("cy") * F.lit(pitch) + F.lit(pitch // 2)
     clon_u = F.col("cx") * F.lit(pitch) + F.lit(pitch // 2)  # in [0, LON_SPAN)
-    dlat = F.col("slat") - clat
-    adlon = F.abs(F.pmod(F.col("slon"), F.lit(LON_SPAN)) - clon_u)
-    dlon = F.least(adlon, F.lit(LON_SPAN) - adlon)
-    d2 = dlat * dlat + dlon * dlon
+    d2 = dist2(F.col("slat"), F.pmod(F.col("slon"), F.lit(LON_SPAN)), clat, clon_u)
     w = F.expr(f"{IDW_K} div greatest(d2v, 1L)")
     return (
         probes.join(occupied, ["cy", "cx"])
@@ -424,21 +421,20 @@ def idw_terms(
 def sql_idw_terms(samples_cte: str, pitch: int, radius_cells: int = 2) -> str:
     """DuckDB twin over a (point_id, lat7, lon7, v) CTE body — identical
     weight/metric text, direct 2-D offset cross join."""
-    from osmgraft.operators.knn import LON_SPAN
-
-    ncl = LON_SPAN // pitch
+    ncl = lon_cells(pitch)
     r2 = (radius_cells * pitch) ** 2
-
-    def fdiv(expr: str) -> str:
-        return (
-            f"CAST((CAST({expr} AS BIGINT) - ((CAST({expr} AS BIGINT) % {pitch} + {pitch}) % {pitch})) / {pitch} AS BIGINT)"
-        )
-
+    cy, cx = sql_grid_yx("lat7", "lon7", pitch)
+    # the sample in the wrapped-unsigned lon frame of the cell centers (idw_terms)
+    d2 = sql_dist2(
+        "p.slat",
+        f"((p.slon % {LON_SPAN}) + {LON_SPAN}) % {LON_SPAN}",
+        f"(p.cy * {pitch} + {pitch // 2})",
+        f"(p.cx * {pitch} + {pitch // 2})",
+    )
     return f"""WITH s AS (
   SELECT CAST(lat7 AS BIGINT) AS slat, CAST(lon7 AS BIGINT) AS slon,
          CAST(v AS BIGINT) AS v,
-         {fdiv('lat7')} AS cy,
-         (({fdiv('lon7')} % {ncl}) + {ncl}) % {ncl} AS cx
+         {cy} AS cy, {cx} AS cx
   FROM ({samples_cte})
 ),
 occupied AS (SELECT DISTINCT cy, cx FROM s),
@@ -450,11 +446,7 @@ probes AS (
 ),
 terms AS (
   SELECT p.cy, p.cx, p.v,
-         (p.slat - (p.cy * {pitch} + {pitch // 2})) * (p.slat - (p.cy * {pitch} + {pitch // 2}))
-         + LEAST(ABS(((p.slon % {LON_SPAN}) + {LON_SPAN}) % {LON_SPAN} - (p.cx * {pitch} + {pitch // 2})),
-                 {LON_SPAN} - ABS(((p.slon % {LON_SPAN}) + {LON_SPAN}) % {LON_SPAN} - (p.cx * {pitch} + {pitch // 2})))
-           * LEAST(ABS(((p.slon % {LON_SPAN}) + {LON_SPAN}) % {LON_SPAN} - (p.cx * {pitch} + {pitch // 2})),
-                   {LON_SPAN} - ABS(((p.slon % {LON_SPAN}) + {LON_SPAN}) % {LON_SPAN} - (p.cx * {pitch} + {pitch // 2}))) AS d2v
+         {d2} AS d2v
   FROM probes p JOIN occupied o ON o.cy = p.cy AND o.cx = p.cx
 )
 SELECT cy, cx, count(*) AS n_samples,

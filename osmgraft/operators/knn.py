@@ -10,8 +10,8 @@ ranked per query by the exact fixed-point planar metric
 with (dist2, neighbor_id) ordering. Δlon is WRAP-AWARE:
 ``dlon_w = min(|Δlon7|, 3.6e9 − |Δlon7|) ≤ 1.8e9`` — longitude cells wrap
 modulo the 360° span (cell_size must divide 3_600_000_000), so antimeridian
-neighbors are found, and every square fits int64 for all valid coordinates
-(≤ 2·(1.8e9)² = 6.5e18 < 2^63).
+neighbors are found. The grid (``grid_yx``) and the metric (``dist2``,
+``py_dist2``) are the shared ones of :mod:`osmgraft.functions.cells`.
 
 :func:`knn_join` runs ring ROUNDS. A round explodes every still-active query
 into its full wrapped disk of (2r+1)² cells, joins it to the point cells
@@ -20,8 +20,8 @@ so the points stream through with no shuffle) and keeps only candidates with
 dist2 ≤ (r·G)². Every point within that bound lies inside the disk, so the
 kept set is exactly the ball of radius r·G: a query whose ball holds ≥ k
 points (its rank-k row exists) has its exact answer and is resolved. The
-rest run again with r quadrupled — r_next = min(4·r, max) — so ≤
-log₄(max_radius_cells) rounds; queries that out-run ``max_radius_cells``, or
+rest run again with r quadrupled — r_next = min(4·r, 64) — so ≤ log₄(64) + 1
+rounds; queries still unresolved at 64 cells (``_MAX_RADIUS_CELLS``), or
 any query when |points| ≤ k, fall back to one brute-force broadcast pass.
 A density-derived starting radius makes the common case a single round.
 
@@ -43,55 +43,28 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osmgraft.functions.cells import dist2, grid_yx, lon_cells
+# re-exported: callers import the span and the Python metric from here
+from osmgraft.functions.cells import py_dist2  # noqa: F401
+from osmgraft.functions.coords import LON_SPAN  # noqa: F401
+
 log = logging.getLogger(__name__)
 
 DEFAULT_CELL = 50_000_000  # 5° in fixed-point units
-LON_SPAN = 3_600_000_000
+# a query still unresolved at this ring radius (in cells) goes to brute force
+_MAX_RADIUS_CELLS = 64
 # UnsafeRow size of one (query_id, qlat7, qlon7, clat, clon) disk row:
 # null bitset word + five 8-byte slots — sizes the broadcast-disk decision
 _DISK_ROW_BYTES = 48
 
 
-def _dist2(qlat, qlon, plat, plon):
-    dlat = qlat.cast("long") - plat.cast("long")
-    dlon_abs = F.abs(qlon.cast("long") - plon.cast("long"))
-    dlon = F.least(dlon_abs, F.lit(LON_SPAN) - dlon_abs)
-    return dlat * dlat + dlon * dlon
-
-
-def py_dist2(qlat: int, qlon: int, plat: int, plon: int) -> int:
-    """Reference implementation of the wrap-aware exact metric."""
-    dlat = qlat - plat
-    dlon = abs(qlon - plon)
-    dlon = min(dlon, LON_SPAN - dlon)
-    return dlat * dlat + dlon * dlon
-
-
-def _floordiv(col, g):  # exact integer floor division (matches Python //)
-    return ((col.cast("long") - F.pmod(col.cast("long"), F.lit(g))) / F.lit(g)).cast("long")
-
-
-def _lon_cells(cell_size: int) -> int:
-    if LON_SPAN % cell_size != 0:
-        raise ValueError(f"cell_size must divide {LON_SPAN} for wrapped lon cells")
-    return LON_SPAN // cell_size  # lon cell count (wraps modulo this)
-
-
-def _cells(cell_size: int, ncl: int):
-    """(clat, clon) grid-cell columns of (lat7, lon7); lon cells wrap."""
-    return (
-        _floordiv(F.col("lat7"), cell_size),
-        F.pmod(_floordiv(F.col("lon7"), cell_size), F.lit(ncl)),
-    )
-
-
-def _point_cells(points: DataFrame, cell_size: int, ncl: int) -> DataFrame:
-    clat, clon = _cells(cell_size, ncl)
+def _point_cells(points: DataFrame, cell_size: int) -> DataFrame:
+    clat, clon = grid_yx(F.col("lat7"), F.col("lon7"), cell_size)
     return points.select("point_id", "lat7", "lon7", clat.alias("clat"), clon.alias("clon"))
 
 
-def _query_cells(queries: DataFrame, cell_size: int, ncl: int) -> DataFrame:
-    qclat, qclon = _cells(cell_size, ncl)
+def _query_cells(queries: DataFrame, cell_size: int) -> DataFrame:
+    qclat, qclon = grid_yx(F.col("lat7"), F.col("lon7"), cell_size)
     return queries.select(
         "query_id",
         F.col("lat7").alias("qlat7"),
@@ -128,7 +101,7 @@ def _dist2_rows(pairs: DataFrame) -> DataFrame:
     return pairs.select(
         "query_id",
         F.col("point_id").alias("neighbor_id"),
-        _dist2(F.col("qlat7"), F.col("qlon7"), F.col("lat7"), F.col("lon7")).alias("dist2"),
+        dist2(F.col("qlat7"), F.col("qlon7"), F.col("lat7"), F.col("lon7")).alias("dist2"),
     )
 
 
@@ -143,7 +116,6 @@ def knn_join(
     queries: DataFrame,
     k: int,
     cell_size: int = DEFAULT_CELL,
-    max_radius_cells: int = 64,
     ensure_parallelism: bool = False,
 ) -> DataFrame:
     """points: (point_id, lat7, lon7); queries: (query_id, lat7, lon7).
@@ -165,9 +137,9 @@ def knn_join(
     from osmgraft.operators.util import maybe_parallelize
 
     spark = points.sparkSession
-    ncl = _lon_cells(cell_size)
-    pts = _point_cells(maybe_parallelize(points, ensure_parallelism), cell_size, ncl)
-    active = _query_cells(queries, cell_size, ncl)
+    ncl = lon_cells(cell_size)
+    pts = _point_cells(maybe_parallelize(points, ensure_parallelism), cell_size)
+    active = _query_cells(queries, cell_size)
     out_schema = "query_id long, neighbor_id long, dist2 long, rank int"
 
     # density-derived starting radius: one stats job picks r0 so the first
@@ -199,10 +171,10 @@ def knn_join(
 
     done: list[DataFrame] = []  # resolved (query_id, neighbor_id, dist2, rank)
     cached = False
-    r = max(1, min(r0, max_radius_cells))
+    r = max(1, min(r0, _MAX_RADIUS_CELLS))
     try:
         # |points| ≤ k: every answer is all the points — straight to brute force
-        while stats.n > k and n_active > 0 and r <= max_radius_cells:
+        while stats.n > k and n_active > 0 and r <= _MAX_RADIUS_CELLS:
             disk = _disk(active, r, ncl)
             broadcast = 0 <= n_active * (2 * r + 1) ** 2 * _DISK_ROW_BYTES <= threshold
             # clamp: (r·G)² can exceed int64 for large radii, but every real
@@ -229,8 +201,8 @@ def knn_join(
             active = active.join(F.broadcast(resolved), "query_id", "left_anti").localCheckpoint(
                 eager=False
             )
-            r = min(r * 4, max_radius_cells) if r < max_radius_cells else r + 1
-            if r <= max_radius_cells and not cached:
+            r = min(r * 4, _MAX_RADIUS_CELLS) if r < _MAX_RADIUS_CELLS else r + 1
+            if r <= _MAX_RADIUS_CELLS and not cached:
                 pts, cached = pts.persist(), True  # a second round rescans the points
 
         if n_active > 0:  # stragglers (k ≥ |points| or empty regions)
@@ -275,9 +247,8 @@ def knn_within_radius(
     """
     from osmgraft.operators.util import maybe_parallelize
 
-    ncl = _lon_cells(cell_size)
-    pts = _point_cells(maybe_parallelize(points, ensure_parallelism), cell_size, ncl)
-    disk = _disk(_query_cells(queries, cell_size, ncl), radius_cells, ncl)
+    pts = _point_cells(maybe_parallelize(points, ensure_parallelism), cell_size)
+    disk = _disk(_query_cells(queries, cell_size), radius_cells, lon_cells(cell_size))
     return _topk(_dist2_rows(disk.join(pts, ["clat", "clon"])), k)
 
 

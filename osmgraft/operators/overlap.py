@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osmgraft.functions.cells import floordiv
+
 
 def sat_formula_sql(
     dx: str, dy: str, pa: str, qa: str, pb: str, qb: str
@@ -62,9 +64,6 @@ def rhombus_overlap_pairs(polys: DataFrame, *, rmax: int) -> DataFrame:
     int64 safety; coordinates must fit |c| + rmax < 2^21)."""
     g = 2 * rmax
 
-    def fdiv(col):  # exact integer floor division by g
-        return ((col - F.pmod(col, F.lit(g))) / F.lit(g)).cast("long")
-
     cells = polys.select(
         "poly_id",
         "cx",
@@ -72,12 +71,12 @@ def rhombus_overlap_pairs(polys: DataFrame, *, rmax: int) -> DataFrame:
         "p",
         "q",
         F.explode(
-            F.sequence(fdiv(F.col("cx") - F.col("p")), fdiv(F.col("cx") + F.col("p")))
+            F.sequence(floordiv(F.col("cx") - F.col("p"), g), floordiv(F.col("cx") + F.col("p"), g))
         ).alias("gx"),
     ).select(
         "*",
         F.explode(
-            F.sequence(fdiv(F.col("cy") - F.col("q")), fdiv(F.col("cy") + F.col("q")))
+            F.sequence(floordiv(F.col("cy") - F.col("q"), g), floordiv(F.col("cy") + F.col("q"), g))
         ).alias("gy"),
     )
     a = cells.select(

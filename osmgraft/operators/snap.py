@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from osmgraft.functions.cells import floordiv
+
 Q_BITS = 14  # projection-grid resolution: t in {0, 1/Q, ..., 1}, Q = 2^14
 
 
@@ -114,9 +116,6 @@ def snap_points_to_segments(
     q = 1 << Q_BITS
     g = radius  # grid pitch = radius: point cell + expanded seg bbox cover
 
-    def fdiv(col):  # exact integer floor division by g (no IEEE in the key)
-        return ((col - F.pmod(col, F.lit(g))) / F.lit(g)).cast("long")
-
     seg_cells = segments.select(
         "seg_id",
         "ax",
@@ -125,16 +124,16 @@ def snap_points_to_segments(
         "by",
         F.explode(
             F.sequence(
-                fdiv(F.least("ax", "bx") - F.lit(radius)),
-                fdiv(F.greatest("ax", "bx") + F.lit(radius)),
+                floordiv(F.least("ax", "bx") - F.lit(radius), g),
+                floordiv(F.greatest("ax", "bx") + F.lit(radius), g),
             )
         ).alias("cx"),
     ).select(
         "*",
         F.explode(
             F.sequence(
-                fdiv(F.least("ay", "by") - F.lit(radius)),
-                fdiv(F.greatest("ay", "by") + F.lit(radius)),
+                floordiv(F.least("ay", "by") - F.lit(radius), g),
+                floordiv(F.greatest("ay", "by") + F.lit(radius), g),
             )
         ).alias("cy"),
     )
@@ -142,8 +141,8 @@ def snap_points_to_segments(
         "point_id",
         "x",
         "y",
-        fdiv(F.col("x")).alias("cx"),
-        fdiv(F.col("y")).alias("cy"),
+        floordiv(F.col("x"), g).alias("cx"),
+        floordiv(F.col("y"), g).alias("cy"),
     )
     cand = pt_cells.join(seg_cells, ["cx", "cy"]).filter(
         (F.abs(F.col("x") - F.col("ax")) <= F.lit(guard))

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osmgraft.functions.cells import floordiv, sql_floordiv
+
 
 def trip_segments(track: DataFrame, jump: int) -> DataFrame:
     """(ent, seq, x, y) → one row per trip: (ent, trip, n_pts, seq_start,
@@ -94,14 +96,11 @@ def od_matrix(track: DataFrame, jump: int, pitch: int) -> DataFrame:
         "ent", "seq", "x", "y", F.sum(new_trip).over(run).alias("trip")
     )
 
-    def cell(c):
-        return ((c - F.pmod(c, F.lit(pitch))) / F.lit(pitch)).cast("long")
-
     trips = g.groupBy("ent", "trip").agg(
-        cell(F.min_by("x", "seq")).alias("o_cx"),
-        cell(F.min_by("y", "seq")).alias("o_cy"),
-        cell(F.max_by("x", "seq")).alias("d_cx"),
-        cell(F.max_by("y", "seq")).alias("d_cy"),
+        floordiv(F.min_by("x", "seq"), pitch).alias("o_cx"),
+        floordiv(F.min_by("y", "seq"), pitch).alias("o_cy"),
+        floordiv(F.max_by("x", "seq"), pitch).alias("d_cx"),
+        floordiv(F.max_by("y", "seq"), pitch).alias("d_cy"),
     )
     return trips.groupBy("o_cx", "o_cy", "d_cx", "d_cy").agg(
         F.count(F.lit(1)).alias("flows")
@@ -110,12 +109,6 @@ def od_matrix(track: DataFrame, jump: int, pitch: int) -> DataFrame:
 
 def sql_od_matrix(track_cte: str, jump: int, pitch: int) -> str:
     """DuckDB twin (arg_min/arg_max endpoints, identical floor-div text)."""
-
-    def cell(e: str) -> str:
-        return (
-            f"CAST((({e}) - ((({e}) % {pitch} + {pitch}) % {pitch})) / {pitch} AS BIGINT)"
-        )
-
     return f"""WITH track AS ({track_cte}),
 f AS (
   SELECT ent, seq, x, y,
@@ -131,8 +124,10 @@ g AS (
   FROM f),
 trips AS (
   SELECT ent, trip,
-         {cell('arg_min(x, seq)')} AS o_cx, {cell('arg_min(y, seq)')} AS o_cy,
-         {cell('arg_max(x, seq)')} AS d_cx, {cell('arg_max(y, seq)')} AS d_cy
+         {sql_floordiv('arg_min(x, seq)', pitch)} AS o_cx,
+         {sql_floordiv('arg_min(y, seq)', pitch)} AS o_cy,
+         {sql_floordiv('arg_max(x, seq)', pitch)} AS d_cx,
+         {sql_floordiv('arg_max(y, seq)', pitch)} AS d_cy
   FROM g GROUP BY ent, trip)
 SELECT o_cx, o_cy, d_cx, d_cy, count(*) AS flows
 FROM trips GROUP BY o_cx, o_cy, d_cx, d_cy"""

@@ -347,8 +347,15 @@ def pip_celljoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- cell indexing (S2 / H3-style / integer grid) ----------------------------------
-from osmgraft.functions.cells import sql_grid_cell  # noqa: E402
+# --- cell indexing (S2 / H3 / integer grid) ----------------------------------------
+from osmgraft.functions.cells import (  # noqa: E402
+    floordiv,
+    lon_cells,
+    sql_dist2,
+    sql_floordiv,
+    sql_grid_cell,
+    sql_grid_yx,
+)
 
 
 @register(
@@ -1089,7 +1096,7 @@ def _h3_oracle(res: int) -> str:
 @register("cell_counts_h3_r7", _h3_oracle(7))  # hash-gated since round 3
 def cell_counts_h3_r7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uber-H3 res-7 cell counts (functions/h3real.py — ids bit-identical to
-    h3.latlng_to_cell; the r2 h3ish divergence is closed). The DuckDB twin
+    h3.latlng_to_cell). The DuckDB twin
     (h3real.sql_h3_cell) re-implements the full encoder in SQL — gnomonic
     face projection, aperture-7 digit chain, base-cell/rotation lookup,
     pentagon fixups — converting this query from rows-only to hash-gated;
@@ -1183,11 +1190,8 @@ def h3_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- kNN via cell-ring expansion (north rule; exact planar fixed-point metric) -----
 _QLAT = "(CAST(n_nationkey AS BIGINT) * 97234555 + 11) % 1200000000 - 600000000"
 _QLON = "(CAST(n_nationkey AS BIGINT) * 211234479 + 7) % 3580000000 - 1790000000"
-# wrap-aware exact metric (see osmgraft.operators.knn.py_dist2)
-_DLAT = "(CAST(q.qlat7 AS BIGINT) - CAST(p.lat7 AS BIGINT))"
-_DLONA = "abs(CAST(q.qlon7 AS BIGINT) - CAST(p.lon7 AS BIGINT))"
-_DLON = f"least({_DLONA}, 3600000000 - {_DLONA})"
-_D2 = f"({_DLAT} * {_DLAT} + {_DLON} * {_DLON})"
+# the wrap-aware exact metric of osmgraft.functions.cells.dist2
+_D2 = sql_dist2("q.qlat7", "q.qlon7", "p.lat7", "p.lon7")
 
 
 def _knn_queries_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4381,11 +4385,12 @@ def way_nodes_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _G = 50_000_000
-_NCL = 3_600_000_000 // _G
+_NCL = lon_cells(_G)
 
 
-def _sql_floordiv(expr: str, g: int) -> str:
-    return f"CAST((CAST({expr} AS BIGINT) - ((CAST({expr} AS BIGINT) % {g} + {g}) % {g})) / {g} AS BIGINT)"
+def _sql_cell_cols(lat: str, lon: str) -> str:
+    clat, clon = sql_grid_yx(lat, lon, _G)
+    return f"{clat} AS clat, {clon} AS clon"
 
 
 @register(
@@ -4425,10 +4430,8 @@ def knn_h3_rings_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
 q AS (SELECT CAST(n_nationkey AS BIGINT) AS query_id,
              CAST({_QLAT} AS INTEGER) AS qlat7, CAST({_QLON} AS INTEGER) AS qlon7
       FROM nation),
-pc AS (SELECT point_id, lat7, lon7, {_sql_floordiv('lat7', _G)} AS clat,
-              ({_sql_floordiv('lon7', _G)} % {_NCL} + {_NCL}) % {_NCL} AS clon FROM pts),
-qc AS (SELECT query_id, qlat7, qlon7, {_sql_floordiv('qlat7', _G)} AS clat,
-              ({_sql_floordiv('qlon7', _G)} % {_NCL} + {_NCL}) % {_NCL} AS clon FROM q)
+pc AS (SELECT point_id, lat7, lon7, {_sql_cell_cols('lat7', 'lon7')} FROM pts),
+qc AS (SELECT query_id, qlat7, qlon7, {_sql_cell_cols('qlat7', 'qlon7')} FROM q)
 SELECT query_id, neighbor_id, dist2, CAST(rank AS INTEGER) AS rank FROM (
   SELECT qc.query_id, p.point_id AS neighbor_id, {_D2} AS dist2,
          row_number() OVER (PARTITION BY qc.query_id ORDER BY {_D2}, p.point_id) AS rank
@@ -10235,10 +10238,7 @@ def bloom_semijoin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_kmeans() -> str:
     from osmgraft.operators.kmeans import sql_kmeans_exact
 
-    def e5(x: str) -> str:
-        return f"(({x}) - ((({x}) % 100 + 100) % 100)) // 100"
-
-    pts = f"SELECT {e5('lon7')} AS x, {e5('lat7')} AS y FROM ({_PTS})"
+    pts = f"SELECT {sql_floordiv('lon7', 100)} AS x, {sql_floordiv('lat7', 100)} AS y FROM ({_PTS})"
     return sql_kmeans_exact(pts)
 
 
@@ -10255,12 +10255,7 @@ def kmeans_exact_k6_r3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.kmeans import kmeans_exact
 
     pts = points_from_orders(spark, sf_dir).select(
-        ((F.col("lon7") - F.pmod(F.col("lon7"), F.lit(100))) / 100)
-        .cast("long")
-        .alias("x"),
-        ((F.col("lat7") - F.pmod(F.col("lat7"), F.lit(100))) / 100)
-        .cast("long")
-        .alias("y"),
+        floordiv(F.col("lon7"), 100).alias("x"), floordiv(F.col("lat7"), 100).alias("y")
     )
     return kmeans_exact(pts)
 
@@ -11641,12 +11636,9 @@ def _sql_ring_validity() -> str:
 
     lat, lon = sql_latlon_of_key("o_orderkey")
 
-    def e5(x: str) -> str:  # floor-div by 100 via nonneg mod (// truncates in DuckDB)
-        return f"(({x}) - ((({x}) % 100 + 100) % 100)) // 100"
-
     verts = f"""SELECT ring_id, seq, x, y FROM (
     SELECT o_custkey AS ring_id, o_orderkey AS seq,
-           {e5(f'({lon})')} AS x, {e5(f'({lat})')} AS y,
+           {sql_floordiv(lon, 100)} AS x, {sql_floordiv(lat, 100)} AS y,
            row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS rn
     FROM orders) WHERE rn <= 12"""
     return "WITH " + sql_ring_self_crossings(verts, "ring_id")
@@ -11659,9 +11651,9 @@ def ring_validity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤12 order points in orderkey order (closed last→first) is checked for
     properly-crossing edge pairs with the exact int64 orientation predicate
     — data-derived rings genuinely self-intersect, so both verdicts appear.
-    Coordinates are E5-quantized (floor-div by 100 via the nonneg-mod
-    spelling both engines share) so every cross term fits int64 at global
-    extent; the verdict is exact for the quantized ring in BOTH engines —
+    Coordinates are E5-quantized (cells.floordiv / sql_floordiv by 100,
+    the exact floor division both engines share) so every cross term fits
+    int64 at global extent; the verdict is exact for the quantized ring in BOTH engines —
     the ST_IsSimple-shaped validity gate a geometry ingest pipeline runs
     before areas/PIP trust the rings.
 
@@ -11677,15 +11669,12 @@ def ring_validity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lat, lon = latlon_of_key(F.col("o_orderkey"))
 
-    def e5(c):
-        return ((c - F.pmod(c, F.lit(100))) / F.lit(100)).cast("long")
-
     verts = (
         orders.select(
             F.col("o_custkey").alias("ring_id"),
             F.col("o_orderkey").alias("seq"),
-            e5(lon).alias("x"),
-            e5(lat).alias("y"),
+            floordiv(lon, 100).alias("x"),
+            floordiv(lat, 100).alias("y"),
             F.row_number()
             .over(W.partitionBy("o_custkey").orderBy("o_orderkey"))
             .alias("rn"),
@@ -11702,12 +11691,9 @@ def _sql_triangulate() -> str:
 
     lat, lon = sql_latlon_of_key("o_orderkey")
 
-    def e5(x: str) -> str:
-        return f"(({x}) - ((({x}) % 100 + 100) % 100)) // 100"
-
     pts = f"""SELECT ring_id, x, y FROM (
     SELECT o_custkey AS ring_id,
-           {e5(f'({lon})')} AS x, {e5(f'({lat})')} AS y,
+           {sql_floordiv(lon, 100)} AS x, {sql_floordiv(lat, 100)} AS y,
            row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS rn
     FROM orders) WHERE rn <= 10"""
     return sql_triangulate_rings(pts)
@@ -11734,14 +11720,11 @@ def triangulate_customer_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
     lat, lon = latlon_of_key(F.col("o_orderkey"))
 
-    def e5(c):
-        return ((c - F.pmod(c, F.lit(100))) / F.lit(100)).cast("long")
-
     pts = (
         orders.select(
             F.col("o_custkey").alias("ring_id"),
-            e5(lon).alias("x"),
-            e5(lat).alias("y"),
+            floordiv(lon, 100).alias("x"),
+            floordiv(lat, 100).alias("y"),
             F.row_number()
             .over(W.partitionBy("o_custkey").orderBy("o_orderkey"))
             .alias("rn"),

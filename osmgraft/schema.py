@@ -22,8 +22,6 @@ from pyspark.sql.types import (
 )
 
 COORD_SCALE = 10_000_000  # 1e7
-LAT_MAX7 = 900_000_000  # ±90° in fixed-point (osmio range check, lib.rs:155-165)
-LON_MAX7 = 1_800_000_000
 WEB_MERCATOR_LAT_MAX7 = 850_511_287  # slippy-tile validity bound (85.0511287°)
 
 # --- north-rule primary table (BASELINE.json input_hint) -----------------

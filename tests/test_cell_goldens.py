@@ -13,12 +13,9 @@ Three tiers of evidence, strongest first:
    for both start orientations because POS_TO_IJ[0][2]=3, POS_TO_IJ[1][2]=3
    and POS_TO_ORIENTATION[2]=0).
 3. REGRESSION VECTORS — absolute (lat7, lon7, level)→id pins computed by this
-   implementation. No independent S2/H3 library or network exists in this
-   sandbox to diff against (probed: s2sphere, h3, duckdb h3/spatial — all
-   absent), so these pin today's behavior against silent refactor drift; the
-   h3ish vectors additionally pin the DOCUMENTED divergence from Uber H3
-   (h3ish.py module docstring: canonical icosahedron, 20 base cells — a named
-   non-goal, not an accident).
+   implementation. No independent S2 library is installed to diff against,
+   so these pin today's behavior against silent refactor drift. (H3 ids are
+   pinned against Uber H3's published vectors in tests/test_h3real.py.)
 """
 
 from __future__ import annotations
@@ -26,7 +23,6 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from osmgraft.functions.h3ish import h3_base, h3_cell, h3_res, h3_to_parent
 from osmgraft.functions.s2 import (
     _POS_TO_IJ,
     _POS_TO_ORIENT,
@@ -143,19 +139,6 @@ _S2_L30 = [
     1152921504606846977, 6914620258518467607, -5764607523034234879,
     5247536845341870827,
 ]
-_H3ISH_R7 = [
-    1184695081718775807, 1184811018639900671, 1184729718146990079,
-    1184871356840280063, 1185003263875874815, 1184559292586393599,
-    1185056727226122239, 1184939573302525951, 1184545321712091135,
-    1184870406176112639,
-]
-_H3ISH_R9 = [
-    1193702280966963199, 1193818220480954367, 1193736917397798911,
-    1193878556081913855, 1194010463127732223, 1193566491824881663,
-    1194063926465921023, 1193946772549664767, 1193552520951365631,
-    1193877605427970047,
-]
-
 
 def test_s2_regression_vectors():
     la = np.array([p[0] for p in _PTS_LL7])
@@ -167,21 +150,3 @@ def test_s2_regression_vectors():
         lsb = 1 << (2 * (30 - 13))
         assert a == _s64(((b & ~(2 * lsb - 1)) | lsb) & ((1 << 64) - 1))
 
-
-def test_h3ish_regression_vectors():
-    la = np.array([p[0] for p in _PTS_LL7])
-    lo = np.array([p[1] for p in _PTS_LL7])
-    r7 = h3_cell(la, lo, 7)
-    r9 = h3_cell(la, lo, 9)
-    assert list(map(int, r7)) == _H3ISH_R7
-    assert list(map(int, r9)) == _H3ISH_R9
-    assert np.all(h3_res(r7) == 7) and np.all(h3_res(r9) == 9)
-    # r9 → r7 parents agree with direct r7 assignment for all but
-    # near-boundary points (aperture-7 children only approximately nest —
-    # true of Uber H3 as well); here exactly one point (NYC) straddles
-    parents = list(map(int, h3_to_parent(r9, 7)))
-    agree = sum(a == b for a, b in zip(parents, _H3ISH_R7))
-    assert agree == 9, (agree, parents)
-    # base cells stay within the canonical 20-face layout (the documented
-    # divergence from Uber H3's 122-base-cell table)
-    assert np.all((h3_base(r7) >= 0) & (h3_base(r7) < 20))

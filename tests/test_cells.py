@@ -1,10 +1,14 @@
-"""S2 + H3-style kernel invariants (no reference lib in env — structural
-invariants + published S2 constants pin correctness; ids are regression-pinned)."""
+"""S2 kernel invariants (no reference lib in env — structural invariants +
+published S2 constants pin correctness; ids are regression-pinned), H3
+(h3real) structural invariants, the geohash kernels, and the exact wrapped
+integer grid across its three engines."""
+
+from itertools import product
 
 import numpy as np
 import pytest
 
-from osmgraft.functions import h3ish as H
+from osmgraft.functions import h3real as H
 from osmgraft.functions import s2 as S
 
 
@@ -57,59 +61,70 @@ def test_s2_face_distribution(pts):
     assert set(np.unique(ids)) == set(range(6))
 
 
-# --- H3-style --------------------------------------------------------------------
+# --- H3 (h3real) -----------------------------------------------------------------
 def test_h3_res_and_base(pts):
-    c = H.h3_cell(*pts, 7)
-    assert (H.h3_res(c) == 7).all()
-    assert set(np.unique(H.h3_base(c))) <= set(range(20))
-    assert np.unique(H.h3_base(c)).size == 20  # all faces hit
+    c = H.latlng_to_cell(*pts, 7)
+    assert (H.get_resolution(c) == 7).all()
+    assert set(np.unique(H.get_base_cell(c))) <= set(range(122))
+    assert np.unique(H.get_base_cell(c)).size == 122  # all base cells hit
 
 
 def test_h3_algebraic_hierarchy(pts):
-    """to_parent is exact digit truncation; parent of the res-9 encode agrees
-    with the res-7 encode for the vast majority of points (boundary points
-    may differ — the same approximate-containment property real H3 has)."""
-    c7 = H.h3_cell(*pts, 7)
-    c9 = H.h3_cell(*pts, 9)
-    agree = (H.h3_to_parent(c9, 7) == c7).mean()
+    """to_parent is exact digit truncation (base cell and the digits down to
+    the parent res kept, finer digits set to the unused 7); parent of the
+    res-9 encode agrees with the res-7 encode for the vast majority of
+    points (boundary points may differ — aperture-7 children overhang)."""
+    c7 = H.latlng_to_cell(*pts, 7)
+    c9 = H.latlng_to_cell(*pts, 9)
+    p7 = H.to_parent(c9, 7)
+    assert (H.get_base_cell(p7) == H.get_base_cell(c9)).all()
+    keep = ~np.int64((0xF << 52) | ((1 << 3 * (15 - 7)) - 1))
+    assert ((p7 & keep) == (c9 & keep)).all()
+    assert ((p7 & np.int64((1 << 3 * (15 - 7)) - 1)) == (1 << 3 * (15 - 7)) - 1).all()
+    agree = (p7 == c7).mean()
     assert agree > 0.88, agree
 
 
 def test_h3_axial_roundtrip(pts):
-    c = H.h3_cell(*pts, 7)
-    face, i, j = H.h3_cell_to_axial(c)
+    c = H.latlng_to_cell(*pts, 7)
+    face, i, j, res = H._to_face_axial(c)
+    assert res == 7
     assert (H._axial_to_cell(face, i, j, 7) == c).all()
 
 
 def test_h3_grid_disk():
-    c = int(H.h3_cell(np.array([407_000_000]), np.array([-740_000_000]), 7)[0])
+    """Away from pentagons disk(k) holds 1 + 3k(k+1) distinct cells, its own
+    center, and disk(k) ⊂ disk(k+1)."""
+    c = H.latlng_to_cell(np.array([407_000_000]), np.array([-740_000_000]), 7)
+    disks = []
     for k in (1, 2, 3):
-        disk = H.h3_grid_disk(c, k)
+        disk = H.grid_disk(c, k)[0]
         assert len(disk) == 1 + 3 * k * (k + 1)
         assert len(set(disk.tolist())) == len(disk)
-        assert c in set(disk.tolist())
-    # disk(k) ⊂ disk(k+1)
-    assert set(H.h3_grid_disk(c, 1).tolist()) <= set(H.h3_grid_disk(c, 2).tolist())
+        assert int(c[0]) in set(disk.tolist())
+        disks.append(set(disk.tolist()))
+    assert disks[0] <= disks[1] <= disks[2]
 
 
 def test_h3_disk_cells_are_neighbors_spatially():
-    """Ring-1 cells' centers must be close: encode center-ish points around
-    the seed and confirm they land inside disk(2)."""
+    """Points within 0.02° (a res-7 cell pitch) of a seed land in the seed's
+    disk(2): disk adjacency is spatial adjacency."""
     lat0, lon0 = 407_000_000, -740_000_000
-    seed = int(H.h3_cell(np.array([lat0]), np.array([lon0]), 7)[0])
-    disk2 = set(H.h3_grid_disk(seed, 2).tolist())
-    # ~res7 hex edge ≈ a few km → offsets of ~0.02° stay within 2 rings
+    seed = H.latlng_to_cell(np.array([lat0]), np.array([lon0]), 7)
+    disk2 = set(H.grid_disk(seed, 2)[0].tolist())
     offs = np.array([-200_000, 0, 200_000])
-    for dla in offs:
-        for dlo in offs:
-            c = int(H.h3_cell(np.array([lat0 + dla]), np.array([lon0 + dlo]), 7)[0])
-            assert c in disk2
+    la, lo = np.meshgrid(lat0 + offs, lon0 + offs)
+    assert set(H.latlng_to_cell(la.ravel(), lo.ravel(), 7).tolist()) <= disk2
 
 
 def test_h3_determinism_and_vectorization(pts):
-    a = H.h3_cell(*pts, 9)
-    b = H.h3_cell(pts[0].copy(), pts[1].copy(), 9)
+    """The encoder is a pure per-row function: repeated calls, copies and
+    one-row batches give the same ids as the whole batch."""
+    a = H.latlng_to_cell(*pts, 9)
+    b = H.latlng_to_cell(pts[0].copy(), pts[1].copy(), 9)
     assert (a == b).all()
+    one = [int(H.latlng_to_cell(pts[0][i:i + 1], pts[1][i:i + 1], 9)[0]) for i in range(200)]
+    assert one == a[:200].tolist()
 
 
 def test_s2_hierarchy_truncation_property():
@@ -240,3 +255,69 @@ def test_geohash_decode_roundtrip_and_neighbors():
     wrapped = gh.geohash_neighbors(np.array([g], dtype=object))[0]
     wl = [gh.geohash_decode(np.array([w], dtype=object))[1][0] for w in wrapped]
     assert any(x < 0 for x in wl), wl  # something on the west side of the seam
+
+
+# --- the exact wrapped integer grid ----------------------------------------------
+# negative non-multiples, exact multiples, the poles and the antimeridian
+GRID_LATS = [-900_000_000, -50_000_001, -50_000_000, -1, 0, 49_999_999, 50_000_000, 900_000_000]
+GRID_LONS = [-1_800_000_000, -1_200_000_001, -50_000_000, -1, 0, 50_000_000, 1_199_999_999,
+             1_800_000_000]
+
+
+def test_exact_grid_three_engines(spark):
+    """Spark (floordiv, grid_cell, dist2), Python (//, py_grid_cell,
+    py_dist2) and DuckDB (sql_floordiv, sql_grid_cell, sql_dist2) agree on int32
+    columns. The divisor 1.2e9 ≥ 2^30 overflows int32 unless the dividend
+    is cast to long first."""
+    import duckdb
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from osmgraft.functions.cells import (
+        dist2,
+        floordiv,
+        grid_cell,
+        py_dist2,
+        py_grid_cell,
+        sql_dist2,
+        sql_floordiv,
+        sql_grid_cell,
+    )
+
+    divs, cells = (7, 50_000_000, 1_200_000_000), (50_000_000, 1_200_000_000)
+    pts = list(product(GRID_LATS, GRID_LONS))
+    rows = [(i, a, o, b, p) for i, ((a, o), (b, p)) in enumerate(zip(pts, pts[::-1]))]
+    want = [
+        tuple(v // g for g in divs for v in (a, o))
+        + tuple(py_grid_cell(a, o, g) for g in cells)
+        + (py_dist2(a, o, b, p),)
+        for _, a, o, b, p in rows
+    ]
+
+    df = spark.createDataFrame(rows, "i int, lat7 int, lon7 int, lat_b int, lon_b int")
+    lat, lon = F.col("lat7"), F.col("lon7")
+    got = df.orderBy("i").select(
+        *[floordiv(c, g) for g in divs for c in (lat, lon)],
+        *[grid_cell(lat, lon, g) for g in cells],
+        dist2(lat, lon, F.col("lat_b"), F.col("lon_b")),
+    ).collect()
+    assert [tuple(r) for r in got] == want
+
+    con = duckdb.connect()
+    con.register("p", pd.DataFrame(rows, columns=["i", "lat7", "lon7", "lat_b", "lon_b"])
+                 .astype("int32"))
+    exprs = [sql_floordiv(c, g) for g in divs for c in ("lat7", "lon7")]
+    exprs += [sql_grid_cell("lat7", "lon7", g) for g in cells]
+    exprs += [sql_dist2("lat7", "lon7", "lat_b", "lon_b")]
+    duck = con.execute(f"SELECT {', '.join(exprs)} FROM p ORDER BY i").fetchall()
+    assert duck == want
+
+
+def test_lon_cells_rejects_non_divisor():
+    from osmgraft.functions.cells import grid_cell, lon_cells
+
+    assert lon_cells(50_000_000) == 72
+    with pytest.raises(ValueError, match="must divide"):
+        lon_cells(7)
+    with pytest.raises(ValueError, match="must divide"):
+        grid_cell(None, None, 7)

@@ -3,7 +3,7 @@ correctness, and the PIP join operator incl. semi/anti."""
 
 import numpy as np
 
-from osmgraft.geom import STRTree, pnpoly, polygon_bbox, polygon_edges
+from osmgraft.geom import STRTree, pnpoly, pnpoly_int, pnpoly_pairs, polygon_bbox, polygon_edges
 from osmgraft.operators.pip import pip_join
 from osmgraft.synth import ADMIN_BOUNDARIES, admin_boundaries_df
 
@@ -91,20 +91,47 @@ def test_boundaries_df_builds(spark):
     assert bad == 0
 
 
-def test_pip_expr_matches_kernel(spark):
-    """pip_join_expr (codegen reference) must be bitwise-identical to the
-    Arrow-kernel pip_join for all three join modes."""
+def test_pip_join_matches_brute_force(spark):
+    """pip_join equals every point tested against every polygon with the
+    plain kernel (pnpoly / pnpoly_int), for all three join modes and both
+    refine kernels."""
     from pyspark.sql import functions as F
 
-    from osmgraft.operators.pip import pip_join, pip_join_expr
-    from osmgraft.synth import ADMIN_BOUNDARIES, points_projection
+    from osmgraft.synth import points_projection
 
     orders = spark.range(1, 30_001, 1, 4).select(F.col("id").alias("o_orderkey"))
     pts = points_projection(orders)
-    for how in ("inner", "left_semi", "left_anti"):
-        a = sorted(map(tuple, pip_join(pts, ADMIN_BOUNDARIES, how=how).collect()))
-        b = sorted(map(tuple, pip_join_expr(pts, ADMIN_BOUNDARIES, how=how).collect()))
-        assert a == b, how
+    rows = [tuple(r) for r in pts.collect()]
+    lat = np.array([r[pts.columns.index("lat7")] for r in rows])
+    lon = np.array([r[pts.columns.index("lon7")] for r in rows])
+    bids = [p["boundary_id"] for p in ADMIN_BOUNDARIES]
+    for refine, test in (("raycast", pnpoly), ("parity_int", pnpoly_int)):
+        inside = np.stack([test(lat, lon, polygon_edges(p)) for p in ADMIN_BOUNDARIES], axis=1)
+        want = {
+            "inner": [rows[i] + (bids[g],) for i, g in zip(*np.nonzero(inside))],
+            "left_semi": [rows[i] for i in np.flatnonzero(inside.any(axis=1))],
+            "left_anti": [rows[i] for i in np.flatnonzero(~inside.any(axis=1))],
+        }
+        assert want["inner"] and want["left_anti"]
+        for how, rows_want in want.items():
+            got = sorted(map(tuple, pip_join(pts, ADMIN_BOUNDARIES, how=how,
+                                             refine=refine).collect()))
+            assert got == sorted(rows_want), (refine, how)
+
+
+def test_pnpoly_pairs_matches_per_pair_kernel():
+    """One kernel call per distinct polygon gives the same mask as testing
+    each (point, polygon) pair alone; no pairs gives an empty mask."""
+    rng = np.random.default_rng(8)
+    edges = {7: polygon_edges(SQUARE), 9: polygon_edges(DONUT), 11: polygon_edges(LSHAPE)}
+    lat = rng.integers(-20, 120, 500)
+    lon = rng.integers(-20, 120, 500)
+    poly = rng.choice([7, 9, 11], 500)
+    for test in (pnpoly, pnpoly_int):
+        got = pnpoly_pairs(lat, lon, poly, edges, test)
+        want = [bool(test(lat[i:i + 1], lon[i:i + 1], edges[poly[i]])[0]) for i in range(500)]
+        assert got.tolist() == want and 0 < got.sum() < 500
+        assert pnpoly_pairs(lat[:0], lon[:0], poly[:0], edges, test).shape == (0,)
 
 
 def test_haversine_m_col_matches_numpy(spark):

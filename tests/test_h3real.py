@@ -107,7 +107,7 @@ def test_parent_child_and_roundtrip():
     # REAL H3 semantics: aperture-7 children do NOT nest geographically
     # (child cells overhang the parent hexagon), so truncated-parent ==
     # direct-encode only away from parent boundaries — ~94% of points.
-    # Exact equality everywhere would be the r2 h3ish kernel, not H3.
+    # Exact equality everywhere would be an exactly nesting lattice, not H3.
     rate = (h.to_parent(c9, 7) == c7).mean()
     assert 0.90 < rate < 0.99, rate
     assert (h.get_resolution(c9) == 9).all()

@@ -270,7 +270,8 @@ def test_knn_h3_ball_matches_bruteforce(spark):
     ball membership over all points (sf0.001)."""
     from pyspark.sql import functions as F
 
-    from osmgraft.operators.knn import _dist2, _topk, knn_h3_ball
+    from osmgraft.functions.cells import dist2
+    from osmgraft.operators.knn import _topk, knn_h3_ball
     from osmgraft.queries import _knn_queries_df
     from osmgraft.synth import points_from_orders
 
@@ -283,7 +284,7 @@ def test_knn_h3_ball_matches_bruteforce(spark):
         pts.crossJoin(q.select("query_id", F.col("lat7").alias("qlat7"),
                                F.col("lon7").alias("qlon7")))
         .select("query_id", F.col("point_id").alias("neighbor_id"),
-                _dist2(F.col("qlat7"), F.col("qlon7"), F.col("lat7"), F.col("lon7")).alias("dist2"))
+                dist2(F.col("qlat7"), F.col("qlon7"), F.col("lat7"), F.col("lon7")).alias("dist2"))
         .where(F.col("dist2") <= r7 * r7)
     )
     want = sorted(map(tuple, _topk(brute_cand, 5)

@@ -8,9 +8,9 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from osmgraft.functions.coords import np_deg_to_fixed, np_fixed_to_deg
-from osmgraft.functions.h3ish import h3_cell, h3_to_parent
-from osmgraft.functions.tiles import LON7_HALF, np_tile_polygon, np_tile_xy
+from osmgraft.functions.coords import LON_MAX7, np_deg_to_fixed, np_fixed_to_deg
+from osmgraft.functions.h3real import latlng_to_cell, to_parent
+from osmgraft.functions.tiles import np_tile_polygon, np_tile_xy
 from osmgraft.geom import pnpoly, polygon_edges
 from osmgraft.operators.knn import LON_SPAN, py_dist2
 
@@ -55,7 +55,7 @@ def test_tile_polygon_contains_point(lat7, lon7, z):
 @given(LON7, st.integers(0, 15))
 @settings(max_examples=200, deadline=None)
 def test_tile_x_within_range_and_monotone(lon7, z):
-    x, _ = np_tile_xy(np.array([lon7, min(lon7 + 10_000_000, LON7_HALF)]),
+    x, _ = np_tile_xy(np.array([lon7, min(lon7 + 10_000_000, LON_MAX7)]),
                       np.array([0, 0]), z)
     assert 0 <= x[0] <= 2**z - 1
     assert x[0] <= x[1]
@@ -78,10 +78,10 @@ def test_h3_parent_truncation_transitive(lat7, lon7):
     """to_parent is digit truncation, so it must be transitive exactly:
     parent(parent(c9, 8), 7) == parent(c9, 7). (Direct coarse re-encode can
     legitimately differ near cell boundaries — aperture-7 hexagons only
-    approximately nest, same as real H3; that agreement RATE is pinned in
-    test_cells.test_h3_algebraic_hierarchy.)"""
-    c9 = h3_cell(np.array([lat7]), np.array([lon7]), 9)
-    assert int(h3_to_parent(h3_to_parent(c9, 8), 7)[0]) == int(h3_to_parent(c9, 7)[0])
+    approximately nest; that agreement RATE is pinned in
+    test_h3real.test_parent_child_and_roundtrip.)"""
+    c9 = latlng_to_cell(np.array([lat7]), np.array([lon7]), 9)
+    assert int(to_parent(to_parent(c9, 8), 7)[0]) == int(to_parent(c9, 7)[0])
 
 
 @given(

@@ -77,7 +77,12 @@ def main():
     import __spark_entry__ as e
     from osmgraft.session import get_spark
 
-    spark = get_spark("verify", cpus=int(os.environ.get("VERIFY_CPUS", "8")))
+    # no console progress bars: their \r lines would glue onto the verdicts
+    spark = get_spark(
+        "verify",
+        cpus=int(os.environ.get("VERIFY_CPUS", "8")),
+        **{"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -115,7 +120,8 @@ def main():
             failures += 1
         print(f"{status} {name}: spark rows={s_n} duck rows={o_n} "
               f"cols {'==' if s_cols == o_cols else f'{s_cols} vs {o_cols}'} "
-              f"hash {'==' if s_h == o_h else 'MISMATCH'}")
+              f"hash {'==' if s_h == o_h else 'MISMATCH'} "
+              f"spark={s_h[:16]} duck={o_h[:16]}")
         if status == "FAIL" and s_n and o_n:
             s_set = {tuple(norm_cell(v) for v in r) for r in srows[:100000]}
             o_set = {tuple(norm_cell(v) for v in r) for r in orows[:100000]}
