@@ -64,18 +64,17 @@ def h3_center_reencode_udf(child_res: int):
 # --- the exact wrapped integer grid (JVM Column, Python and DuckDB SQL forms) -
 def floordiv(col: Column, g: int) -> Column:
     """Exact floor division by ``g`` (Python's ``//``) as a long Column: the
-    dividend minus its non-negative remainder divides exactly. The quotient
-    passes through a double, so the dividend must stay below 2^53 in
-    magnitude (coordinates and cell keys do)."""
+    dividend minus its non-negative remainder is an exact multiple of ``g``,
+    which integer division (Spark's ``div``) divides exactly for every long."""
     c = col.cast("long")
-    return ((c - F.pmod(c, F.lit(g))) / F.lit(g)).cast("long")
+    return F.call_function("div", c - F.pmod(c, F.lit(g)), F.lit(g))
 
 
 def sql_floordiv(expr: str, g: int) -> str:
     """DuckDB twin of :func:`floordiv` (DuckDB's % truncates, so the
-    non-negative remainder is spelled out)."""
+    non-negative remainder is spelled out; ``//`` is integer division)."""
     c = f"CAST({expr} AS BIGINT)"
-    return f"CAST(({c} - (({c} % {g} + {g}) % {g})) / {g} AS BIGINT)"
+    return f"(({c} - (({c} % {g} + {g}) % {g})) // {g})"
 
 
 def lon_cells(cell_size: int) -> int:

@@ -268,7 +268,7 @@ def test_exact_grid_three_engines(spark):
     """Spark (floordiv, grid_cell, dist2), Python (//, py_grid_cell,
     py_dist2) and DuckDB (sql_floordiv, sql_grid_cell, sql_dist2) agree on int32
     columns. The divisor 1.2e9 ≥ 2^30 overflows int32 unless the dividend
-    is cast to long first."""
+    is cast to long first. floordiv stays exact on longs beyond ±2^53."""
     import duckdb
     import pandas as pd
     from pyspark.sql import functions as F
@@ -311,6 +311,18 @@ def test_exact_grid_three_engines(spark):
     exprs += [sql_dist2("lat7", "lon7", "lat_b", "lon_b")]
     duck = con.execute(f"SELECT {', '.join(exprs)} FROM p ORDER BY i").fetchall()
     assert duck == want
+
+    # Past 2^53 a double no longer holds every long: the quotient must come
+    # from integer division, on multiples and non-multiples of the divisor.
+    big = [2**53 + 1, -(2**53 + 1), 2**53 + 2, -(2**53 + 2), 2**62 + 5, -(2**62) - 7]
+    bdivs = (1, 3, 7, 1_200_000_000)
+    bwant = [tuple(v // g for g in bdivs) for v in big]
+    bdf = spark.createDataFrame(list(enumerate(big)), "i int, v long")
+    got = bdf.orderBy("i").select(*[floordiv(F.col("v"), g) for g in bdivs]).collect()
+    assert [tuple(r) for r in got] == bwant
+    con.register("b", pd.DataFrame(list(enumerate(big)), columns=["i", "v"]))
+    bexprs = ", ".join(sql_floordiv("v", g) for g in bdivs)
+    assert con.execute(f"SELECT {bexprs} FROM b ORDER BY i").fetchall() == bwant
 
 
 def test_lon_cells_rejects_non_divisor():

@@ -253,3 +253,89 @@ def test_spherical_excess_golden_and_planar_agreement():
     area_km2 = abs(e_total) * 6371.0088 ** 2
     planar_km2 = (math.pi / 180 * 6371.0088) ** 2  # 1 deg x 1 deg at equator
     assert abs(area_km2 - planar_km2) / planar_km2 < 1e-4
+
+
+# Polygons whose bboxes sit on, inside and across 1° cell lines (1° = 1e7):
+# a triangle with vertices on cell corners, a concave ring with a hole
+# straddling the 0° lines, a sliver touching the antimeridian, where the
+# prefilter's wrapped cells alias lon −180° onto +180°, and a box with
+# fractional vertices a quarter unit inside a cell's negative borders.
+_G = 10_000_000
+PLANTED_POLYS = [
+    {"boundary_id": 1, "ring": [(10 * _G, 20 * _G), (12 * _G, 20 * _G), (11 * _G, 23 * _G),
+                                (10 * _G, 20 * _G)], "holes": []},
+    {"boundary_id": 2,
+     "ring": [(-15_000_000, -25_000_001), (-15_000_000, 4_999_999), (5_000_003, 4_999_999),
+              (5_000_003, -3_000_000), (-2_000_000, -3_000_000), (-2_000_000, -25_000_001),
+              (-15_000_000, -25_000_001)],
+     "holes": [[(-10_000_000, -20_000_000), (-10_000_000, -10_000_000), (-5_000_000, -10_000_000),
+                (-5_000_000, -20_000_000), (-10_000_000, -20_000_000)]]},
+    {"boundary_id": 3, "ring": [(-3 * _G - 1, 1_790_000_001), (-3 * _G - 1, 1_800_000_000),
+                                (-_G + 1, 1_800_000_000), (-_G + 1, 1_790_000_001),
+                                (-3 * _G - 1, 1_790_000_001)], "holes": []},
+    {"boundary_id": 4, "ring": [(-41 * _G + 0.75, -60 * _G + 0.75), (-41 * _G + 0.75, -59 * _G - 0.25),
+                                (-40 * _G - 0.25, -59 * _G - 0.25), (-40 * _G - 0.25, -60 * _G + 0.75),
+                                (-41 * _G + 0.75, -60 * _G + 0.75)], "holes": []},
+]
+
+
+def _planted_points(polys, rng):
+    """Bbox corners and edge midpoints, polygon vertices, the 1° cell corners
+    around each bbox, points one unit either side of each bbox and of each
+    bbox-cell border, their lon −180° aliases, and random points near each
+    bbox."""
+    pts = set()
+    for p in polys:
+        lat0, lon0, lat1, lon1 = (int(v) for v in polygon_bbox(p))
+        lats = {lat0, lat1, (lat0 + lat1) // 2, lat0 - 1, lat1 + 1}
+        lons = {lon0, lon1, (lon0 + lon1) // 2, lon0 - 1, lon1 + 1}
+        c_lat = range(lat0 // _G - 1, lat1 // _G + 3)
+        c_lon = range(lon0 // _G - 1, lon1 // _G + 3)
+        lats |= {c * _G + d for c in c_lat for d in (-1, 0, 1)}
+        lons |= {c * _G + d for c in c_lon for d in (-1, 0, 1)}
+        pts |= {(a, o) for a in lats for o in lons}
+        for ring in [p["ring"]] + p["holes"]:
+            pts |= {(int(a), int(o)) for a, o in ring}
+        h, w = max(lat1 - lat0, _G), max(lon1 - lon0, _G)
+        pts |= set(zip(rng.integers(lat0 - h, lat1 + h, 400).tolist(),
+                       rng.integers(lon0 - w, lon1 + w, 400).tolist()))
+    pts = {(a, o) for a, o in pts if -900_000_000 <= a <= 900_000_000}
+    pts |= {(a, o - 3_600_000_000) for a, o in pts if o >= 1_790_000_000}
+    return sorted((a, o) for a, o in pts if -1_800_000_000 <= o <= 1_800_000_000)
+
+
+def test_pip_join_planted_points_match_brute_force(spark):
+    """pip_join (bbox-cell prefilter + STR-tree + refine) equals every point
+    against every polygon with the plain kernel, for all three join modes and
+    both refine kernels, on points planted where a wrong prefilter would drop
+    a match; also on fractional coordinates half a unit below the planted
+    ones (raycast), and with no polygons. Inner and semi joins carry the
+    prefilter join; anti has none."""
+    from pyspark.sql import functions as F
+
+    pts = _planted_points(PLANTED_POLYS, np.random.default_rng(11))
+    rows = [(i, a, o) for i, (a, o) in enumerate(pts)]
+    df = spark.createDataFrame(rows, "point_id long, lat7 int, lon7 int").repartition(3)
+    half = [(i, a - 0.5, o - 0.5) for i, a, o in rows]
+    dfh = df.select("point_id", *[(F.col(c) - 0.5).alias(c) for c in ("lat7", "lon7")])
+    bids = [p["boundary_id"] for p in PLANTED_POLYS]
+    for refine, test, frame, fr_rows in (("raycast", pnpoly, df, rows),
+                                         ("parity_int", pnpoly_int, df, rows),
+                                         ("raycast", pnpoly, dfh, half)):
+        lat = np.array([r[1] for r in fr_rows])
+        lon = np.array([r[2] for r in fr_rows])
+        inside = np.stack([test(lat, lon, polygon_edges(p)) for p in PLANTED_POLYS], axis=1)
+        assert inside.any(axis=0).all() and not inside.all()
+        want = {
+            "inner": [fr_rows[i] + (bids[g],) for i, g in zip(*np.nonzero(inside))],
+            "left_semi": [fr_rows[i] for i in np.flatnonzero(inside.any(axis=1))],
+            "left_anti": [fr_rows[i] for i in np.flatnonzero(~inside.any(axis=1))],
+        }
+        for how, rows_want in want.items():
+            joined = pip_join(frame, PLANTED_POLYS, how=how, refine=refine)
+            got = sorted(map(tuple, joined.collect()))
+            assert got == sorted(rows_want), (refine, how)
+            plan = joined._jdf.queryExecution().optimizedPlan().toString()
+            assert ("LeftSemi" in plan) == (how != "left_anti"), (how, plan)
+    for how, n in (("inner", 0), ("left_semi", 0), ("left_anti", len(pts))):
+        assert pip_join(df, [], how=how).count() == n, how

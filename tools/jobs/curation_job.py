@@ -88,7 +88,11 @@ def main() -> None:
     ap.add_argument("--seq-len", type=int, default=128)
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName("osmgraft-curation").getOrCreate()
+    from osmgraft.session import WORKER_CONF
+
+    spark = (
+        SparkSession.builder.appName("osmgraft-curation").config(map=WORKER_CONF).getOrCreate()
+    )
     docs = (
         synth_docs(spark, args.rows)
         if args.rows
