@@ -17,11 +17,13 @@ for inner and semi joins only points that can match cross it: a broadcast
 left-semi join in the JVM first keeps the points whose 1° grid cell
 (``cells.grid_cell``) meets some polygon bbox. Every point inside a bbox lies
 in one of the bbox's cells, so the kernel sees every point it could match and
-the result is unchanged; on the benchmark's admin set 64 % of the points (and
-of the bytes sent to Python) are dropped before the boundary. The cell table
-has at most 181 × 360 rows whatever the polygon count. The anti join keeps
-one pass over the input: it needs every point, and splitting it into
-"outside every cell" ∪ "kernel on the rest" would evaluate the input twice.
+the result is unchanged. On the benchmark's admin set 64 % of the points (and
+of the bytes sent to Python) are dropped before the boundary; where every
+point lies inside some bbox the extra join is pure cost (about 0.2 s per 4M
+points on 4 cores). The cell table has at most 181 × 360 rows whatever the
+polygon count. The anti join keeps one pass over the input: it needs every
+point, and splitting it into "outside every cell" ∪ "kernel on the rest"
+would evaluate the input twice.
 The other fixed cost of the boundary, per-task start-up in the Python worker,
 is cut by the worker daemon (``osmgraft._pydaemon``, set by ``get_spark``).
 """
@@ -35,7 +37,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType, LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from osmgraft.functions.cells import grid_cell
 from osmgraft.geom import STRTree, pnpoly, pnpoly_int, pnpoly_pairs, polygon_bbox, polygon_edges
@@ -97,13 +99,10 @@ def pip_join(
         # From Arrow, not a Python list: a list becomes a Python-mapped RDD,
         # which would run a Python stage before the broadcast on every call.
         cell_df = spark.createDataFrame(pa.table({"_pip_cell": pa.array(cells, pa.int64())}))
-        # A fractional coordinate is floored, not cast (which truncates), so
-        # that a negative one lands in the cell below, as the bbox cells do.
-        lat, lon = (
-            F.col(c) if isinstance(in_schema[c].dataType, IntegralType) else F.floor(c)
-            for c in (lat_col, lon_col)
-        )
-        cell = grid_cell(lat, lon, PREFILTER_CELL)
+        # Floored, not cast (which truncates), so that a fractional negative
+        # coordinate lands in the cell below, as the bbox cells do; an
+        # integral one comes through floor unchanged.
+        cell = grid_cell(F.floor(lat_col), F.floor(lon_col), PREFILTER_CELL)
         points = points.join(F.broadcast(cell_df), cell == cell_df["_pip_cell"], "left_semi")
     log.debug(
         "pip_join: how=%s refine=%s prefilter=%s grid=%d cells=%d",

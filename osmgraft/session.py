@@ -4,8 +4,8 @@ Tuned for a multi-executor cluster (AQE on, skew-join on, modest shuffle
 partitions for local testing — override ``spark.sql.shuffle.partitions``
 upward on a real cluster). Arrow is enabled for all pandas-UDF kernels.
 
-``WORKER_CONF`` holds the two Python-worker settings that every session of the
-engine needs, including sessions that spark-submit jobs build themselves:
+``WORKER_CONF`` holds the two Python-worker settings that ``get_spark`` adds to
+its ``local[n]`` sessions:
 
 * ``spark.python.daemon.module`` runs the workers under ``osmgraft._pydaemon``,
   which stops each task from re-reading the directories of Spark's own zip
@@ -14,8 +14,14 @@ engine needs, including sessions that spark-submit jobs build themselves:
   zipimporter invalidates lazily the daemon is plain ``pyspark.daemon``.
 * ``spark.executorEnv.PYTHONPATH`` puts the package root on the workers' path,
   so the daemon and the kernels import ``osmgraft`` whatever the driver's cwd
-  or ``PYTHONPATH``. On a multi-host cluster the package must sit at the same
-  path on the executors (or be installed there).
+  or ``PYTHONPATH``.
+
+Both rely on the workers sharing the driver's filesystem. The spark-submit
+jobs (``tools/jobs/``) leave them out: the daemon module is imported when the
+daemon starts, before a task puts the ``--py-files`` archives on its path, and
+the package root is a driver-local path, so on executors without a shared
+filesystem every Python task would fail. Those jobs keep ``pyspark.daemon``
+and get the package from ``--py-files`` alone.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Python-worker settings of every session (osmgraft.session.WORKER_CONF):
+"""Python-worker settings of get_spark sessions (osmgraft.session.WORKER_CONF):
 the worker daemon keeps the directory caches of Spark's own archives, and
 the workers import the engine whatever the driver's cwd."""
 

@@ -88,11 +88,7 @@ def main() -> None:
     ap.add_argument("--seq-len", type=int, default=128)
     args = ap.parse_args()
 
-    from osmgraft.session import WORKER_CONF
-
-    spark = (
-        SparkSession.builder.appName("osmgraft-curation").config(map=WORKER_CONF).getOrCreate()
-    )
+    spark = SparkSession.builder.appName("osmgraft-curation").getOrCreate()
     docs = (
         synth_docs(spark, args.rows)
         if args.rows

@@ -4,11 +4,10 @@
         tools/jobs/flagship_job.py --input <orders_path> --output <out_path>
 
 On a cluster the master/executor topology comes from spark-submit; this
-script adds only the app name and the engine's Python-worker settings
-(``osmgraft.session.WORKER_CONF``). With --rows N the input is the
-deterministic synthetic generator instead of a table path (sandbox / smoke
-mode). Output is written through the Checkpointer, so a killed job resumes
-idempotently from its lineage manifests.
+script builds no local session config beyond the app name. With --rows N the
+input is the deterministic synthetic generator instead of a table path
+(sandbox / smoke mode). Output is written through the Checkpointer, so a
+killed job resumes idempotently from its lineage manifests.
 """
 
 from __future__ import annotations
@@ -31,12 +30,9 @@ def main() -> None:
     from osmgraft.checkpoint import Checkpointer
     from osmgraft.functions import tiles
     from osmgraft.operators.pip import pip_join
-    from osmgraft.session import WORKER_CONF
     from osmgraft.synth import ADMIN_BOUNDARIES, points_projection
 
-    spark = (
-        SparkSession.builder.appName("osmgraft-flagship").config(map=WORKER_CONF).getOrCreate()
-    )
+    spark = SparkSession.builder.appName("osmgraft-flagship").getOrCreate()
 
     def transform(orders):
         joined = pip_join(

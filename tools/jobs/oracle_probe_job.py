@@ -26,13 +26,8 @@ def main() -> None:
     args = ap.parse_args()
 
     from osmgraft.queries import REGISTRY
-    from osmgraft.session import WORKER_CONF
 
-    spark = (
-        SparkSession.builder.appName(f"osmgraft-probe-{args.name}")
-        .config(map=WORKER_CONF)
-        .getOrCreate()
-    )
+    spark = SparkSession.builder.appName(f"osmgraft-probe-{args.name}").getOrCreate()
     df = REGISTRY[args.name][0](spark, args.sf_dir)
     df.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()
