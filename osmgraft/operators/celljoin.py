@@ -21,6 +21,7 @@ broadcast PIP join (tests/test_celljoin.py) and to the DuckDB oracle.
 
 from __future__ import annotations
 
+import logging
 import math
 from typing import Iterator
 
@@ -32,6 +33,8 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from osmgraft.functions.cells import grid_cell, lon_cells
 from osmgraft.geom import pnpoly, pnpoly_pairs, polygon_bbox, polygon_edges
+
+log = logging.getLogger(__name__)
 
 
 def polygon_cover_cells(poly: dict, cell_size: int) -> list[int]:
@@ -77,19 +80,31 @@ def cell_pip_join(
         c: max(1, min(max_salts, math.ceil(cnt / salt_target))) for c, cnt in hot.items()
     }
 
-    # 2. polygon side: (boundary_id, cell) × salts
+    # 2. polygon side: (boundary_id, cell) × salts. Tables are built from
+    #    Arrow, not Python lists: a list becomes a Python-mapped RDD, which
+    #    would add a Python-worker stage to every call.
     rows = []
     for p in polys:
         for cell in set(polygon_cover_cells(p, cell_size)):
             for s in range(nsalts.get(cell, 1)):
                 rows.append((p["boundary_id"], cell, s))
-    poly_cells = spark.createDataFrame(rows, "boundary_id long, _cell long, _salt int")
+    bids, cells, salts = zip(*rows) if rows else ((), (), ())
+    poly_cells = spark.createDataFrame(pa.table({
+        "boundary_id": pa.array(bids, pa.int64()),
+        "_cell": pa.array(cells, pa.int64()),
+        "_salt": pa.array(salts, pa.int32()),
+    }))
+    log.debug(
+        "cell_pip_join: hot_cells=%d max_salts=%d poly_cell_rows=%d",
+        len(nsalts), max(nsalts.values(), default=1), len(rows),
+    )
 
     # 3. point side salt
     if nsalts:
-        salt_map = spark.createDataFrame(
-            [(c, n) for c, n in nsalts.items()], "_cell long, _nsalts int"
-        )
+        salt_map = spark.createDataFrame(pa.table({
+            "_cell": pa.array(list(nsalts), pa.int64()),
+            "_nsalts": pa.array(list(nsalts.values()), pa.int32()),
+        }))
         pts = pts.join(F.broadcast(salt_map), "_cell", "left").withColumn(
             "_salt",
             F.pmod(F.xxhash64(F.col("point_id") if "point_id" in points.columns else F.col(lat_col)),

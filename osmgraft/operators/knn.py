@@ -1,17 +1,18 @@
 """kNN join via cell-neighbor ring expansion (north rule; SURVEY.md §2.3).
 
 Both sides stay DISTRIBUTED. Points (the huge side — like osmio's nodestore
-side, nodestore.rs:55-64) get an integer grid cell ``(lat7 // G, lon7 // G)``
-and are cell-joined; queries are a DataFrame throughout. Candidates are
-ranked per query by the exact fixed-point planar metric
+side, nodestore.rs:55-64) get one long grid cell id ``clat·ncl + clon`` with
+``(clat, clon) = (lat7 // G, lon7 // G)`` and are cell-joined on it; queries
+are a DataFrame throughout. Candidates are ranked per query by the exact
+fixed-point planar metric
 
     dist2 = (Δlat7)² + (Δlon7)²            (int64 — bitwise deterministic)
 
 with (dist2, neighbor_id) ordering. Δlon is WRAP-AWARE:
 ``dlon_w = min(|Δlon7|, 3.6e9 − |Δlon7|) ≤ 1.8e9`` — longitude cells wrap
 modulo the 360° span (cell_size must divide 3_600_000_000), so antimeridian
-neighbors are found. The grid (``grid_yx``) and the metric (``dist2``,
-``py_dist2``) are the shared ones of :mod:`osmgraft.functions.cells`.
+neighbors are found. The grid (``grid_yx``, ``grid_cell``) and the metric
+(``dist2``, ``py_dist2``) are the shared ones of :mod:`osmgraft.functions.cells`.
 
 :func:`knn_join` runs ring ROUNDS. A round explodes every still-active query
 into its full wrapped disk of (2r+1)² cells, joins it to the point cells
@@ -19,31 +20,31 @@ into its full wrapped disk of (2r+1)² cells, joins it to the point cells
 so the points stream through with no shuffle) and keeps only candidates with
 dist2 ≤ (r·G)². Every point within that bound lies inside the disk, so the
 kept set is exactly the ball of radius r·G: a query whose ball holds ≥ k
-points (its rank-k row exists) has its exact answer and is resolved. The
-rest run again with r quadrupled — r_next = min(4·r, 64) — so ≤ log₄(64) + 1
-rounds; queries still unresolved at 64 cells (``_MAX_RADIUS_CELLS``), or
-any query when |points| ≤ k, fall back to one brute-force broadcast pass.
-A density-derived starting radius makes the common case a single round.
+points (its rank-k row exists) has its exact answer and is resolved.
 
-The driver sees ONLY a scalar resolved-query count per round (loop control,
-like any Pregel-style iteration) — never candidate rows. Points are cached
-only once a second round is needed. Engine choices (r0, per-round counts,
-broadcast vs shuffle disk, caching, fallback size) are logged at DEBUG on
-this module's logger.
+Each round is ONE Spark action, its eager localCheckpoint, whose observed
+metrics (``Observation``) carry the loop's counts: points, active queries,
+resolved queries. Round 1 runs at r = 1, which on typical densities resolves
+every query. Only a miss pays for a density-stats job, seeding round 2 at
+max(4, r0) cells; later rounds quadruple r up to ``_MAX_RADIUS_CELLS``.
+Queries still unresolved there, or every query when |points| ≤ k, fall back
+to one brute-force broadcast pass. The driver sees ONLY those scalar counts,
+never candidate rows. Points are cached only once a second round is needed.
+Engine choices (counts, broadcast vs shuffle disk and its size estimate, the
+miss-path stats, caching, fallback size) are logged at DEBUG.
 """
 
 from __future__ import annotations
 
 import logging
-from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from osmgraft.functions.cells import dist2, grid_yx, lon_cells
+from osmgraft.functions.cells import dist2, grid_cell, grid_yx, lon_cells
 # re-exported: callers import the span and the Python metric from here
 from osmgraft.functions.cells import py_dist2  # noqa: F401
 from osmgraft.functions.coords import LON_SPAN  # noqa: F401
@@ -53,14 +54,14 @@ log = logging.getLogger(__name__)
 DEFAULT_CELL = 50_000_000  # 5° in fixed-point units
 # a query still unresolved at this ring radius (in cells) goes to brute force
 _MAX_RADIUS_CELLS = 64
-# UnsafeRow size of one (query_id, qlat7, qlon7, clat, clon) disk row:
-# null bitset word + five 8-byte slots — sizes the broadcast-disk decision
-_DISK_ROW_BYTES = 48
+# UnsafeRow size of one (query_id, qlat7, qlon7, cell) disk row: null bitset
+# word + four 8-byte slots — sizes the broadcast-disk decision
+_DISK_ROW_BYTES = 40
 
 
 def _point_cells(points: DataFrame, cell_size: int) -> DataFrame:
-    clat, clon = grid_yx(F.col("lat7"), F.col("lon7"), cell_size)
-    return points.select("point_id", "lat7", "lon7", clat.alias("clat"), clon.alias("clon"))
+    cell = grid_cell(F.col("lat7"), F.col("lon7"), cell_size)
+    return points.select("point_id", "lat7", "lon7", cell.alias("cell"))
 
 
 def _query_cells(queries: DataFrame, cell_size: int) -> DataFrame:
@@ -76,23 +77,20 @@ def _query_cells(queries: DataFrame, cell_size: int) -> DataFrame:
 
 def _disk(q: DataFrame, r: int, ncl: int) -> DataFrame:
     """Explode each (query_id, qlat7, qlon7, qclat, qclon) row into the
-    (2r+1)² wrapped grid cells of its chebyshev disk — JVM-side."""
+    (2r+1)² wrapped grid cells of its chebyshev disk — JVM-side. One long
+    cell id (the ``grid_cell`` key) makes the join build a LongHashedRelation."""
     d = F.sequence(F.lit(-r), F.lit(r))
+    clon = F.pmod(F.col("qclon") + F.col("_dj"), F.lit(ncl))
+    cell = (F.col("qclat") + F.col("_di")) * F.lit(ncl) + clon
     disk = (
         q.withColumn("_di", F.explode(d))
         .withColumn("_dj", F.explode(d))
-        .select(
-            "query_id",
-            "qlat7",
-            "qlon7",
-            (F.col("qclat") + F.col("_di")).alias("clat"),
-            F.pmod(F.col("qclon") + F.col("_dj"), F.lit(ncl)).alias("clon"),
-        )
+        .select("query_id", "qlat7", "qlon7", cell.alias("cell"))
     )
     if 2 * r + 1 > ncl:
         # lon wrap aliases cells only when the disk spans every lon cell;
         # skipping the dedup otherwise saves a whole shuffle
-        disk = disk.dropDuplicates(["query_id", "clat", "clon"])
+        disk = disk.dropDuplicates(["query_id", "cell"])
     return disk
 
 
@@ -111,6 +109,13 @@ def _topk(cand: DataFrame, k: int) -> DataFrame:
     return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
+def _observed(obs: Observation) -> int:
+    """The count an action observed. Spark drops the observed subtree of a
+    join whose other side is empty, leaving no row: that reads as 0."""
+    row = obs._jo.getRow()
+    return row.getLong(0) if row.length() else 0
+
+
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
@@ -122,17 +127,18 @@ def knn_join(
 
     Returns (query_id, neighbor_id, dist2, rank) with exactly min(k, |points|)
     rows per query, rank 1..k ordered by (dist2, neighbor_id). Exact, fully
-    distributed, adaptive radius: one stats job seeds r0, then each ring
-    round ranks the candidates of the full (2r+1)² disk that lie within
-    r·cell_size and resolves every query whose rank-k row exists (module
-    docstring). One blocking count per round; for a one-pass plan with a
-    known density bound use :func:`knn_within_radius`.
+    distributed, adaptive radius: each ring round ranks the candidates of the
+    full (2r+1)² disk that lie within r·cell_size and resolves every query
+    whose rank-k row exists (module docstring). Round 1 runs at r = 1 as ONE
+    Spark action that also observes the counts the loop needs; a density-stats
+    job runs only when it leaves queries unresolved. For a one-pass plan with
+    a known density bound use :func:`knn_within_radius`.
 
     ``queries`` must have DETERMINISTIC lineage (no un-seeded sample()/rand()/
-    unordered limit()): the operator evaluates it more than once (count +
-    round joins) without an upfront snapshot — the standard Spark caveat for
-    reusing a non-deterministic DataFrame. Callers with such inputs should
-    ``localCheckpoint(eager=True)`` the query frame first.
+    unordered limit()): the operator evaluates it more than once (round joins,
+    brute-force fallback) without an upfront snapshot — the standard Spark
+    caveat for reusing a non-deterministic DataFrame. Callers with such inputs
+    should ``localCheckpoint(eager=True)`` the query frame first.
     """
     from osmgraft.operators.util import maybe_parallelize
 
@@ -141,76 +147,70 @@ def knn_join(
     pts = _point_cells(maybe_parallelize(points, ensure_parallelism), cell_size)
     active = _query_cells(queries, cell_size)
     out_schema = "query_id long, neighbor_id long, dist2 long, rank int"
-
-    # density-derived starting radius: one stats job picks r0 so the first
-    # disk is expected to hold ≥4k candidates per query (occupied-cell
-    # density — robust to clustered data). Wrong guesses only cost an extra
-    # escalation round (exactness never depends on the estimate); a right
-    # guess makes the common case a SINGLE round. The stats job and the query
-    # count are independent — run them concurrently (each blocking job costs
-    # ~0.3s of submit overhead in local mode, and this operator's wall is
-    # job-count-bound, not data-bound, at small SF).
-    with ThreadPoolExecutor(2) as ex:
-        stats_f = ex.submit(
-            lambda: pts.agg(
-                F.count(F.lit(1)).alias("n"),
-                # the estimate only seeds r0 — HLL beats an exact distinct's shuffle
-                F.approx_count_distinct(F.col("clat") * ncl + F.col("clon"), rsd=0.1).alias(
-                    "cells"
-                ),
-            ).collect()[0]
-        )
-        n_active_f = ex.submit(active.count)
-        stats, n_active = stats_f.result(), n_active_f.result()
-    if stats.n == 0:
-        return spark.createDataFrame([], out_schema)
-    density = stats.n / max(stats.cells, 1)
-    r0 = int(((4.0 * k / density) ** 0.5 - 1) // 2 + 1)
-    log.debug("knn_join: n=%d cells~%d density=%.1f/cell r0=%d", stats.n, stats.cells, density, r0)
     threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    # round 1 sizes its disk from Catalyst's estimate of the query frame (huge
+    # for sources of unknown size, which so take the shuffle path): the count
+    # is known only after the round's action. Later rounds use that count.
+    q_bytes = active._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
 
     done: list[DataFrame] = []  # resolved (query_id, neighbor_id, dist2, rank)
     cached = False
-    r = max(1, min(r0, _MAX_RADIUS_CELLS))
+    r, n_active = 1, 0
     try:
-        # |points| ≤ k: every answer is all the points — straight to brute force
-        while stats.n > k and n_active > 0 and r <= _MAX_RADIUS_CELLS:
-            disk = _disk(active, r, ncl)
-            broadcast = 0 <= n_active * (2 * r + 1) ** 2 * _DISK_ROW_BYTES <= threshold
+        while r <= _MAX_RADIUS_CELLS:
+            est = q_bytes * (2 * r + 1) ** 2
+            broadcast = 0 <= est <= threshold
+            obs_n, obs_active, obs_resolved = Observation(), Observation(), Observation()
+            disk = _disk(active.observe(obs_active, F.count(F.lit(1))), r, ncl)
             # clamp: (r·G)² can exceed int64 for large radii, but every real
             # dist2 ≤ 2·(1.8e9)² < 2^63, so the clamp is semantically exact
             bound = min((r * cell_size) ** 2, (1 << 63) - 1)
-            cand = _dist2_rows(pts.join(F.broadcast(disk) if broadcast else disk, ["clat", "clon"]))
-            # LAZY localCheckpoint: the resolved count below is the round's
-            # ONE blocking action and materializes it as a side effect, and
-            # the caller's action then reads it instead of re-joining
-            topk = _topk(cand.filter(F.col("dist2") <= bound), k).localCheckpoint(eager=False)
-            resolved = topk.filter(F.col("rank") == k).select("query_id")
-            n_resolved = resolved.count()
-            log.debug(
-                "knn_join: round r=%d active=%d resolved=%d disk=%s pts_cached=%s",
-                r, n_active, n_resolved, "broadcast" if broadcast else "shuffle", cached,
+            cand = _dist2_rows(
+                pts.observe(obs_n, F.count(F.lit(1)))
+                .join(F.broadcast(disk) if broadcast else disk, "cell")
             )
+            # the round's ONE action; the caller's action reads the checkpoint
+            topk = (
+                _topk(cand.filter(F.col("dist2") <= bound), k)
+                .observe(obs_resolved, F.count(F.when(F.col("rank") == k, 1)))
+                .localCheckpoint(eager=True)
+            )
+            n, n_active, n_resolved = map(_observed, (obs_n, obs_active, obs_resolved))
+            log.debug(
+                "knn_join: round r=%d n=%d active=%d resolved=%d disk=%s est=%d pts_cached=%s",
+                r, n, n_active, n_resolved, "broadcast" if broadcast else "shuffle", est, cached,
+            )
+            if not (n and n_active):  # an empty side: the round's empty result
+                return spark.createDataFrame([], out_schema)
+            if n <= k:  # every answer is all the points: straight to brute force
+                break
             if n_resolved == n_active:
                 done.append(topk)  # no semi-join: every ranked row is resolved
                 n_active = 0
                 break
+            resolved = topk.filter(F.col("rank") == k).select("query_id")
             done.append(topk.join(F.broadcast(resolved), "query_id", "left_semi"))
             n_active -= n_resolved
-            # lazy for the same reason: the next round's count materializes it
-            active = active.join(F.broadcast(resolved), "query_id", "left_anti").localCheckpoint(
-                eager=False
-            )
-            r = min(r * 4, _MAX_RADIUS_CELLS) if r < _MAX_RADIUS_CELLS else r + 1
-            if r <= _MAX_RADIUS_CELLS and not cached:
-                pts, cached = pts.persist(), True  # a second round rescans the points
+            q_bytes = n_active * _DISK_ROW_BYTES
+            # lazy: the next round's action materializes it
+            active = active.join(F.broadcast(resolved), "query_id", "left_anti")
+            active = active.localCheckpoint(eager=False)
+            if cached:
+                r = min(r * 4, _MAX_RADIUS_CELLS) if r < _MAX_RADIUS_CELLS else r + 1
+            else:  # miss path: later rounds rescan the points, and a stats job
+                # (which fills the cache) seeds round 2 so that its disk is
+                # expected to hold ≥4k candidates per query (occupied-cell
+                # density, robust to clustered data; HLL skips a distinct's shuffle)
+                pts, cached = pts.persist(), True
+                cells = max(pts.agg(F.approx_count_distinct("cell", rsd=0.1)).first()[0], 1)
+                r0 = int(((4.0 * k * cells / n) ** 0.5 - 1) // 2 + 1)
+                log.debug("knn_join: miss path stats job: n=%d cells~%d r0=%d", n, cells, r0)
+                r = min(max(4, r0), _MAX_RADIUS_CELLS)
 
         if n_active > 0:  # stragglers (k ≥ |points| or empty regions)
             log.debug("knn_join: brute-force fallback for %d queries", n_active)
             q = F.broadcast(active.select("query_id", "qlat7", "qlon7"))
             done.append(_topk(_dist2_rows(pts.crossJoin(q)), k))
-        if not done:
-            return spark.createDataFrame([], out_schema)
         out = reduce(DataFrame.union, done).select("query_id", "neighbor_id", "dist2", "rank")
         # every round's frame reads localCheckpoint'd data, but the brute-force
         # pass reads the cached points: materialize it DISTRIBUTED before the
@@ -241,15 +241,15 @@ def knn_within_radius(
     lies farther return fewer/farther rows — callers choose the radius from
     data density (same contract as every bounded-radius spatial index scan).
 
-    Scale: one explode (fan-out (2r+1)², JVM), one shuffle on (clat, clon) —
-    salt-compatible with operators/celljoin if cells are hot — and one
+    Scale: one explode (fan-out (2r+1)², JVM), one shuffle on the long cell
+    id — salt-compatible with operators/celljoin if cells are hot — and one
     window top-k shuffled on query_id.
     """
     from osmgraft.operators.util import maybe_parallelize
 
     pts = _point_cells(maybe_parallelize(points, ensure_parallelism), cell_size)
     disk = _disk(_query_cells(queries, cell_size), radius_cells, lon_cells(cell_size))
-    return _topk(_dist2_rows(disk.join(pts, ["clat", "clon"])), k)
+    return _topk(_dist2_rows(disk.join(pts, "cell")), k)
 
 
 # --- kNN over REAL H3 cells (north star: "kNN via cell-neighbor ring

@@ -1,7 +1,10 @@
 """Salted cell join must equal the broadcast PIP join exactly (SURVEY.md §7
 'salted polygon-side explode must not duplicate or drop matches')."""
 
+import logging
+
 import numpy as np
+import pyarrow as pa
 
 from osmgraft.operators.celljoin import cell_pip_join, polygon_cover_cells
 from osmgraft.operators.pip import pip_join
@@ -24,10 +27,12 @@ def _pts_df(spark, n=5000, hot_frac=0.4):
             rng.integers(-1_790_000_000, 1_790_000_000, n - n_hot),
         ]
     )
-    return spark.createDataFrame(
-        list(zip(range(n), lat.tolist(), lon.tolist())),
-        "point_id long, lat7 int, lon7 int",
-    )
+    # from Arrow, so that the points' own scan is no Python-mapped RDD either
+    return spark.createDataFrame(pa.table({
+        "point_id": pa.array(range(n), pa.int64()),
+        "lat7": pa.array(lat, pa.int32()),
+        "lon7": pa.array(lon, pa.int32()),
+    }))
 
 
 def test_salted_equals_broadcast(spark):
@@ -57,6 +62,22 @@ def test_no_salting_path(spark):
         for r in cell_pip_join(pts, ADMIN_BOUNDARIES, skew_threshold=10**9).collect()
     }
     assert got == want
+
+
+def test_salted_plan_has_no_python_list_scan(spark, caplog):
+    """The polygon-cell and salt tables are local relations: a table built
+    from a Python list is a Python-mapped RDD (``Scan ExistingRDD``), which
+    adds a Python-worker stage to every call."""
+    caplog.set_level(logging.DEBUG, logger="osmgraft.operators.celljoin")
+    joined = cell_pip_join(
+        _pts_df(spark, n=800), ADMIN_BOUNDARIES, skew_threshold=100, salt_target=50, max_salts=16
+    )
+    assert joined.count() > 0
+    line = next(r.getMessage() for r in caplog.records if "hot_cells=" in r.getMessage())
+    fields = dict(f.split("=") for f in line.split()[1:])
+    assert int(fields["hot_cells"]) >= 1 and int(fields["max_salts"]) > 1, line
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
 
 
 def test_cover_cells_contains_polygon_points(spark):

@@ -3,6 +3,7 @@
 import logging
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from osmgraft.operators.knn import knn_join
@@ -122,18 +123,100 @@ def test_knn_k_exceeds_points(spark):
 
 
 def test_knn_k_exceeds_points_skips_rings(spark, caplog):
-    """|points| <= k: no ring round can resolve a query, so none runs."""
+    """|points| <= k: no ring round can resolve a query, so the point count
+    round 1 observes sends every query straight to brute force, with no
+    escalation round in between."""
     caplog.set_level(logging.DEBUG, logger="osmgraft.operators.knn")
     pts = _pts_df(spark, [(1, 0, 0), (2, 10, 10), (3, -400_000_000, 900_000_000)])
     qs = _qs_df(spark, [(9, 5, 5), (10, 300_000_000, -1_000_000_000)])
     _assert_brute(knn_join(pts, qs, k=3), pts, qs, 3)
-    assert _rounds(caplog) == []
-    assert any("brute-force fallback for 2 queries" in r.getMessage() for r in caplog.records)
+    msgs = [r.getMessage() for r in caplog.records if r.name == "osmgraft.operators.knn"]
+    brute = [i for i, m in enumerate(msgs) if "brute-force fallback for 2 queries" in m]
+    assert len(brute) == 1
+    assert _rounds(caplog) == [(1, False)]
+    assert not any("round r=" in m for m in msgs[brute[0]:])
 
 
-# sparse background far from one query, plus a dense cluster that keeps the
-# density estimate (and so r0) at one cell: the far query needs round two
 _G = 10_000_000  # 1-degree cells
+
+
+def _arrow_df(spark, id_col, rows):
+    """A frame of known size (a local relation, unlike a Python-list frame,
+    whose RDD Catalyst cannot size)."""
+    ids, lat, lon = zip(*rows)
+    return spark.createDataFrame(pa.table({
+        id_col: pa.array(ids, pa.int64()),
+        "lat7": pa.array(lat, pa.int32()),
+        "lon7": pa.array(lon, pa.int32()),
+    }))
+
+
+@pytest.fixture(scope="module")
+def dense_world(spark):
+    """2000 points over 2x2 one-degree cells, 5 queries inside them: round 1
+    (r = 1) resolves every query for k = 5."""
+    rng = np.random.default_rng(11)
+    xy = rng.integers(0, 20_000_000, (2005, 2)).tolist()
+    pts = _arrow_df(spark, "point_id", [(i, a, b) for i, (a, b) in enumerate(xy[:2000])])
+    qs = _arrow_df(spark, "query_id", [(i, a, b) for i, (a, b) in enumerate(xy[2000:])])
+    return pts, qs
+
+
+def test_knn_single_round_job_count(spark, dense_world, caplog):
+    """A query set that round 1 resolves costs the round's one action (its
+    broadcast, shuffle and checkpoint jobs) plus the caller's collect: no
+    stats, query-count or resolved-count job."""
+    caplog.set_level(logging.DEBUG, logger="osmgraft.operators.knn")
+    pts, qs = dense_world
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-single-round", "knn_join job count")
+    try:
+        rows = knn_join(pts, qs, k=5, cell_size=_G).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("knn-single-round")
+    assert _rounds(caplog) == [(1, False)]
+    assert len(rows) == 25
+    assert 1 <= len(jobs) <= 4, sorted(jobs)
+
+
+@pytest.mark.parametrize("empty", ["points", "queries"])
+def test_knn_empty_side_returns_empty(spark, dense_world, empty):
+    """An empty local relation lets Spark drop the other join side's
+    observed subtree, so round 1 sees no count for it: still no rows and no
+    error."""
+    pts, qs = dense_world
+    if empty == "points":
+        pts = _arrow_df(spark, "point_id", [(0, 0, 0)]).filter("point_id < 0")
+    else:
+        qs = _arrow_df(spark, "query_id", [(0, 0, 0)]).filter("query_id < 0")
+    assert knn_join(pts, qs, k=5, cell_size=_G).collect() == []
+
+
+def test_knn_round_one_disk_follows_size_estimate(spark, dense_world, caplog):
+    """Round 1 sizes its disk before any count exists, from Catalyst's
+    estimate of the query frame: broadcast under the session threshold,
+    shuffled once the threshold is lowered below it. Both stay exact."""
+    caplog.set_level(logging.DEBUG, logger="osmgraft.operators.knn")
+    pts, qs = dense_world
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    def round_one_disk():
+        return [r.getMessage() for r in caplog.records if "round r=1 " in r.getMessage()][-1]
+
+    _assert_brute(knn_join(pts, qs, k=5, cell_size=_G), pts, qs, 5)
+    assert "disk=broadcast" in round_one_disk()
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1000")
+        _assert_brute(knn_join(pts, qs, k=5, cell_size=_G), pts, qs, 5)
+    finally:
+        spark.conf.set(key, old)
+    assert "disk=shuffle" in round_one_disk()
+
+
+# sparse background far from one query, plus a dense cluster: round 1 (r = 1)
+# resolves the cluster query, the far query needs round two
 
 
 def _far_inputs(spark, id0=0):
