@@ -24,14 +24,14 @@ points (its rank-k row exists) has its exact answer and is resolved.
 
 Each round is ONE Spark action, its eager localCheckpoint, whose observed
 metrics (``Observation``) carry the loop's counts: points, active queries,
-resolved queries. Round 1 runs at r = 1, which on typical densities resolves
-every query. Only a miss pays for a density-stats job, seeding round 2 at
-max(4, r0) cells; later rounds quadruple r up to ``_MAX_RADIUS_CELLS``.
-Queries still unresolved there, or every query when |points| ≤ k, fall back
-to one brute-force broadcast pass. The driver sees ONLY those scalar counts,
-never candidate rows. Points are cached only once a second round is needed.
-Engine choices (counts, broadcast vs shuffle disk and its size estimate, the
-miss-path stats, caching, fallback size) are logged at DEBUG.
+ranked rows, resolved queries. Round 1 runs at r = 1. On a miss, the ranked
+rows of the unresolved queries (each short of k) measure the density around
+them; the next ball is sized to hold ≥ 4k points, at least 4·r, at most
+``_MAX_RADIUS_CELLS`` cells. Queries still unresolved there, or every query
+when |points| ≤ k, fall back to one brute-force broadcast pass. The driver
+sees ONLY those scalar counts, never candidate rows. Points are cached only
+once a second round is needed. Engine choices (counts, disk choice and size
+estimate, caching, fallback size) are logged at DEBUG.
 """
 
 from __future__ import annotations
@@ -129,16 +129,19 @@ def knn_join(
     rows per query, rank 1..k ordered by (dist2, neighbor_id). Exact, fully
     distributed, adaptive radius: each ring round ranks the candidates of the
     full (2r+1)² disk that lie within r·cell_size and resolves every query
-    whose rank-k row exists (module docstring). Round 1 runs at r = 1 as ONE
-    Spark action that also observes the counts the loop needs; a density-stats
-    job runs only when it leaves queries unresolved. For a one-pass plan with
-    a known density bound use :func:`knn_within_radius`.
+    whose rank-k row exists (module docstring). Each round is ONE Spark action
+    that also observes the counts the loop needs; round 1 (r = 1) resolves
+    every query whose k nearest points lie within cell_size. For a one-pass
+    plan with a known density bound use :func:`knn_within_radius`.
+
+    Round 1 picks a broadcast or shuffled disk from Catalyst's size estimate
+    of ``queries``. Frames of unknown size (Python lists, RDDs, joins without
+    CBO) estimate near Long.MaxValue and so shuffle every point in round 1,
+    even for 2 queries; Arrow, parquet or range frames give a real estimate.
 
     ``queries`` must have DETERMINISTIC lineage (no un-seeded sample()/rand()/
-    unordered limit()): the operator evaluates it more than once (round joins,
-    brute-force fallback) without an upfront snapshot — the standard Spark
-    caveat for reusing a non-deterministic DataFrame. Callers with such inputs
-    should ``localCheckpoint(eager=True)`` the query frame first.
+    unordered limit()): every round and the brute-force fallback re-read it.
+    Callers with such inputs should ``localCheckpoint(eager=True)`` it first.
     """
     from osmgraft.operators.util import maybe_parallelize
 
@@ -148,9 +151,7 @@ def knn_join(
     active = _query_cells(queries, cell_size)
     out_schema = "query_id long, neighbor_id long, dist2 long, rank int"
     threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    # round 1 sizes its disk from Catalyst's estimate of the query frame (huge
-    # for sources of unknown size, which so take the shuffle path): the count
-    # is known only after the round's action. Later rounds use that count.
+    # round 1's disk size (docstring); later rounds use the observed count
     q_bytes = active._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
 
     done: list[DataFrame] = []  # resolved (query_id, neighbor_id, dist2, rank)
@@ -160,27 +161,31 @@ def knn_join(
         while r <= _MAX_RADIUS_CELLS:
             est = q_bytes * (2 * r + 1) ** 2
             broadcast = 0 <= est <= threshold
-            obs_n, obs_active, obs_resolved = Observation(), Observation(), Observation()
-            disk = _disk(active.observe(obs_active, F.count(F.lit(1))), r, ncl)
+            obs = [Observation() for _ in range(4)]  # points, active, ranked, resolved
+            disk = _disk(active.observe(obs[1], F.count(F.lit(1))), r, ncl)
             # clamp: (r·G)² can exceed int64 for large radii, but every real
             # dist2 ≤ 2·(1.8e9)² < 2^63, so the clamp is semantically exact
             bound = min((r * cell_size) ** 2, (1 << 63) - 1)
             cand = _dist2_rows(
-                pts.observe(obs_n, F.count(F.lit(1)))
+                pts.observe(obs[0], F.count(F.lit(1)))
                 .join(F.broadcast(disk) if broadcast else disk, "cell")
             )
             # the round's ONE action; the caller's action reads the checkpoint
             topk = (
                 _topk(cand.filter(F.col("dist2") <= bound), k)
-                .observe(obs_resolved, F.count(F.when(F.col("rank") == k, 1)))
+                .observe(obs[2], F.count(F.lit(1)))
+                .observe(obs[3], F.count(F.when(F.col("rank") == k, 1)))
                 .localCheckpoint(eager=True)
             )
-            n, n_active, n_resolved = map(_observed, (obs_n, obs_active, obs_resolved))
+            n, n_active, ranked, n_resolved = map(_observed, obs)
             log.debug(
-                "knn_join: round r=%d n=%d active=%d resolved=%d disk=%s est=%d pts_cached=%s",
-                r, n, n_active, n_resolved, "broadcast" if broadcast else "shuffle", est, cached,
+                "knn_join: round r=%d n=%d active=%d ranked=%d resolved=%d disk=%s est=%d "
+                "pts_cached=%s", r, n, n_active, ranked, n_resolved,
+                "broadcast" if broadcast else "shuffle", est, cached,
             )
             if not (n and n_active):  # an empty side: the round's empty result
+                if done:  # only round 1 can see one; later rounds rerun known sides
+                    raise RuntimeError(f"knn_join: round r={r} saw n={n} active={n_active}")
                 return spark.createDataFrame([], out_schema)
             if n <= k:  # every answer is all the points: straight to brute force
                 break
@@ -190,22 +195,17 @@ def knn_join(
                 break
             resolved = topk.filter(F.col("rank") == k).select("query_id")
             done.append(topk.join(F.broadcast(resolved), "query_id", "left_semi"))
-            n_active -= n_resolved
+            # miss: the unresolved queries' ranked rows give their local
+            # density; size the next ball for ≥4k points (module docstring)
+            short, n_active = ranked - k * n_resolved, n_active - n_resolved
+            grow = max(4.0, (4.0 * k * n_active / short) ** 0.5 if short else 0)
+            r = min(int(r * grow), _MAX_RADIUS_CELLS) if r < _MAX_RADIUS_CELLS else r + 1
             q_bytes = n_active * _DISK_ROW_BYTES
             # lazy: the next round's action materializes it
             active = active.join(F.broadcast(resolved), "query_id", "left_anti")
             active = active.localCheckpoint(eager=False)
-            if cached:
-                r = min(r * 4, _MAX_RADIUS_CELLS) if r < _MAX_RADIUS_CELLS else r + 1
-            else:  # miss path: later rounds rescan the points, and a stats job
-                # (which fills the cache) seeds round 2 so that its disk is
-                # expected to hold ≥4k candidates per query (occupied-cell
-                # density, robust to clustered data; HLL skips a distinct's shuffle)
-                pts, cached = pts.persist(), True
-                cells = max(pts.agg(F.approx_count_distinct("cell", rsd=0.1)).first()[0], 1)
-                r0 = int(((4.0 * k * cells / n) ** 0.5 - 1) // 2 + 1)
-                log.debug("knn_join: miss path stats job: n=%d cells~%d r0=%d", n, cells, r0)
-                r = min(max(4, r0), _MAX_RADIUS_CELLS)
+            if not cached:
+                pts, cached = pts.persist(), True  # later rounds rescan the points
 
         if n_active > 0:  # stragglers (k ≥ |points| or empty regions)
             log.debug("knn_join: brute-force fallback for %d queries", n_active)

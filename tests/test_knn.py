@@ -267,6 +267,18 @@ def test_knn_point_exactly_at_ring_bound(spark, caplog):
     assert [r for r, _ in _rounds(caplog)] == [1, 4]
 
 
+def test_knn_miss_sizes_next_radius_from_local_density(spark, caplog):
+    """Points on a lattice of pitch 3 cells: round 1's ball holds one point
+    for k = 20, so the next ball is sized for 80 points at that density,
+    r = int(sqrt(80)) = 8, which holds 21. Quadrupling would run r = 4, then 16."""
+    caplog.set_level(logging.DEBUG, logger="osmgraft.operators.knn")
+    lattice = [(i, j) for i in range(-6, 7) for j in range(-6, 7)]
+    pts = _pts_df(spark, [(n, 3 * _G * i, 3 * _G * j) for n, (i, j) in enumerate(lattice)])
+    qs = _qs_df(spark, [(1, _G // 10, _G // 5)])
+    _assert_brute(knn_join(pts, qs, k=20, cell_size=_G), pts, qs, 20)
+    assert [r for r, _ in _rounds(caplog)] == [1, 8]
+
+
 def test_knn_coarse_cells_wrap_alias(spark, caplog):
     """ncl = 6 lon cells: the r=4 disk spans 9 lon offsets, so lon offsets
     2..4 alias -4..-2. The points sit two lon cells from the query, in an
