@@ -25,7 +25,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from osmgraft.synth import ADMIN_BOUNDARIES, points_from_orders
 
     pts = points_from_orders(spark, "/root/testdata/sf0.001")
-    joined = pip_join(pts, ADMIN_BOUNDARIES, how="inner", ensure_parallelism=True)
+    joined = pip_join(pts, ADMIN_BOUNDARIES, how="inner")
     return (
         joined.select(
             "boundary_id",

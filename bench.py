@@ -29,7 +29,7 @@ def _flagship(spark, sf_dir):
     from osmgraft.synth import ADMIN_BOUNDARIES, points_from_orders
 
     pts = points_from_orders(spark, sf_dir)
-    joined = pip_join(pts, ADMIN_BOUNDARIES, how="inner", ensure_parallelism=True)
+    joined = pip_join(pts, ADMIN_BOUNDARIES, how="inner")
     return (
         joined.select(
             "boundary_id",
@@ -46,13 +46,14 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
+    from osmgraft.io import read_fixture
     from osmgraft.queries import REGISTRY
     from osmgraft.session import get_spark
 
     spark = get_spark("osmgraft-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    n_points = spark.read.parquet(f"{sf_dir}/orders.parquet").count()  # warms JVM + FS cache
+    n_points = read_fixture(spark, sf_dir, "orders").count()  # warms JVM + FS cache
 
     # warm the Arrow python-UDF workers so timings measure the operator, not fork+import
     import pandas as _pd  # noqa: F401
@@ -88,9 +89,7 @@ def main() -> None:
         orders = spark.range(1, scaled_rows + 1, 1, cpus).select(
             F.col("id").alias("o_orderkey")
         )
-        joined = pip_join(
-            points_projection(orders), ADMIN_BOUNDARIES, how="inner", ensure_parallelism=True
-        )
+        joined = pip_join(points_projection(orders), ADMIN_BOUNDARIES, how="inner")
         return (
             joined.select(
                 "boundary_id",

@@ -26,6 +26,29 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 
+def read_fixture(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """The fixture table ``table`` of the scale-factor directory ``sf_dir``.
+
+    The only code that knows the fixture layout ``{sf_dir}/{table}.parquet``.
+    The schema comes from the file's own parquet footer (read on the driver),
+    so Spark runs no schema-inference job and the read launches none. The
+    footer is the read-only fixture's single source of its schema: timestamps
+    map to ``TimestampNTZType``, as Spark's inference maps them. A directory
+    at that path is a table Spark wrote (tests build such fixtures); Spark's
+    own inference reads it, since its footers carry Spark's schema.
+    """
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    path = f"{sf_dir}/{table}.parquet"
+    if os.path.isdir(path):
+        return spark.read.parquet(path)
+    schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
+    return spark.read.schema(schema).parquet(path)
+
+
 def has_iceberg(spark: SparkSession, catalog: str | None = None) -> bool:
     """True when an Iceberg catalog is usable in this session.
 

@@ -57,15 +57,12 @@ def cell_pip_join(
     max_salts: int = 64,
     lat_col: str = "lat7",
     lon_col: str = "lon7",
-    ensure_parallelism: bool = False,
 ) -> DataFrame:
     """Returns point columns + boundary_id (inner semantics, same contract as
-    osmgraft.operators.pip.pip_join(how='inner')). ensure_parallelism: opt-in
-    repartition for small single-file local inputs only."""
+    osmgraft.operators.pip.pip_join(how='inner')). The refine runs on the
+    join's shuffled partitions, so the partitioning of ``points`` does not
+    bound its parallelism."""
     spark = points.sparkSession
-    from osmgraft.operators.util import maybe_parallelize
-
-    points = maybe_parallelize(points, ensure_parallelism)
     pts = points.withColumn("_cell", grid_cell(F.col(lat_col), F.col(lon_col), cell_size))
 
     # 1. explicit skew detection (one cheap pre-pass aggregation)

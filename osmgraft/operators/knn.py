@@ -121,7 +121,6 @@ def knn_join(
     queries: DataFrame,
     k: int,
     cell_size: int = DEFAULT_CELL,
-    ensure_parallelism: bool = False,
 ) -> DataFrame:
     """points: (point_id, lat7, lon7); queries: (query_id, lat7, lon7).
 
@@ -143,11 +142,9 @@ def knn_join(
     unordered limit()): every round and the brute-force fallback re-read it.
     Callers with such inputs should ``localCheckpoint(eager=True)`` it first.
     """
-    from osmgraft.operators.util import maybe_parallelize
-
     spark = points.sparkSession
     ncl = lon_cells(cell_size)
-    pts = _point_cells(maybe_parallelize(points, ensure_parallelism), cell_size)
+    pts = _point_cells(points, cell_size)
     active = _query_cells(queries, cell_size)
     out_schema = "query_id long, neighbor_id long, dist2 long, rank int"
     threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
@@ -227,7 +224,6 @@ def knn_within_radius(
     k: int,
     radius_cells: int = 2,
     cell_size: int = DEFAULT_CELL,
-    ensure_parallelism: bool = False,
 ) -> DataFrame:
     """Fully-distributed kNN for a bounded search radius — the one-pass
     cluster-scale path when the query side is itself a big DataFrame (no
@@ -245,9 +241,7 @@ def knn_within_radius(
     id — salt-compatible with operators/celljoin if cells are hot — and one
     window top-k shuffled on query_id.
     """
-    from osmgraft.operators.util import maybe_parallelize
-
-    pts = _point_cells(maybe_parallelize(points, ensure_parallelism), cell_size)
+    pts = _point_cells(points, cell_size)
     disk = _disk(_query_cells(queries, cell_size), radius_cells, lon_cells(cell_size))
     return _topk(_dist2_rows(disk.join(pts, "cell")), k)
 
@@ -275,7 +269,6 @@ def knn_h3_ball(
     k: int,
     radius7: int,
     res: int = 6,
-    ensure_parallelism: bool = False,
 ) -> DataFrame:
     """Exact k nearest neighbors WITHIN the metric ball dist2 <= radius7^2,
     candidate-pruned by real H3 gridDisk neighborhoods: each query explodes
@@ -295,7 +288,6 @@ def knn_h3_ball(
 
     from osmgraft.functions.cells import h3_cell_udf
     from osmgraft.functions.h3real import grid_disk
-    from osmgraft.operators.util import maybe_parallelize
 
     if res not in _H3_PITCH_MIN_7:
         raise ValueError(
@@ -303,7 +295,7 @@ def knn_h3_ball(
         )
     R = int(np.ceil(1.5 * 1.41422 * radius7 / _H3_PITCH_MIN_7[res])) + 3
 
-    pts = maybe_parallelize(points, ensure_parallelism).select(
+    pts = points.select(
         "point_id", "lat7", "lon7",
         h3_cell_udf(res)(F.col("lat7"), F.col("lon7")).alias("cell"),
     )

@@ -31,6 +31,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from osmgraft.io import read_fixture
+
 
 def _shoelace2(ring: list[tuple[int, int]]) -> int:
     """Twice the signed shoelace area, exact integers, ring-local origin
@@ -220,7 +222,7 @@ def mp_fixture_df(spark, sf_dir: str) -> DataFrame:
 
     buckets = [
         int(r[0])
-        for r in spark.read.parquet(f"{sf_dir}/orders.parquet")
+        for r in read_fixture(spark, sf_dir, "orders")
         .select((F.col("o_custkey") % 97).alias("b"))
         .distinct()
         .collect()

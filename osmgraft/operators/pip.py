@@ -62,7 +62,6 @@ def pip_join(
     how: str = "inner",
     lat_col: str = "lat7",
     lon_col: str = "lon7",
-    ensure_parallelism: bool = False,
     refine: str = "raycast",
 ) -> DataFrame:
     """Join points to containing polygons.
@@ -75,18 +74,15 @@ def pip_join(
     swaps in the division-free exact-integer test (geom.pnpoly_int) — same
     semantics away from float knife edges, gated against the same oracle.
 
-    ensure_parallelism: opt-in round-robin repartition for small local inputs
-    (single-file scans); leave False on a real cluster — the scan's splits
-    already parallelize and the extra Exchange is pure cost.
+    The Python ray cast runs one task per partition of ``points``; a caller
+    with a small single-file input applies
+    :func:`osmgraft.operators.util.ensure_min_parallelism` to its scan first.
     """
     if how not in ("inner", "left_semi", "left_anti"):
         raise ValueError(how)
     if refine not in ("raycast", "parity_int"):
         raise ValueError(refine)
     pip_test = pnpoly if refine == "raycast" else pnpoly_int
-    from osmgraft.operators.util import maybe_parallelize
-
-    points = maybe_parallelize(points, ensure_parallelism)
     spark = points.sparkSession
     bc = spark.sparkContext.broadcast(_prepare(polys))
 

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from osmgraft.functions import tiles
 from osmgraft.geom import polygon_bbox_wrapped
+from osmgraft.operators.util import ensure_min_parallelism
 
 LON7_WEST_EDGE = -1_800_000_000  # tx == 0 at every zoom
 LON7_EAST_EDGE = 1_799_999_999  # tx == 2^z - 1 at every zoom
@@ -127,7 +128,6 @@ def render_tile_pngs(
     z: int,
     parent_z: int,
     size: int = 64,
-    ensure_parallelism: bool = False,
 ) -> DataFrame:
     """Materialize a raster TILE SERVER layer: per parent tile at
     ``parent_z``, rasterize its ``z``-level descendant counts into a
@@ -171,12 +171,9 @@ def render_tile_pngs(
     packed = counts.groupBy("ptx", "pty").agg(
         F.collect_list(F.struct("sx", "sy", "cnt")).alias("cells")
     )
-    if ensure_parallelism:
-        # sandbox/test opt-in (see terrain_rgb_tiles): AQE coalesces the
-        # packed-parents shuffle to one partition on local fixtures
-        from osmgraft.operators.util import ensure_min_parallelism
-
-        packed = ensure_min_parallelism(packed)
+    # AQE coalesces the few-MB packed-parents shuffle to one partition,
+    # which would serialize the render kernel
+    packed = ensure_min_parallelism(packed)
 
     def kernel(batches):
         for rb in batches:
@@ -222,7 +219,6 @@ def render_tile_mvt(
     parent_z: int,
     layer: str = "counts",
     extent: int = 4096,
-    ensure_parallelism: bool = False,
 ) -> DataFrame:
     """Materialize the VECTOR tile-server layer: per parent tile at
     ``parent_z``, its z-level descendant counts become POINT features (at
@@ -263,10 +259,7 @@ def render_tile_mvt(
             F.collect_list(F.struct("sy", "sx", "cnt"))
         ).alias("cells")
     )
-    if ensure_parallelism:
-        from osmgraft.operators.util import ensure_min_parallelism
-
-        packed = ensure_min_parallelism(packed)
+    packed = ensure_min_parallelism(packed)  # as in render_tile_pngs
 
     def kernel(batches):
         for rb in batches:
@@ -354,7 +347,6 @@ def render_tile_mvt_lines(
     z: int,
     layer: str = "ways",
     extent: int = 4096,
-    ensure_parallelism: bool = False,
 ) -> DataFrame:
     """Materialize the LINE-layer tile-server product: clipped way segments
     (operators/clip.py output: way_id, seg_idx, tx, ty, px0..py1 tile-local
@@ -390,13 +382,9 @@ def render_tile_mvt_lines(
             ).alias("segs")
         )
     )
-    if ensure_parallelism:
-        # sandbox/test opt-in (see terrain_rgb_tiles): AQE coalesces the
-        # few-MB grouped-tiles shuffle to one partition, serializing the
-        # protobuf encode kernel on local fixtures
-        from osmgraft.operators.util import ensure_min_parallelism
-
-        grouped = ensure_min_parallelism(grouped)
+    # no ensure_min_parallelism, unlike the point renderers: an A/B at sf0.1
+    # measured the extra shuffle of the heavy segs arrays costing more than
+    # the serialized encode saves (4.8 s vs 3.3 s)
     out_schema = "z int, tx long, ty long, mvt binary, n_features long"
 
     def kernel(batches):
@@ -748,7 +736,7 @@ def mosaic_tiles(
 
 
 def terrain_rgb_tiles(
-    tile_counts: DataFrame, z: int, parent_z: int, ensure_parallelism: bool = False
+    tile_counts: DataFrame, z: int, parent_z: int
 ) -> DataFrame:
     """DEM tile ENCODER in Mapbox Terrain-RGB convention (public spec:
     elevation = -10000 + 0.1·(R·65536 + G·256 + B)): per parent tile at
@@ -786,13 +774,7 @@ def terrain_rgb_tiles(
     packed = counts.groupBy("ptx", "pty").agg(
         F.collect_list(F.struct("sx", "sy", "elev")).alias("cells")
     )
-    if ensure_parallelism:
-        # sandbox/test opt-in (operators never blind-shuffle, VERDICT r1 #6):
-        # AQE coalesces the few-MB packed-parents shuffle to ONE partition,
-        # serializing the CPU-heavy deflate render on local fixtures
-        from osmgraft.operators.util import ensure_min_parallelism
-
-        packed = ensure_min_parallelism(packed)
+    packed = ensure_min_parallelism(packed)  # as in render_tile_pngs
 
     def render(pdfs):
         for pdf in pdfs:

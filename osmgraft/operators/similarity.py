@@ -38,13 +38,9 @@ def cosine_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    ensure_parallelism: bool = False,
 ) -> DataFrame:
     """Exact cosine top-k: queries (small) broadcast-cross-joined to items.
     Returns (query_id, neighbor_id, rank) ordered by (cosine DESC, neighbor)."""
-    from osmgraft.operators.util import maybe_parallelize
-
-    items = maybe_parallelize(items, ensure_parallelism)
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
@@ -226,7 +222,6 @@ def cosine_topk_np(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    ensure_parallelism: bool = False,
 ) -> DataFrame:
     """Exact cosine top-k with a batched numpy matmul kernel (mapInArrow):
     per input partition the kernel emits each query's k best candidates
@@ -238,9 +233,6 @@ def cosine_topk_np(
     """
     import pyarrow as pa
 
-    from osmgraft.operators.util import maybe_parallelize
-
-    items = maybe_parallelize(items, ensure_parallelism)
     spark = items.sparkSession
     out_schema = "query_id long, neighbor_id long, sim double"
     qrows = queries.select(id_col, vec_col).collect()
@@ -300,7 +292,6 @@ def cosine_topk_blocked(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     block_rows: int = 4096,
-    ensure_parallelism: bool = False,
 ) -> DataFrame:
     """Exact cosine top-k for query sets too large to broadcast whole, as ONE
     distributed job: queries and items are hash-split into ceil(n/B) blocks,
@@ -315,18 +306,13 @@ def cosine_topk_blocked(
     compute, just materialized as one shuffle; per-task memory is two blocks
     (2·B·dim doubles). Callers with sub-linear budgets use the
     hyperplane-LSH path (:func:`lsh_ann_topk`)."""
-    from osmgraft.operators.util import maybe_parallelize
-
     spark = items.sparkSession
     n_q = queries.count()
     if n_q == 0:
         return spark.createDataFrame([], "query_id long, neighbor_id long, rank int")
     n_qb = -(-n_q // block_rows)
     if n_qb == 1:
-        return cosine_topk_np(
-            items, queries, k, id_col, vec_col, ensure_parallelism=ensure_parallelism
-        )
-    items = maybe_parallelize(items, ensure_parallelism)
+        return cosine_topk_np(items, queries, k, id_col, vec_col)
     n_i = items.count()
     n_ib = max(1, -(-n_i // block_rows))
     # block-pair grid: every (query-block, item-block) is ONE cogroup task —
@@ -395,7 +381,6 @@ def cosine_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     block_rows: int = 4096,
-    ensure_parallelism: bool = False,
 ) -> DataFrame:
     """Exact embedding-cosine near-duplicate PAIRS: every unordered pair with
     cosine ≥ threshold, emitted once as (id_a < id_b) — the task brief's
@@ -412,9 +397,6 @@ def cosine_neardup_pairs(
     only — no float column, so cross-engine hashes can't flake on summation
     order (thresholds must not sit within float-error of a real cosine;
     callers pick policy thresholds, not data values)."""
-    from osmgraft.operators.util import maybe_parallelize
-
-    items = maybe_parallelize(items, ensure_parallelism)
     spark = items.sparkSession
     n = items.count()
     if n == 0:
@@ -543,7 +525,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     anchors: np.ndarray | None = None,
-    ensure_parallelism: bool = False,
 ) -> DataFrame:
     """IVF approximate cosine top-k: (query_id, neighbor_id, rank), one job.
 
@@ -561,15 +542,12 @@ def ivf_topk(
     mismatch, never silently)."""
     from pyspark.sql.functions import pandas_udf
 
-    from osmgraft.operators.util import maybe_parallelize
-
     if anchors is None:
         dim = len(items.select(vec_col).first()[0])
         anchors = ivf_anchors(dim, n_anchors)
     n_anchors = anchors.shape[0]
     nprobe = min(nprobe, n_anchors)
 
-    items = maybe_parallelize(items, ensure_parallelism)
     assigned = ivf_assign(items, anchors, vec_col=vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec"), "aid"
     )
@@ -875,7 +853,6 @@ def pq_adc_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    ensure_parallelism: bool = False,
 ) -> DataFrame:
     """Asymmetric-distance top-k: items are scanned as CODES ONLY (m ints a
     row); each query precomputes an (m, ksub) lookup table of exact
@@ -885,13 +862,8 @@ def pq_adc_topk(
     window. Returns (query_id, neighbor_id, rank) by (adc ASC, neighbor)."""
     from pyspark.sql.functions import pandas_udf
 
-    from osmgraft.operators.util import maybe_parallelize
-
     m, ksub, sub = codebooks.shape
-    codes = maybe_parallelize(
-        pq_encode(items, codebooks, id_col=id_col, vec_col=vec_col),
-        ensure_parallelism,
-    )
+    codes = pq_encode(items, codebooks, id_col=id_col, vec_col=vec_col)
     qrows = queries.select(id_col, vec_col).collect()  # bounded query set
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qx = np.array([list(r[1]) for r in qrows], dtype=np.float64)

@@ -19,6 +19,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from osmgraft.io import read_fixture
+
 
 def dp_keep_indices(pts: list[tuple[int, int]], eps7: int) -> list[int]:
     """Indices of vertices Douglas-Peucker keeps (endpoints always)."""
@@ -123,7 +125,7 @@ def dp_fixture_df(spark, sf_dir: str) -> DataFrame:
 
     buckets = [
         int(r[0])
-        for r in spark.read.parquet(f"{sf_dir}/orders.parquet")
+        for r in read_fixture(spark, sf_dir, "orders")
         .select((F.col("o_custkey") % 97).alias("b"))
         .distinct()
         .collect()

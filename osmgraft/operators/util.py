@@ -6,27 +6,28 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def ensure_min_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Repartition ONLY when the plan has fewer partitions than the cluster has
-    cores (single-file local inputs). On a real multi-TB table the scan already
-    yields ≥thousands of splits and this is a no-op — we never blind-shuffle a
-    big input; round-robin repartition here exists to keep CPU-heavy Arrow
-    kernels parallel on tiny test inputs and for the sandbox scaling proxy.
+    """``df`` with at least ``min_parts`` partitions (default: the cluster's
+    cores), for CPU-heavy Arrow kernels fed by small inputs. Runs no Spark job.
 
-    Production paths should NOT call this implicitly (VERDICT r1 #6): operators
-    take an ``ensure_parallelism: bool = False`` flag and only the sandbox
-    query registry opts in, so a cluster user's plan has no blind Exchange.
+    A plan with no exchange knows its partition count before it runs (a scan's
+    splits), so reading it is free: a single-file local scan is round-robin
+    repartitioned, while a real table's scan, which yields thousands of
+    splits, comes back unchanged. A plan that AQE wraps learns its partition
+    count only when its shuffles run, and AQE coalesces a small shuffle to a
+    few partitions; reading the count would run every shuffle below it at
+    build time and the action would run them again, so such a plan is
+    repartitioned unread. Apply this at a frame's source where it can be.
+
+    AQE is on in every session :func:`osmgraft.session.get_spark` builds and by
+    Spark's default; with it off, the count is read as for an exchange-free
+    plan.
     """
-    spark = df.sparkSession
     if min_parts is None:
-        min_parts = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min_parts:
+        min_parts = df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan" or df.rdd.getNumPartitions() < min_parts:
         return df.repartition(min_parts)
     return df
-
-
-def maybe_parallelize(df: DataFrame, ensure_parallelism: bool) -> DataFrame:
-    """Gate for :func:`ensure_min_parallelism` — no-op unless opted in."""
-    return ensure_min_parallelism(df) if ensure_parallelism else df
 
 
 def set_arrow_batch_rows(spark: SparkSession, rows: int) -> None:

@@ -10,6 +10,7 @@ shapes — see osmgraft.functions.tiles, osmgraft.geom).
 
 from __future__ import annotations
 
+import logging
 import os
 from collections.abc import Callable
 
@@ -21,6 +22,7 @@ from pyspark.sql import functions as F
 from osmgraft.functions import coords, tiles
 from osmgraft.functions.timestamps import ntz_from_epoch as _ntz_from_epoch
 from osmgraft.geom import sql_pip_predicate
+from osmgraft.io import read_fixture
 from osmgraft.operators.pip import pip_join
 from osmgraft.operators.util import ensure_min_parallelism
 from osmgraft.synth import (
@@ -33,6 +35,8 @@ from osmgraft.synth import (
     points_from_orders,
     sql_points_cte,
 )
+
+log = logging.getLogger(__name__)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 # oracle: SQL string, None (rows-only gate), or a zero-arg callable building
@@ -119,7 +123,7 @@ SELECT point_id, boundary_id FROM pip"""
 def pip_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast STR-tree ray-cast point-in-polygon inner join (flagship)."""
     pts = points_from_orders(spark, sf_dir)
-    return pip_join(pts, ADMIN_BOUNDARIES, how="inner", ensure_parallelism=True).select(
+    return pip_join(pts, ADMIN_BOUNDARIES, how="inner").select(
         "point_id", "boundary_id"
     )
 
@@ -133,7 +137,7 @@ SELECT p.point_id FROM pts p ANTI JOIN pip USING (point_id)""",
 def pip_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIP anti-join: points inside no boundary (left_anti semantics)."""
     pts = points_from_orders(spark, sf_dir)
-    return pip_join(pts, ADMIN_BOUNDARIES, how="left_anti", ensure_parallelism=True).select(
+    return pip_join(pts, ADMIN_BOUNDARIES, how="left_anti").select(
         "point_id"
     )
 
@@ -217,10 +221,10 @@ def assign_all_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.snap import nearest_vertex
 
     pts = points_from_orders(spark, sf_dir)
-    inside = pip_join(pts, ADMIN_BOUNDARIES, how="inner", ensure_parallelism=True).select(
+    inside = pip_join(pts, ADMIN_BOUNDARIES, how="inner").select(
         "point_id", "boundary_id", F.lit("inside").alias("how")
     )
-    anti = pip_join(pts, ADMIN_BOUNDARIES, how="left_anti", ensure_parallelism=True)
+    anti = pip_join(pts, ADMIN_BOUNDARIES, how="left_anti")
     near = (
         nearest_vertex(anti, _boundary_vertices(), guard=_NV_GUARD)
         .select("point_id", "boundary_id", F.lit("nearest").alias("how"))
@@ -247,7 +251,7 @@ def nearest_boundary_vertex(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.snap import nearest_vertex
 
     pts = points_from_orders(spark, sf_dir)
-    anti = pip_join(pts, ADMIN_BOUNDARIES, how="left_anti", ensure_parallelism=True)
+    anti = pip_join(pts, ADMIN_BOUNDARIES, how="left_anti")
     return nearest_vertex(anti, _boundary_vertices(), guard=_NV_GUARD).select(
         "point_id", "boundary_id", "vidx", "d2"
     )
@@ -306,11 +310,10 @@ def pip_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     validity window is a residual JVM predicate after containment — no
     second join, no point-side shuffle. DuckDB twin: the ray-cast oracle
     over the versioned edge set + the same window predicate."""
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
     ev = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        read_fixture(spark, sf_dir, "events")
     )
     lat, lon = latlon_of_key(F.col("event_id"))
     pts = ev.select(
@@ -341,7 +344,7 @@ def pip_celljoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = points_from_orders(spark, sf_dir)
     return cell_pip_join(
-        pts, ADMIN_BOUNDARIES, skew_threshold=500, salt_target=250, ensure_parallelism=True
+        pts, ADMIN_BOUNDARIES, skew_threshold=500, salt_target=250
     ).select(
         "point_id", "boundary_id"
     )
@@ -683,11 +686,10 @@ def hotspot_days_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a window over the per-tile-day AGGREGATE — orders of magnitude
     smaller than the input; no IEEE anywhere, so the flag can't flake at a
     threshold boundary."""
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
     from pyspark.sql import Window as W
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     counts = (
         ev.select(
@@ -755,9 +757,8 @@ def hamming_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     any recall hole in the banding (the pigeonhole argument) drops a planted
     pair and fails the gate."""
     from osmgraft.operators.multimodal import phash_near_dup_pairs
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), _HNP_CAP)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), _HNP_CAP)
     i = F.col("id")
     base = ((i * 2654435761) % 2147483648) * 4294967296 + (
         (i * 40503 + 17) % 4294967296
@@ -1195,7 +1196,7 @@ _D2 = sql_dist2("q.qlat7", "q.qlon7", "p.lat7", "p.lon7")
 
 
 def _knn_queries_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    n = read_fixture(spark, sf_dir, "nation")
     k = F.col("n_nationkey").cast("long")
     return n.select(
         k.alias("query_id"),
@@ -1221,7 +1222,7 @@ def knn_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.knn import knn_join
 
     pts = points_from_orders(spark, sf_dir)
-    return knn_join(pts, _knn_queries_df(spark, sf_dir), k=5, ensure_parallelism=True)
+    return knn_join(pts, _knn_queries_df(spark, sf_dir), k=5)
 
 
 # --- reference-shaped analytics (aggregation suite, SURVEY §2.4) -------------------
@@ -1238,7 +1239,7 @@ GROUP BY l_returnflag, l_linestatus""",
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-exact aggregates (cents) so the cross-engine value hash is
     float-summation-order independent."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_fixture(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -1296,13 +1297,13 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (ties → orderkey). Dates leave as integer day offsets so
     the hash never touches date formatting.
     Plan: both dimension filters push into the scans; customer broadcasts."""
-    cu = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(
+    cu = read_fixture(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+    o = read_fixture(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1997-06-01 00:00:00").cast("timestamp")
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
+    li = read_fixture(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1997-06-01 00:00:00").cast("timestamp")
     )
     return (
@@ -1340,23 +1341,22 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-key c_nationkey = s_nationkey condition that makes Q5 the classic
     join-order stress test. Exact-integer revenue as in Q3 (_REV_X10K);
     nation/region broadcast, the fact-side joins shuffle on their keys."""
-    rd = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")  # noqa: E731
-    o = rd("orders").filter(
+    o = read_fixture(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
     )
     return (
-        rd("customer")
+        read_fixture(spark, sf_dir, "customer")
         .join(o, F.col("c_custkey") == F.col("o_custkey"))
-        .join(rd("lineitem"), F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(read_fixture(spark, sf_dir, "lineitem"), F.col("l_orderkey") == F.col("o_orderkey"))
         .join(
-            rd("supplier"),
+            read_fixture(spark, sf_dir, "supplier"),
             (F.col("l_suppkey") == F.col("s_suppkey"))
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
-        .join(F.broadcast(rd("nation")), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(read_fixture(spark, sf_dir, "nation")), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(
-            F.broadcast(rd("region").filter(F.col("r_name") == "ASIA")),
+            F.broadcast(read_fixture(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .groupBy("n_name")
@@ -1374,7 +1374,7 @@ ORDER BY cnt DESC, event_type LIMIT 100""",
 def top_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 semantics: top-k + '>= 0.1%% of total' threshold
     (osmio bin/osmio-changeset-tags-to-sqlite.rs:128-144)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     c = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
     total = c.agg(F.sum("cnt").alias("total"))
     return (
@@ -1478,7 +1478,7 @@ FROM events""",
 def timestamps_iso(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3/F4: epoch ↔ RFC3339 'Z' formatting (osmio utils.rs:4-15,
     xml/mod.rs:594 golden '1970-01-01T00:11:40Z')."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     return ev.select(
         "event_id",
         F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("iso"),
@@ -1504,7 +1504,7 @@ def ts_cross_format_cmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     to_epoch_number arm is the one exercised. Pure codegen expressions."""
     from osmgraft.functions.timestamps import ntz_epoch, ts_compare, ts_equal
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_fixture(spark, sf_dir, "events").select(
         "event_id",
         F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("iso"),
         (ntz_epoch(F.col("ts")) + F.col("event_id") % 3 - 1).alias("shifted"),
@@ -1524,9 +1524,7 @@ from osmgraft.functions import text as T  # noqa: E402
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents scan with the single-split parallelism guard (local test files
     are one parquet split; expression-heavy text kernels need all cores)."""
-    from osmgraft.operators.util import ensure_min_parallelism
-
-    return ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return ensure_min_parallelism(read_fixture(spark, sf_dir, "documents"))
 
 
 @register(
@@ -1919,7 +1917,7 @@ SELECT nn, n FROM (
 def _road_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_fixture(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
     seg = orders.select(
         F.col("o_orderkey").alias("src"),
@@ -2211,9 +2209,8 @@ def hits_user_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: per round two equi-join + map-side-combinable sums (Pregel
     shape), no floats, no driver loop."""
     from osmgraft.operators.graph import hits
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     edges = ev.select(
         F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("src"),
         F.concat(F.lit("t:"), F.col("event_type")).alias("dst"),
@@ -2309,7 +2306,7 @@ def _weighted_road_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from osmgraft.synth import latlon_of_key
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_fixture(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
     # coords are a closed-form projection of the key, so BOTH endpoints come
     # from the one window pass (lead key -> lead coords): zero joins where
@@ -2379,7 +2376,7 @@ def funnel_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     time — per-step equi-joins on user_id, no window over raw events, no
     per-user state. The timestamp jitter in the fixture makes ties
     impossible, so strict '>' is well-defined on both engines."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     prev = None
     counts = []
     for i, step in enumerate(_SEQ_FUNNEL_STEPS, start=1):
@@ -2428,7 +2425,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup. Two aggregations + one equi-join on user_id, all map-side
     combined; days are integer offsets from a fixed epoch so the hash gate
     never touches date formatting."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     act = ev.select(
         "user_id",
         F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")).alias("d"),
@@ -2463,7 +2460,7 @@ def value_percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort-based implementation of the same rank convention."""
     from osmgraft.operators.stats import exact_percentiles
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_fixture(spark, sf_dir, "events").select(
         "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
     return exact_percentiles(
@@ -2503,7 +2500,7 @@ def asof_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     the carried value."""
     from osmgraft.operators.asof import asof_join
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     left = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     right = ev.filter(F.col("event_type") == "view").select(
         "event_id", "user_id", "ts", "value"
@@ -2545,7 +2542,7 @@ def scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     so Catalyst reuses the exchange (plan-asserted). operators/asof.py."""
     from osmgraft.operators.asof import scd2_build
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_fixture(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
     # open intervals close at int64-max, never NULL (fetch-invariance rule)
@@ -2881,8 +2878,6 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     different candidate generators, one pair set, one hash; any recall hole
     in the pigeonhole window drops a planted pair and fails the gate.
     (ASCII projection pins semantics: Spark counts chars, DuckDB bytes.)"""
-    from osmgraft.operators.util import ensure_min_parallelism
-
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < _LEV_CAP)
     src = docs.select(
         "doc_id",
@@ -2941,10 +2936,9 @@ def soundex_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: distinct + equi-join on the 26·7³ code space — bucketed,
     never global n²; the code is pure codegen string algebra."""
     from osmgraft.operators.dedup import soundex_pairs
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).select("doc_id")
     lut = spark.createDataFrame(
         list(enumerate(_SURNAMES)), "i long, name string"
@@ -2990,7 +2984,6 @@ def dedup_lcs_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: bucketed equi-join, cost bounded by bucket size², no Python,
     no Cartesian."""
     from osmgraft.operators.dedup import lcs_pairs
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < _LCS_CAP)
     src = docs.select(
@@ -3182,8 +3175,8 @@ def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k, sequential-fold dot product (bitwise == DuckDB)."""
     from osmgraft.operators.similarity import cosine_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=10, ensure_parallelism=True)
+    emb = read_fixture(spark, sf_dir, "embeddings")
+    return cosine_topk(ensure_min_parallelism(emb), emb.filter(F.col("vec_id") < 5), k=10)
 
 
 from osmgraft.operators.similarity import sql_cosine_topk  # noqa: E402
@@ -3202,8 +3195,8 @@ def embedding_topk_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash flake here, not a wrong top-k."""
     from osmgraft.operators.similarity import cosine_topk_np
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return cosine_topk_np(emb, emb.filter(F.col("vec_id") < 5), k=10, ensure_parallelism=True)
+    emb = read_fixture(spark, sf_dir, "embeddings")
+    return cosine_topk_np(ensure_min_parallelism(emb), emb.filter(F.col("vec_id") < 5), k=10)
 
 
 REGISTRY["embedding_topk_fast"] = (
@@ -3222,11 +3215,9 @@ def embedding_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding_topk (exact; block boundaries cannot change an exact ranking)."""
     from osmgraft.operators.similarity import cosine_topk_blocked
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_fixture(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 40).cache()
-    return cosine_topk_blocked(
-        emb, q, k=10, block_rows=16, ensure_parallelism=True
-    )
+    return cosine_topk_blocked(ensure_min_parallelism(emb), q, k=10, block_rows=16)
 
 
 REGISTRY["embedding_topk_blocked"] = (
@@ -3261,9 +3252,9 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling of dedup_clusters, one hash."""
     from osmgraft.operators.similarity import semantic_dedup_clusters
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
+    emb = read_fixture(spark, sf_dir, "embeddings").cache()
     return semantic_dedup_clusters(
-        emb, threshold=0.42, block_rows=200, ensure_parallelism=True
+        ensure_min_parallelism(emb), threshold=0.42, block_rows=200
     )
 
 
@@ -3286,9 +3277,9 @@ def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin; this is the exact contract it is measured against."""
     from osmgraft.operators.similarity import cosine_neardup_pairs
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
+    emb = read_fixture(spark, sf_dir, "embeddings").cache()
     return cosine_neardup_pairs(
-        emb, threshold=0.42, block_rows=200, ensure_parallelism=True
+        ensure_min_parallelism(emb), threshold=0.42, block_rows=200
     )
 
 
@@ -3308,7 +3299,7 @@ def embedding_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the exact cosine re-rank on one hash."""
     from osmgraft.operators.similarity import lsh_ann_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_fixture(spark, sf_dir, "embeddings")
     return lsh_ann_topk(
         emb, emb.filter(F.col("vec_id") < 5), k=10, dim=64, n_planes=5, n_tables=6
     )
@@ -3336,7 +3327,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     The gate serializes the code vector to a comma string (_join_ints)."""
     from osmgraft.operators.similarity import quantize_int8
 
-    return quantize_int8(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
+    return quantize_int8(read_fixture(spark, sf_dir, "embeddings")).select(
         "vec_id", _join_ints("q8").alias("q8"), "scale_micro"
     )
 
@@ -3360,14 +3351,13 @@ def embedding_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine, so IVF is gated strictly while LSH stays recall-pinned."""
     from osmgraft.operators.similarity import ivf_anchors, ivf_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_fixture(spark, sf_dir, "embeddings")
     return ivf_topk(
-        emb,
+        ensure_min_parallelism(emb),
         emb.filter(F.col("vec_id") < 8),
         anchors=ivf_anchors(64, 16),
         nprobe=4,
         k=10,
-        ensure_parallelism=True,
     )
 
 
@@ -3390,7 +3380,7 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (d2 ASC, code ASC) tie rule."""
     from osmgraft.operators.similarity import pq_codebooks, pq_encode
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_fixture(spark, sf_dir, "embeddings")
     return pq_encode(emb, pq_codebooks(64, m=8, ksub=16)).select(
         "vec_id", _join_ints("codes").alias("codes")
     )
@@ -3406,13 +3396,12 @@ def embedding_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF (bucketed exact-rerank), PQ (compressed-domain)."""
     from osmgraft.operators.similarity import pq_adc_topk, pq_codebooks
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_fixture(spark, sf_dir, "embeddings")
     return pq_adc_topk(
-        emb,
+        ensure_min_parallelism(emb),
         emb.filter(F.col("vec_id") < 8),
         pq_codebooks(64, m=8, ksub=16),
         k=10,
-        ensure_parallelism=True,
     )
 
 
@@ -3449,7 +3438,7 @@ def _customer_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OSM-node-shaped rows derived deterministically from customer."""
     import datetime as dt
 
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    c = read_fixture(spark, sf_dir, "customer")
     k = F.col("c_custkey")
     return c.select(
         k.alias("id"),
@@ -3522,7 +3511,7 @@ def tag_ops_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4/P5/A1 tag ops (osmio string_types.rs:332-366) over JSON props."""
     from osmgraft.operators.osm import has_tag, num_tags, set_tag
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     tags = F.from_json(F.col("props"), "map<string,string>")
     return ev.select(
         "event_id",
@@ -3670,7 +3659,7 @@ def image_stats_phash_formula(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.synth import synth_textured_images
 
     n = min(
-        spark.read.parquet(f"{sf_dir}/orders.parquet").count(), _PHF_CAP
+        read_fixture(spark, sf_dir, "orders").count(), _PHF_CAP
     )
     return image_stats(synth_textured_images(spark, n))
 
@@ -3746,7 +3735,7 @@ def tile_mosaic_phash_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.raster import mosaic_tiles
     from osmgraft.synth import latlon_of_key, synth_textured_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), _PHF_CAP)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), _PHF_CAP)
     imgs = synth_textured_images(spark, n)
     idx = F.substring("image_id", 5, 9).cast("long")
     lat, lon = latlon_of_key(idx)
@@ -3823,7 +3812,7 @@ def tile_render_png_phash_z10(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tx", "ty")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    rz = render_tile_pngs(counts, z=13, parent_z=10, size=64, ensure_parallelism=True)
+    rz = render_tile_pngs(counts, z=13, parent_z=10, size=64)
     canv = rz.select(
         F.concat(
             F.lit("hz"), F.col("tx").cast("string"),
@@ -3873,7 +3862,7 @@ def tile_render_mvt_roundtrip_z10(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("tx", "ty")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    return mvt_features(render_tile_mvt(counts, z=13, parent_z=10, ensure_parallelism=True))
+    return mvt_features(render_tile_mvt(counts, z=13, parent_z=10))
 
 
 @register(
@@ -3898,7 +3887,7 @@ def audio_window_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.multimodal import audio_window_energy as awe
     from osmgraft.synth import synth_audio
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 300)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 300)
     return awe(synth_audio(spark, n), window=256, decoder="wav")
 
 
@@ -3929,7 +3918,7 @@ def audio_dft_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.multimodal import audio_dft_bins as adb
     from osmgraft.synth import synth_audio
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 300)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 300)
     return adb(synth_audio(spark, n), bins=(3, 5, 9), n_samples=1024)
 
 
@@ -3958,10 +3947,9 @@ def image_pyramid_energies_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: map-only mapInArrow, five clamped gathers + reduces per
     chunk, no shuffle."""
     from osmgraft.operators.multimodal import image_pyramid_energies
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 250)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 250)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_pyramid_energies(imgs)
 
@@ -3992,10 +3980,9 @@ def image_brief_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: map-only extraction; one shuffle on the 16-bit descriptor;
     hot-bucket skew is the standard banding trade (documented)."""
     from osmgraft.operators.multimodal import brief_match_pairs
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_textured_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 250)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 250)
     return brief_match_pairs(ensure_min_parallelism(synth_textured_images(spark, n)))
 
 
@@ -4019,10 +4006,9 @@ def image_colorfulness_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: map-only mapInArrow, no shuffle."""
     from osmgraft.operators.multimodal import image_colorfulness
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 250)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 250)
     return image_colorfulness(ensure_min_parallelism(synth_formula_images(spark, n)))
 
 
@@ -4046,10 +4032,9 @@ def image_blur_metric_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: map-only mapInArrow, four shifted subtractions."""
     from osmgraft.operators.multimodal import image_blur_metric
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 250)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 250)
     return image_blur_metric(ensure_min_parallelism(synth_formula_images(spark, n)))
 
 
@@ -4074,7 +4059,7 @@ def audio_clipping_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.multimodal import audio_clipping_stats
     from osmgraft.synth import synth_audio
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 300)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 300)
     return audio_clipping_stats(synth_audio(spark, n))
 
 
@@ -4103,7 +4088,7 @@ def audio_onset_flux_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.multimodal import audio_onset_flux
     from osmgraft.synth import synth_audio
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 300)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 300)
     return audio_onset_flux(synth_audio(spark, n))
 
 
@@ -4132,7 +4117,7 @@ def video_frame_luma(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.multimodal import video_frame_sample
     from osmgraft.synth import synth_videos
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 300)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 300)
     frames = video_frame_sample(synth_videos(spark, n), frames_per_clip=3)
     return frames.select("media_id", "frame_idx", "luma_sum")
 
@@ -4164,7 +4149,7 @@ def video_scene_cuts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.multimodal import video_scene_cuts
     from osmgraft.synth import synth_videos
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 300)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 300)
     return video_scene_cuts(synth_videos(spark, n))
 
 
@@ -4228,7 +4213,7 @@ def image_roundtrip_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from osmgraft.synth import synth_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 2000)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 2000)
     imgs = synth_images(spark, n)
     # deterministic path + overwrite: repeated gate/plan runs reuse one dir
     # instead of leaking a fresh mkdtemp per call
@@ -4287,7 +4272,7 @@ def image_header_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.multimodal import header_scan
     from osmgraft.synth import synth_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 2000)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 2000)
     hs = header_scan(synth_images(spark, n))
     # headerless formats report -1 dims, never NULL (fetch-invariance rule)
     return hs.withColumn(
@@ -4318,7 +4303,7 @@ def checkpointed_pip_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir = tempfile.mkdtemp(prefix="osmgraft_ckpt_in_")
     out_dir = tempfile.mkdtemp(prefix="osmgraft_ckpt_out_")
     (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_fixture(spark, sf_dir, "orders")
         .repartition(6, "o_orderkey")
         .write.mode("overwrite")
         .parquet(in_dir)
@@ -4326,7 +4311,7 @@ def checkpointed_pip_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def transform(orders: DataFrame) -> DataFrame:
         joined = pip_join(
-            points_projection(orders), ADMIN_BOUNDARIES, how="inner", ensure_parallelism=True
+            points_projection(ensure_min_parallelism(orders)), ADMIN_BOUNDARIES, how="inner"
         )
         return (
             joined.select(
@@ -4368,7 +4353,7 @@ def way_nodes_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~8x ways); the join shuffles both sides on node id — at 100 TB this is
     the classic sort-merge case, and Parquet min/max on the id-sorted node
     table prunes row groups for selective way subsets."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_fixture(spark, sf_dir, "orders")
     pts = points_from_orders(spark, sf_dir)
     ways = orders.groupBy(F.col("o_custkey").alias("way_id")).agg(
         F.sort_array(F.collect_list("o_orderkey")).alias("nodes")
@@ -4419,8 +4404,7 @@ def knn_h3_rings_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = points_from_orders(spark, sf_dir)
     return knn_h3_ball(
-        pts, _knn_queries_df(spark, sf_dir), k=5, radius7=25_000_000, res=4,
-        ensure_parallelism=True,
+        pts, _knn_queries_df(spark, sf_dir), k=5, radius7=25_000_000, res=4
     ).select("query_id", "neighbor_id", "dist2", "rank")
 
 
@@ -4450,7 +4434,7 @@ def knn_radius2_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = points_from_orders(spark, sf_dir)
     return knn_within_radius(
-        pts, _knn_queries_df(spark, sf_dir), k=5, radius_cells=2, ensure_parallelism=True
+        pts, _knn_queries_df(spark, sf_dir), k=5, radius_cells=2
     ).select(
         "query_id", "neighbor_id", "dist2", F.col("rank").cast("int").alias("rank")
     )
@@ -4509,11 +4493,10 @@ def snap_to_road(spark: SparkSession, sf_dir: str) -> DataFrame:
     one exact formula (snap_formula_sql, consumed verbatim by BOTH engines),
     one hash."""
     from osmgraft.operators.snap import snap_points_to_segments
-    from osmgraft.operators.util import ensure_min_parallelism
 
     k = F.col("o_orderkey")
     orders = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_fixture(spark, sf_dir, "orders")
     ).select(k.alias("k"))
     kk = F.col("k")
     points = orders.filter(kk % 15 == 0).select(
@@ -4586,11 +4569,10 @@ def road_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (crossing_formula_sql) — two candidate generators, one formula, one
     hash."""
     from osmgraft.operators.crossings import segment_crossings
-    from osmgraft.operators.util import ensure_min_parallelism
 
     k = F.col("o_orderkey")
     orders = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_fixture(spark, sf_dir, "orders")
     ).select(k.alias("k"))
     kk = F.col("k")
     segs = orders.filter(kk % 4 == 1).select(
@@ -4638,11 +4620,10 @@ def poly_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bbox prefilter that overlap provably implies — different candidate
     generators, the identical SAT text (sat_formula_sql), one hash."""
     from osmgraft.operators.overlap import rhombus_overlap_pairs
-    from osmgraft.operators.util import ensure_min_parallelism
 
     k = F.col("o_orderkey")
     polys = (
-        ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+        ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
         .filter(k % 6 == 2)
         .select(
             k.alias("poly_id"),
@@ -4682,13 +4663,12 @@ def clip_segments_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-forces the same ranges via generate_series — two candidate wirings,
     byte-identical step formulas (clip_steps_sql), one hash."""
     from osmgraft.operators.clip import clip_segments_to_tiles
-    from osmgraft.operators.util import ensure_min_parallelism
 
     k = F.col("o_orderkey")
     x0 = (k * 48611) % 262145
     y0 = (k * 59999) % 262145
     segs = (
-        ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+        ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
         .filter(k % 9 == 4)
         .select(
             k.alias("way_id"),
@@ -4727,10 +4707,6 @@ def mvt_lines_roundtrip_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.raster import mvt_line_features, render_tile_mvt_lines
 
     clipped = clip_segments_z6(spark, sf_dir)
-    # NOTE: ensure_parallelism deliberately NOT set — A/B at sf0.1 measured
-    # the extra packed-array shuffle costing more than the serialized encode
-    # saves (3.3 s vs 4.8 s); the segs payload is heavy, unlike the terrain
-    # case where the packed groups are tiny
     tiles_df = render_tile_mvt_lines(clipped, z=6)
     return mvt_line_features(tiles_df).select(
         "way_id", "seg_idx", "tx", "ty",
@@ -5103,9 +5079,8 @@ def trip_segments_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine; all-integer, hash-gated against the same two windows in
     DuckDB."""
     from osmgraft.operators.trajectory import trip_segments
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     track = o.selectExpr(
         "o_custkey % 199 AS ent",
         "o_orderkey AS seq",
@@ -5128,9 +5103,8 @@ def stay_points_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     and integer bbox centers — 'places visited' for POI inference. Same
     single ent-shuffle; hash-gated against the windowed twin."""
     from osmgraft.operators.trajectory import stay_points
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     track = o.selectExpr(
         "o_custkey % 199 AS ent",
         "o_orderkey AS seq",
@@ -5154,9 +5128,8 @@ def od_matrix_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     trip_segments (endpoints via min_by/max_by inside the trip aggregation,
     no extra window); hash-gated against arg_min/arg_max in DuckDB."""
     from osmgraft.operators.trajectory import od_matrix
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     track = o.selectExpr(
         "o_custkey % 199 AS ent",
         "o_orderkey AS seq",
@@ -5188,7 +5161,7 @@ def snapshot_diff_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     still drives modify detection internally."""
     from osmgraft.operators.osm import osc_apply, snapshot_diff
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     base = ev.select(F.col("event_id").alias("id"), "event_type", "value")
     mods = ev.filter(F.col("event_id") % 5 == 0).select(
         F.col("event_id").alias("id"),
@@ -5241,10 +5214,9 @@ def expire_tiles_z12(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin states the dirty set in closed form from the change-set
     definition."""
     from osmgraft.operators.osm import expire_tiles
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     k = F.col("event_id")
     olat, olon = latlon_of_key(k)
     mlat, mlon = latlon_of_key(k * 31 + 7)
@@ -5311,7 +5283,7 @@ def image_geo_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan in production."""
     from osmgraft.synth import synth_images
 
-    n = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    n = read_fixture(spark, sf_dir, "orders").count()
     imgs = synth_images(spark, n, with_pixels=False)
     pat = r"photo at (-?\d+\.\d{7}),(-?\d+\.\d{7}) "
     parsed = imgs.select(
@@ -5328,7 +5300,7 @@ def image_geo_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = parsed.filter(
         (F.col("plat7") == F.col("lat7")) & (F.col("plon7") == F.col("lon7"))
     ).select("point_id", "lat7", "lon7")
-    joined = pip_join(pts, ADMIN_BOUNDARIES, how="inner", ensure_parallelism=True)
+    joined = pip_join(pts, ADMIN_BOUNDARIES, how="inner")
     return (
         joined.select(
             "boundary_id",
@@ -5363,7 +5335,7 @@ def kmv_distinct_users_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.stats import kmv_distinct
     from osmgraft.synth import latlon_of_key
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     lat, lon = latlon_of_key(F.col("event_id"))
     rows = ev.select(
         "user_id",
@@ -5469,7 +5441,7 @@ def knox_space_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.pointpat import knox
     from osmgraft.synth import latlon_of_key
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = read_fixture(spark, sf_dir, "orders")
     lat, lon = latlon_of_key(F.col("o_orderkey"))
     pts = o.select(
         F.col("o_orderkey").alias("pid"),
@@ -5502,10 +5474,9 @@ def lang_source_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: three category-domain hash aggs + broadcast dimension
     joins — never touches row-count-sized state."""
     from osmgraft.operators.stats import contingency_assoc
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).select("lang", "source")
     return contingency_assoc(docs, "lang", "source")
 
@@ -5534,9 +5505,8 @@ def benford_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: one 9-bucket map-side-combinable agg + a 1-row broadcast."""
     from osmgraft.operators.stats import benford_deviation
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    li = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/lineitem.parquet"))
+    li = ensure_min_parallelism(read_fixture(spark, sf_dir, "lineitem"))
     cents = li.select(
         F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("cents")
     )
@@ -5571,10 +5541,9 @@ def ams_f2_users_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch width is columnar), one per-(tile,user) count agg; no joins
     beyond the final 1:1."""
     from osmgraft.operators.stats import ams_f2
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     rows = ev.select(
         "user_id",
@@ -5609,9 +5578,8 @@ def allen_user_type_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: within-user self-join on the per-(user, type) AGGREGATE
     (≤C(types,2) pairs per user), codegen CASE, no floats."""
     from osmgraft.operators.asof import allen_relations
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     iv = ev.groupBy("user_id", "event_type").agg(
         F.floor(F.unix_timestamp(F.min("ts"))).cast("long").alias("s"),
         F.floor(F.unix_timestamp(F.max("ts"))).cast("long").alias("e"),
@@ -5679,7 +5647,7 @@ def hll_distinct_users_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.stats import hll_distinct
     from osmgraft.synth import latlon_of_key
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     lat, lon = latlon_of_key(F.col("event_id"))
     rows = ev.select(
         "user_id",
@@ -5706,7 +5674,7 @@ def kmv_intersect_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate; everything after the sketch is sketch-sized (k rows per group)."""
     from osmgraft.operators.stats import kmv_intersect
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     return kmv_intersect(ev.select("event_type", "user_id"), "event_type", "user_id", k=32)
 
 
@@ -5740,7 +5708,7 @@ def colocation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tile/epoch text."""
     from osmgraft.synth import latlon_of_key
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     lat, lon = latlon_of_key(F.col("event_id"))
     v = ev.select(
         "user_id",
@@ -5792,7 +5760,7 @@ def geojson_roundtrip_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from osmgraft.synth import latlon_of_key
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = read_fixture(spark, sf_dir, "orders")
     lat, lon = latlon_of_key(F.col("o_orderkey"))
     pts = o.select(
         (F.col("o_custkey") % 199).alias("ent"),
@@ -5851,7 +5819,7 @@ def polyline_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.functions.polyline import sql_chunks, sql_round_e5, sql_zigzag
     from osmgraft.synth import latlon_of_key
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = read_fixture(spark, sf_dir, "orders")
     lat, lon = latlon_of_key(F.col("o_orderkey"))
     pts = o.select(
         (F.col("o_custkey") % 199).alias("ent"),
@@ -5972,7 +5940,7 @@ def exif_gps_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.multimodal import exif_gps
     from osmgraft.synth import synth_exif_images
 
-    n = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    n = read_fixture(spark, sf_dir, "orders").count()
     imgs = synth_exif_images(spark, n)
     parsed = exif_gps(imgs, passthrough=("lat7", "lon7"))
     pts = parsed.filter(
@@ -6127,7 +6095,7 @@ def image_augment_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.multimodal import image_augment, roundtrip_fidelity
     from osmgraft.synth import synth_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 800)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 800)
     imgs = synth_images(spark, n).filter(F.col("fmt").isin("raw", "ppm", "png"))
     chain = image_augment(
         image_augment(
@@ -6164,7 +6132,7 @@ def image_patches_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from osmgraft.synth import synth_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 800)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 800)
     imgs = synth_images(spark, n).filter(F.col("fmt").isin("raw", "ppm", "png"))
     back = unpatchify(image_patches(imgs, patch=16))
     return roundtrip_fidelity(imgs, back).select(
@@ -6191,7 +6159,7 @@ def tile_render_mvt_z10(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tx", "ty")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    return render_tile_mvt(counts, z=13, parent_z=10, ensure_parallelism=True).select(
+    return render_tile_mvt(counts, z=13, parent_z=10).select(
         "z", "tx", "ty", F.length("mvt").alias("mvt_bytes"), "n_features"
     )
 
@@ -6216,7 +6184,7 @@ def tile_render_png_z10(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     # PNG bytes vary legally with zlib version: expose the stable columns
-    return render_tile_pngs(counts, z=13, parent_z=10, size=64, ensure_parallelism=True).select(
+    return render_tile_pngs(counts, z=13, parent_z=10, size=64).select(
         "z", "tx", "ty", F.length("png").alias("png_bytes"), "n_points"
     )
 
@@ -6255,7 +6223,7 @@ def way_lengths_geodesic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from osmgraft.geom import haversine_m_col
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
     pts = points_from_orders(spark, sf_dir)
@@ -6311,7 +6279,7 @@ def stream_windowed_counts_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = tempfile.mkdtemp(prefix="og_wec_src_")
     ckpt = tempfile.mkdtemp(prefix="og_wec_ck_")
-    spark.read.parquet(f"{sf_dir}/events.parquet").write.mode("overwrite").parquet(src)
+    read_fixture(spark, sf_dir, "events").write.mode("overwrite").parquet(src)
     stream = read_stream(
         spark, src,
         "event_id long, ts timestamp, user_id long, event_type string, "
@@ -6348,7 +6316,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = tempfile.mkdtemp(prefix="og_dedup_src_")
     ckpt = tempfile.mkdtemp(prefix="og_dedup_ck_")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     ev.unionByName(ev).write.mode("overwrite").parquet(src)
     stream = read_stream(
         spark, src,
@@ -6389,7 +6357,7 @@ def stream_interval_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = tempfile.mkdtemp(prefix="og_ssj_src_")
     ckpt = tempfile.mkdtemp(prefix="og_ssj_ck_")
-    spark.read.parquet(f"{sf_dir}/events.parquet").write.mode("overwrite").parquet(src)
+    read_fixture(spark, sf_dir, "events").write.mode("overwrite").parquet(src)
     schema = (
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string"
@@ -6437,7 +6405,7 @@ def osc_apply_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-free."""
     from osmgraft.operators.osm import osc_apply
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     base = ev.select(F.col("event_id").alias("id"), "event_type", "value")
     mods = ev.filter(F.col("event_id") % 5 == 0).select(
         F.col("event_id").alias("id"),
@@ -6558,7 +6526,7 @@ def solar_hour_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: one equi-join + a 24-bucket map-side-combinable agg."""
     pts = points_from_orders(spark, sf_dir)
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = read_fixture(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("point_id"),
         F.floor(F.unix_timestamp("o_orderdate")).cast("long").alias("epoch"),
     )
@@ -6614,7 +6582,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     here for the classic formulation)."""
     from pyspark.sql import Window as W
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = read_fixture(spark, sf_dir, "orders")
     rf = o.groupBy(F.col("o_custkey").alias("cust")).agg(
         F.count(F.lit(1)).cast("long").alias("f"),
         F.sum(F.floor(F.col("o_totalprice") * 100).cast("long"))
@@ -6732,7 +6700,7 @@ def linkage_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: blocked self-join (never cross-block), map-side pattern
     counts — the soundex_name_pairs discipline with scoring on top."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    c = read_fixture(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("id"),
         F.col("c_nationkey").alias("blk"),
         F.col("c_mktsegment").alias("seg"),
@@ -6795,7 +6763,7 @@ def basket_lift_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: distinct-pair explode per order (bounded by basket size²),
     map-side-combinable counts, two broadcast-able item-count joins."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_fixture(spark, sf_dir, "lineitem")
     bk = li.select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
     ).distinct()
@@ -6856,7 +6824,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: one equi-join on user (the inequality is a post-filter, so
     this is a hash join, not a range scan), one max_by-shaped window per
     conversion — per-user skew bounded by that user's event count."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_fixture(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         "event_type",
@@ -6913,11 +6881,11 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = tempfile.mkdtemp(prefix="og_sse_src_")
     ckpt = tempfile.mkdtemp(prefix="og_sse_ck_")
-    spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    read_fixture(spark, sf_dir, "events").select(
         "event_id", "user_id"
     ).write.mode("overwrite").parquet(src)
     stream = read_stream(spark, src, "event_id long, user_id long")
-    dim = spark.read.parquet(f"{sf_dir}/nation.parquet").select(
+    dim = read_fixture(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("long").alias("nk"), "n_name"
     )
     joined = stream.join(
@@ -7050,7 +7018,7 @@ def relation_members_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Relations derive deterministically from orders (synth.rel_obj shape):
     bucket b = o_custkey % 97, members = the bucket's ways + one
     admin_centre node (the bucket's min order key)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", (F.col("o_custkey") % 97).alias("b")
     )
     pts = points_from_orders(spark, sf_dir)
@@ -7294,12 +7262,20 @@ def all_queries() -> dict[str, QueryFn]:
 
 
 def all_oracles() -> dict[str, str]:
+    """Oracle SQL per gate. A callable oracle that raises fails its own gate
+    only: its SQL becomes a DuckDB ``error()`` call carrying the message."""
     out: dict[str, str] = {}
     for k, (fn, o) in REGISTRY.items():
         if o is None:
             continue
         if callable(o):
-            o = o()
+            try:
+                o = o()
+            except Exception as ex:  # noqa: BLE001 — one gate, not the registry
+                log.warning("oracle for %s failed to build", k, exc_info=True)
+                msg = f"oracle build failed: {type(ex).__name__}: {ex}"
+                out[k] = "SELECT error('{}')".format(msg.replace("'", "''"))
+                continue
             REGISTRY[k] = (fn, o)  # cache the resolved SQL
         out[k] = o
     return out
@@ -7317,7 +7293,7 @@ def sessionize_batch_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB window-SQL twin with integer-microsecond outputs."""
     from osmgraft.streaming.incremental import sessionize_batch
 
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = read_fixture(spark, sf_dir, "events")
     return sessionize_batch(events, gap_minutes=30)
 
 
@@ -7414,7 +7390,7 @@ def cm_heavy_hitters_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB heavy-hitter pre-pass shape. Merge law pinned in pytest."""
     from osmgraft.operators.stats import cm_heavy_hitters
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     return cm_heavy_hitters(ev.select("user_id"), "user_id", threshold=70, d=4, w=64)
 
 
@@ -7485,10 +7461,9 @@ def image_box_filter_5x3(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums windows directly — decode, SAT algebra, window indexing and the
     image_id join are all on the hash. Map-only: no shuffle at any width."""
     from osmgraft.operators.multimodal import image_box_filter
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 400)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 400)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_box_filter(imgs, box=5, stride=3)
 
@@ -7508,9 +7483,8 @@ def point_along_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, division never taken. One ent-shuffle (lead + 2 running sums
     share one window sort) + a map-side min(struct) pick."""
     from osmgraft.operators.trajectory import point_along
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     track = o.selectExpr(
         "o_custkey % 199 AS ent",
         "o_orderkey AS seq",
@@ -7539,10 +7513,9 @@ def image_quantize_rgb332_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     regenerates formula pixels and applies the identical integer
     quantization text."""
     from osmgraft.operators.multimodal import image_quantize_rgb332
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 400)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 400)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_quantize_rgb332(imgs)
 
@@ -7592,9 +7565,8 @@ def movement_rose_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined counts; hash-gated against the identical CASE-text
     twin at both SFs."""
     from osmgraft.operators.trajectory import movement_rose
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     track = o.selectExpr(
         "o_custkey % 199 AS ent",
         "o_orderkey AS seq",
@@ -7613,10 +7585,9 @@ def tile_mosaic_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
     design (pixels are Philox — no SQL twin); canvas CRCs + local
     reconstruction equality are pinned in test_mosaic.py."""
     from osmgraft.operators.raster import mosaic_tiles
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 1500)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 1500)
     imgs = ensure_min_parallelism(synth_images(spark, n))
     return mosaic_tiles(imgs, z=5).select("tx", "ty", "n_images", "mosaic_crc")
 
@@ -7642,9 +7613,8 @@ def triangle_counts_covisit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the naive a<b<c three-way self-join. Different algorithms, identical
     exact counts, both SFs."""
     from osmgraft.operators.graph import triangle_counts
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     edges = o.selectExpr(
         "o_orderkey % 211 AS src",
         "(o_orderkey div 211) % 211 AS dst",
@@ -7672,9 +7642,8 @@ def covisit_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: triangle kernel + one degree agg."""
     from osmgraft.operators.graph import transitivity
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     edges = o.selectExpr(
         "o_orderkey % 211 AS src",
         "(o_orderkey div 211) % 211 AS dst",
@@ -7708,9 +7677,8 @@ def covisit_ktruss_4(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB, per round: oriented wedge join + closing equi-join +
     map-side count — the triangle kernel's skew bound applies."""
     from osmgraft.operators.graph import ktruss
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     edges = o.selectExpr(
         "o_orderkey % 211 AS src", "(o_orderkey div 211) % 211 AS dst"
     )
@@ -7737,10 +7705,9 @@ def profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot. Oracle: per-column UNION ALL — a different plan shape
     computing the same profile."""
     from osmgraft.operators.stats import profile_columns
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     )
     return profile_columns(docs, _PROFILE_COLS)
 
@@ -7765,10 +7732,9 @@ def compaction_plan_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-count-sized so this is the bounded-metadata shape a compactor
     actually runs. Output: per-bin (source, bin, n_files, bin_bytes)."""
     from osmgraft.operators.packing import compaction_plan
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).selectExpr("doc_id AS file_id", "source", "n_chars AS bytes")
     return compaction_plan(docs, 4096, ["source"])
 
@@ -7815,10 +7781,9 @@ def geo_phash_neardup_z7(spark: SparkSession, sf_dir: str) -> DataFrame:
     with an explicit same-tile predicate — the tile restriction is
     load-bearing on both sides."""
     from osmgraft.operators.multimodal import phash_near_dup_pairs
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), _HNP_CAP)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), _HNP_CAP)
     i = F.col("id")
     hash_src = F.when(((i % 50).isin(49, 24)) & (i > 0), i - 1).otherwise(i)
     loc_src = F.when((i % 50 == 49) & (i > 0), i - 1).otherwise(i)
@@ -7885,10 +7850,9 @@ def viterbi_match_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from osmgraft.operators.snap import viterbi_match
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     lat, lon = latlon_of_key(F.col("o_orderkey"))
     pts = (
         o.select(
@@ -7932,10 +7896,9 @@ def auc_lang_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the AGGREGATE, one group rollup — the quality-filter
     calibration loop a curation pipeline runs per strata."""
     from osmgraft.operators.ranking import auc_exact
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).select(
         "source",
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
@@ -7961,9 +7924,8 @@ def hausdorff_pairs_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (explode point pairs, group-min, group-max): different plan, same
     integers."""
     from osmgraft.operators.trajectory import hausdorff_pairs
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     track = o.selectExpr(
         "o_custkey % 199 AS ent",
         "o_orderkey AS seq",
@@ -7991,9 +7953,8 @@ def frechet_pairs_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash.  By Fréchet ≥ Hausdorff the pair yields a pinned cross-query
     invariant (tests)."""
     from osmgraft.operators.trajectory import frechet_pairs
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     track = o.selectExpr(
         "o_custkey % 199 AS ent",
         "o_orderkey AS seq",
@@ -8021,9 +7982,8 @@ def dtw_pairs_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithms, one hash.  DTW ≥ Fréchet ≥ Hausdorff on shared pairs is a
     pinned cross-query invariant (tests/test_trajectory.py)."""
     from osmgraft.operators.trajectory import dtw_pairs
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     track = o.selectExpr(
         "o_custkey % 199 AS ent",
         "o_orderkey AS seq",
@@ -8052,10 +8012,9 @@ def image_rle_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     RELATIONALLY (gaps-and-islands) — decode, luma, run segmentation and
     lengths are all on the hash. Map-only, no shuffle."""
     from osmgraft.operators.multimodal import image_rle
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 400)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 400)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_rle(imgs)
 
@@ -8096,9 +8055,8 @@ def kcore20_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained MATERIALIZED CTEs (plain CTEs re-inline ~3^rounds times in
     DuckDB 1.0 — measured minutes vs milliseconds)."""
     from osmgraft.operators.graph import kcore
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     half = o.selectExpr(
         "o_orderkey % 2003 AS src", "(o_orderkey div 2003) % 2003 AS dst"
     ).filter("src <> dst")
@@ -8161,10 +8119,9 @@ def mad_nchars_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile_disc), deviation join broadcast. Twin: DuckDB native
     quantile_disc twice — an independent implementation."""
     from osmgraft.operators.stats import mad_exact
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).select("source", "n_chars")
     return mad_exact(docs, ["source"], "n_chars")
 
@@ -8194,10 +8151,9 @@ def image_otsu_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode, histogram, cumulative algebra and tie rule are all on the
     hash."""
     from osmgraft.operators.multimodal import image_otsu
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 400)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 400)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_otsu(imgs)
 
@@ -8220,10 +8176,9 @@ def image_cc_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive closure), putting decode, thresholding, adjacency and
     labeling all on the hash."""
     from osmgraft.operators.multimodal import image_cc
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 250)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 250)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_cc(imgs)
 
@@ -8245,10 +8200,9 @@ def image_blob_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain relational aggregates — bbox, centroid sums and perimeter all on
     the hash."""
     from osmgraft.operators.multimodal import image_blob_props as ibp
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 250)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 250)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return ibp(imgs)
 
@@ -8271,10 +8225,9 @@ def image_distance_transform_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     |dx|+|dy| via an all-pairs join) — so the exactness of the two-pass
     argument itself is gated."""
     from osmgraft.operators.multimodal import image_distance_transform
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 250)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 250)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_distance_transform(imgs)
 
@@ -8296,10 +8249,9 @@ def image_gradient_rose_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     shifted coordinates — decode, stencil, sector rule and energy sums all
     on one hash."""
     from osmgraft.operators.multimodal import image_gradient_rose
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 250)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 250)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_gradient_rose(imgs)
 
@@ -8321,10 +8273,9 @@ def image_hist_equalize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling.  Twin rebuilds the CDF relationally from closed-form
     pixels.  100 TB: map-only mapInArrow."""
     from osmgraft.operators.multimodal import image_hist_equalize
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 250)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 250)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_hist_equalize(imgs)
 
@@ -8346,10 +8297,9 @@ def image_glcm_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution).  Twin replays the histogram relationally from the
     closed-form pixels.  100 TB: map-only mapInArrow."""
     from osmgraft.operators.multimodal import image_glcm_features
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 250)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 250)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_glcm_features(imgs)
 
@@ -8370,10 +8320,9 @@ def image_dither_bayer_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (error diffusion is a sequential scan; this is one comparison per
     pixel).  Twin replays the lattice from the closed-form pixels."""
     from osmgraft.operators.multimodal import image_dither_bayer
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 250)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 250)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_dither_bayer(imgs)
 
@@ -8398,10 +8347,9 @@ def image_lbp_uniform_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: map-only mapInArrow, no shuffle."""
     from osmgraft.operators.multimodal import image_lbp_uniform
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 250)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 250)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_lbp_uniform(imgs)
 
@@ -8422,10 +8370,9 @@ def image_hough_line_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the formula pixels and picks with the shared tie rule — decode,
     thresholding, the vote algebra and the argmax are all on the hash."""
     from osmgraft.operators.multimodal import image_hough_argmax
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 250)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 250)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_hough_argmax(imgs)
 
@@ -8483,7 +8430,7 @@ def autocorr_lag24(spark: SparkSession, sf_dir: str) -> DataFrame:
     densified.  The DuckDB twin DOES densify (fixed-ceiling range + left
     join) and takes the definition sums — the collapse algebra itself is
     on the hash.  autocorr = num/den is left as an exact rational."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     counts = (
         ev.select(
             "event_type",
@@ -8509,9 +8456,8 @@ def cusum_bursts_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a recursive CTE, so the gap algebra itself is on the hash. One
     hash agg + one key-shuffle window over the aggregate."""
     from osmgraft.operators.stats import cusum_bursts
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     counts = (
         ev.select(
             "event_type",
@@ -8539,10 +8485,9 @@ def image_template_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     Twin: relational offset cross-join + grouped (I-T)^2 sums — window
     addressing, SSD algebra and tie rule on the hash."""
     from osmgraft.operators.multimodal import image_template_match as itm
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 300)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 300)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return itm(imgs)
 
@@ -8560,7 +8505,7 @@ def stream_cusum_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from osmgraft.streaming.incremental import read_stream, run_available_now, stream_cusum
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     counts = (
         ev.select(
             F.col("event_type").alias("key"),
@@ -8636,7 +8581,7 @@ def stream_sessionize_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = tempfile.mkdtemp(prefix="og_sw_src_")
     ckpt = tempfile.mkdtemp(prefix="og_sw_ck_")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_fixture(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id"
     )
     mx = ev.agg(F.max("ts")).first()[0]
@@ -8714,7 +8659,7 @@ def way_area_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from osmgraft.operators.osm import way_area_centroid as wac
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
     pts = points_from_orders(spark, sf_dir)
@@ -8767,10 +8712,9 @@ def image_harris_corner(spark: SparkSession, sf_dir: str) -> DataFrame:
     response algebra and the (r20 DESC, y, x) tie rule are all hash-load-
     bearing."""
     from osmgraft.operators.multimodal import image_harris
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 300)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 300)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_harris(imgs)
 
@@ -8792,7 +8736,7 @@ def audio_active_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.multimodal import audio_active_segments
     from osmgraft.synth import synth_audio
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 300)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 300)
     return audio_active_segments(synth_audio(spark, n))
 
 
@@ -8825,7 +8769,7 @@ def trend_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from osmgraft.functions.timestamps import ntz_epoch
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     daily = (
         ev.select(
             "event_type",
@@ -8855,8 +8799,7 @@ def pip_inner_intexact(spark: SparkSession, sf_dir: str) -> DataFrame:
     flips a gate."""
     pts = points_from_orders(spark, sf_dir)
     return pip_join(
-        pts, ADMIN_BOUNDARIES, how="inner", ensure_parallelism=True,
-        refine="parity_int",
+        pts, ADMIN_BOUNDARIES, how="inner", refine="parity_int"
     ).select("point_id", "boundary_id")
 
 
@@ -8885,7 +8828,7 @@ def track_tile_path_z12(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag-filter-renumber pipeline."""
     from osmgraft.operators.trajectory import tile_path
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_fixture(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("ent"), F.col("o_orderkey").alias("seq")
     )
     pts = points_from_orders(spark, sf_dir)
@@ -8934,10 +8877,9 @@ def image_ssim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow kernel; the DuckDB twin regenerates both luma planes from the
     formula and re-derives the identical factor algebra."""
     from osmgraft.operators.multimodal import image_ssim_global
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 300)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 300)
     imgs = synth_formula_images(spark, n).withColumn(
         "idx", F.substring("image_id", 5, 9).cast("long")
     )
@@ -8969,7 +8911,7 @@ def embedding_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     underneath)."""
     from osmgraft.operators.similarity import rademacher_project
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_fixture(spark, sf_dir, "embeddings")
     return rademacher_project(emb, dim=64, out_dim=8)
 
 
@@ -9047,7 +8989,7 @@ def user_active_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep."""
     from osmgraft.operators.stats import interval_union
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_fixture(spark, sf_dir, "events").select(
         "user_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("s"),
         (F.unix_micros(F.col("ts").cast("timestamp")) + 300_000_000).alias("e"),
@@ -9088,7 +9030,7 @@ def video_temporal_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.multimodal import video_temporal_signature
     from osmgraft.synth import synth_videos
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 300)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 300)
     return video_temporal_signature(synth_videos(spark, n))
 
 
@@ -9145,7 +9087,7 @@ def boundary_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pts = points_from_orders(spark, sf_dir)
     counts = (
-        pip_join(pts, ADMIN_BOUNDARIES, how="inner", ensure_parallelism=True)
+        pip_join(pts, ADMIN_BOUNDARIES, how="inner")
         .groupBy("boundary_id")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -9349,7 +9291,7 @@ def pii_luhn_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     unredacted (false-positive control)."""
     from osmgraft.functions.text import luhn_valid
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_fixture(spark, sf_dir, "documents").select(
         "doc_id",
         F.lpad(
             ((F.col("doc_id") * 7919 + 123456789) % F.lit(10_000_000_000_000_000))
@@ -9404,7 +9346,7 @@ def way_area_geodesic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.geom import sql_spherical_tri_excess
 
     ex = sql_spherical_tri_excess(("la0", "lo0"), ("la1", "lo1"), ("la2", "lo2"))
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
     pts = points_from_orders(spark, sf_dir)
@@ -9469,7 +9411,7 @@ def trailing_events_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exchange on user_id; twin is the identical RANGE frame in DuckDB."""
     from pyspark.sql import Window as W
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_fixture(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
@@ -9498,7 +9440,7 @@ def pivot_type_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     compiles it to ONE aggregation with conditional counts — exactly the
     FILTER-clause twin.  Missing combinations must surface as 0 (pivot
     count yields null — coalesced explicitly, a classic reshape bug)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_fixture(spark, sf_dir, "events")
     types = ["click", "error", "purchase", "signup", "view"]
     wide = (
         ev.groupBy("user_id")
@@ -9551,7 +9493,7 @@ def ntile_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     is pinned by the shared total order."""
     from pyspark.sql import Window as W
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_fixture(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         F.floor(F.col("value") * 100).cast("long").alias("v"),
@@ -9605,10 +9547,9 @@ def tile_trend_mk_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: the i<j pair join runs on the per-tile-day AGGREGATE
     (≤435 pairs per tile at 30 days), never the raw events; zero IEEE."""
     from osmgraft.operators.stats import mann_kendall
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     counts = (
         ev.select(
@@ -9718,13 +9659,13 @@ def embedding_matryoshka_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     index to truncated vectors."""
     from osmgraft.operators.similarity import cosine_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_fixture(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
     emb_t = emb.select(
         "vec_id", F.slice("embedding", 1, _MRL_DIMS).alias("embedding")
     )
     q_t = emb_t.filter(F.col("vec_id") < 8)
-    full = cosine_topk(emb, q, k=10, ensure_parallelism=True).select(
+    full = cosine_topk(ensure_min_parallelism(emb), q, k=10).select(
         "query_id", "neighbor_id"
     )
     trunc = cosine_topk(emb_t, q_t, k=10).select(
@@ -9768,12 +9709,12 @@ def ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups — never a full recompute."""
     from osmgraft.streaming.incremental import ivm_join_counts
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_fixture(spark, sf_dir, "events").select(
         F.col("user_id").alias("k"),
         (F.col("user_id") % 25).alias("grp"),
         (F.dayofmonth("ts")).alias("dom"),
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = read_fixture(spark, sf_dir, "orders").select(
         (F.col("o_custkey") % 1000).alias("k"),
         F.dayofmonth("o_orderdate").alias("dom"),
     )
@@ -9822,7 +9763,7 @@ def churn_life_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the duration domain (≤ days, tiny)."""
     from pyspark.sql import Window as W
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_fixture(spark, sf_dir, "events").select(
         "user_id", F.floor(F.unix_timestamp("ts") / 3600).cast("long").alias("d")
     )
     u = ev.groupBy("user_id").agg(
@@ -9896,10 +9837,9 @@ def tile_naive_forecast_z4(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sort) + one agg."""
     from pyspark.sql import Window as W
 
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     c = (
         ev.select(
@@ -9979,10 +9919,9 @@ def tile_day_jaccard_z8(spark: SparkSession, sf_dir: str) -> DataFrame:
     the space-time cube beside Knox (pairs) and Mann–Kendall (trend).
 
     100 TB: one distinct rollup + one equi-join + tiny per-day aggs."""
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     c = ev.select(
         tiles.tile_x(lon, 8).alias("tx"),
@@ -10067,8 +10006,7 @@ def tile_ewma_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing each tile's ≤ days-long array, map-only fold."""
     from pyspark.sql.functions import aggregate as Fagg
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    from osmgraft.operators.util import ensure_min_parallelism
+    ev = read_fixture(spark, sf_dir, "events")
     from osmgraft.synth import latlon_of_key
 
     ev = ensure_min_parallelism(ev)
@@ -10133,8 +10071,7 @@ def tile_simpson_diversity_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
     1−λ is the Gini–Simpson diversity).  Division never taken — the
     percentile/centroid rational discipline.  Two hash aggs, both
     map-side combinable; no joins."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    from osmgraft.operators.util import ensure_min_parallelism
+    ev = read_fixture(spark, sf_dir, "events")
     from osmgraft.synth import latlon_of_key
 
     ev = ensure_min_parallelism(ev)
@@ -10224,8 +10161,7 @@ def bloom_semijoin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning; at 10^12 rows per-partition filters bit_or-merge."""
     from osmgraft.operators.bloom import bloom_probe_stats
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    from osmgraft.operators.util import ensure_min_parallelism
+    cust = read_fixture(spark, sf_dir, "customer")
 
     cust = ensure_min_parallelism(cust)
     members = cust.filter(F.col("c_mktsegment") == "BUILDING").select(
@@ -10326,10 +10262,9 @@ def tile_decayed_top100_z8(spark: SparkSession, sf_dir: str) -> DataFrame:
     yesterday's burst outranks last week's plateau (plain counts can't).
     100 TB: map-side-combined agg, broadcast 1-row min, TakeOrdered top-k."""
     from osmgraft.operators.density import decayed_tile_counts
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     pts = ev.select(
         tiles.tile_x(lon, 8).alias("cx"),
@@ -10357,10 +10292,9 @@ def winsorized_nchars_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: one window rank + one conditional re-aggregate per source."""
     from osmgraft.operators.stats import winsorized_stats
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).select("source", "n_chars")
     return winsorized_stats(docs, ["source"], "n_chars")
 
@@ -10388,10 +10322,9 @@ def user_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: one lag window + one map-side-combinable agg."""
     from osmgraft.operators.stats import burstiness
-    from osmgraft.operators.util import ensure_min_parallelism
     from pyspark.sql.window import Window as _W
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     w = _W.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.floor(F.unix_timestamp("ts")).cast("long")
     gaps = (
@@ -10427,10 +10360,9 @@ def segregation_types_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: cell-domain counts + one grouped sum per type pair."""
     from osmgraft.operators.stats import tv_distance
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     rows = ev.select(
         "event_type",
@@ -10463,10 +10395,9 @@ def tile_type_lq_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: category-domain aggs + broadcast dimension joins."""
     from osmgraft.operators.stats import contingency_assoc
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     rows = ev.select(
         (tiles.tile_x(lon, 6) * 64 + tiles.tile_y(lat, 6)).alias("cell"),
@@ -10494,10 +10425,9 @@ def kappa_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     free.  100 TB: three category-domain aggs + a 1-row join."""
     from osmgraft.functions.text import lang_id
     from osmgraft.operators.stats import rater_agreement
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).select("lang", lang_id(F.col("text")).alias("pred"))
     return rater_agreement(docs, "lang", "pred")
 
@@ -10521,10 +10451,9 @@ def langid_class_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeling pipeline ships.  100 TB: three category-domain aggs."""
     from osmgraft.functions.text import lang_id
     from osmgraft.operators.stats import classifier_report
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).select("lang", lang_id(F.col("text")).alias("pred"))
     return classifier_report(docs, "lang", "pred")
 
@@ -10551,11 +10480,10 @@ def mcnemar_langid_vs_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.  100 TB: one 4-counter agg + a 1-row broadcast."""
     from osmgraft.functions.text import lang_id
     from osmgraft.operators.stats import mcnemar
-    from osmgraft.operators.util import ensure_min_parallelism
     from pyspark.sql.window import Window as _W
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).select("lang", "text")
     maj = (
         docs.groupBy("lang")
@@ -10599,10 +10527,9 @@ def simpsons_paradox_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: category-domain aggregates + one pair join."""
     from osmgraft.operators.stats import simpsons_paradox
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).select("source", "lang", (F.col("n_chars") > 500).alias("long_doc"))
     return simpsons_paradox(docs, "source", "lang", "long_doc")
 
@@ -10626,10 +10553,9 @@ def tv_source_langmix(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: category-domain counts + one grouped sum per pair — no
     windows, no ordering."""
     from osmgraft.operators.stats import tv_distance
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).select("source", "lang")
     return tv_distance(docs, "source", "lang")
 
@@ -10650,10 +10576,9 @@ def emd_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: domain-bounded histograms + one window walk per pair."""
     from osmgraft.operators.stats import emd_1d
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).select("source", "n_chars")
     return emd_1d(docs, "source", "n_chars")
 
@@ -10679,10 +10604,9 @@ def mwu_lang_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: domain-bounded histograms + one window walk per pair."""
     from osmgraft.operators.stats import mann_whitney_u
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).select("lang", "n_chars")
     return mann_whitney_u(docs, "lang", "n_chars")
 
@@ -10711,10 +10635,9 @@ def ks_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: value-domain-bounded histograms (map-side combined) + one
     window per pair over pooled distinct values."""
     from osmgraft.operators.stats import ks_two_sample
-    from osmgraft.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_fixture(spark, sf_dir, "documents")
     ).select("source", "n_chars")
     return ks_two_sample(docs, "source", "n_chars")
 
@@ -10747,10 +10670,9 @@ def tile_isotonic_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: ≤27 000 codegen rows per tile (ticks ≤ 30), two map-side-
     combinable aggs; sequential PAVA traded for parallel width."""
     from osmgraft.operators.stats import isotonic_fit
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     counts = (
         ev.select(
@@ -10789,9 +10711,8 @@ def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: one user-keyed lag window + state-domain-sized aggs."""
     from osmgraft.operators.stats import markov_transitions
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     rows = ev.select(
         "user_id",
         "event_type",
@@ -10826,10 +10747,9 @@ def tile_weekday_seasonality_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: 7-bucket map-side-combinable agg + group total, no joins."""
     from osmgraft.operators.stats import weekday_seasonality
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     rows = ev.select(
         tiles.tile_x(lon, 6).alias("tx"),
@@ -10867,10 +10787,9 @@ def rank_agg_types_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
     day, type) AGGREGATE — candidate-domain-bounded, never data-bounded;
     exact int64 throughout."""
     from osmgraft.operators.ranking import rank_aggregation
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     counts = (
         ev.select(
@@ -10913,10 +10832,9 @@ def tile_spearman_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: two windows + one agg on the tile-day AGGREGATE."""
     from osmgraft.operators.stats import spearman_rho
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     obs = (
         ev.select(
@@ -10960,10 +10878,9 @@ def tile_pettitt_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: pair/split explosion on the per-tile-day AGGREGATE (≤435
     pairs × ≤29 splits per tile), never raw events."""
     from osmgraft.operators.stats import pettitt
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     counts = (
         ev.select(
@@ -11001,10 +10918,9 @@ def tile_tukey_outlier_days_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: one window rank per tile on the AGGREGATE + one conditional
     re-aggregate."""
     from osmgraft.operators.stats import tukey_outliers
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     counts = (
         ev.select(
@@ -11042,10 +10958,9 @@ def tile_runs_test_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: one window median + one lag scan per tile on the AGGREGATE."""
     from osmgraft.operators.stats import runs_test
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     counts = (
         ev.select(
@@ -11083,10 +10998,9 @@ def tile_siegel_slope_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: ordered-pair explosion on the tile-day AGGREGATE (≤ 870
     rows/tile), two window medians, zero IEEE."""
     from osmgraft.operators.stats import siegel_slope
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     counts = (
         ev.select(
@@ -11131,10 +11045,9 @@ def tile_kendall_tau_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: pair join on the per-tile-day AGGREGATE (≤435 pairs per
     tile at 30 days), never raw events; zero IEEE anywhere."""
     from osmgraft.operators.stats import kendall_tau
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     obs = (
         ev.select(
@@ -11173,10 +11086,9 @@ def tile_theil_sen_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick and the emitted slope never touch IEEE.  100 TB: pair join on the
     tile-day aggregate (≤435 pairs/tile), one window median."""
     from osmgraft.operators.stats import theil_sen
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     counts = (
         ev.select(
@@ -11279,7 +11191,7 @@ def terrain_rgb_roundtrip_z10_7(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = _cells_df(spark, sf_dir, 10).select(
         F.col("cx").alias("tx"), F.col("cy").alias("ty"), "cnt"
     )
-    return terrain_rgb_stats(terrain_rgb_tiles(cells, z=10, parent_z=7, ensure_parallelism=True))
+    return terrain_rgb_stats(terrain_rgb_tiles(cells, z=10, parent_z=7))
 
 
 def _viewshed_oracle() -> str:
@@ -11313,7 +11225,7 @@ def terrain_viewshed_z10_7(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = _cells_df(spark, sf_dir, 10).select(
         F.col("cx").alias("tx"), F.col("cy").alias("ty"), "cnt"
     )
-    return terrain_viewshed(terrain_rgb_tiles(cells, z=10, parent_z=7, ensure_parallelism=True))
+    return terrain_viewshed(terrain_rgb_tiles(cells, z=10, parent_z=7))
 
 
 def _d8_oracle() -> str:
@@ -11346,7 +11258,7 @@ def terrain_d8_flow_z10_7(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = _cells_df(spark, sf_dir, 10).select(
         F.col("cx").alias("tx"), F.col("cy").alias("ty"), "cnt"
     )
-    return terrain_d8_flow(terrain_rgb_tiles(cells, z=10, parent_z=7, ensure_parallelism=True))
+    return terrain_d8_flow(terrain_rgb_tiles(cells, z=10, parent_z=7))
 
 
 def _hypsometry_oracle() -> str:
@@ -11402,7 +11314,7 @@ def terrain_hypsometry_z10_7(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = _cells_df(spark, sf_dir, 10).select(
         F.col("cx").alias("tx"), F.col("cy").alias("ty"), "cnt"
     )
-    tiles_df = terrain_rgb_tiles(cells, z=10, parent_z=7, ensure_parallelism=True)
+    tiles_df = terrain_rgb_tiles(cells, z=10, parent_z=7)
 
     def kernel(pdfs):
         import numpy as np
@@ -11475,7 +11387,7 @@ def terrain_watershed_z10_7(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = _cells_df(spark, sf_dir, 10).select(
         F.col("cx").alias("tx"), F.col("cy").alias("ty"), "cnt"
     )
-    return terrain_watershed(terrain_rgb_tiles(cells, z=10, parent_z=7, ensure_parallelism=True))
+    return terrain_watershed(terrain_rgb_tiles(cells, z=10, parent_z=7))
 
 
 def _flowacc_oracle() -> str:
@@ -11510,7 +11422,7 @@ def terrain_flow_accumulation_z10_7(spark: SparkSession, sf_dir: str) -> DataFra
     cells = _cells_df(spark, sf_dir, 10).select(
         F.col("cx").alias("tx"), F.col("cy").alias("ty"), "cnt"
     )
-    return terrain_flow_accumulation(terrain_rgb_tiles(cells, z=10, parent_z=7, ensure_parallelism=True))
+    return terrain_flow_accumulation(terrain_rgb_tiles(cells, z=10, parent_z=7))
 
 
 def _sql_boundary_luma() -> str:
@@ -11554,10 +11466,9 @@ def boundary_image_luma(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: map-only decode, broadcast PIP (no point-side shuffle), one
     map-side-combinable agg."""
     from osmgraft.operators.multimodal import image_central_moments
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key, synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 2000)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 2000)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     moments = image_central_moments(imgs).select(
         F.substring("image_id", 5, 9).cast("long").alias("point_id"), "m00"
@@ -11625,7 +11536,7 @@ def audio_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.multimodal import audio_fingerprint_pairs
     from osmgraft.synth import synth_audio_shifted
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 300)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 300)
     return audio_fingerprint_pairs(synth_audio_shifted(spark, n))
 
 
@@ -11660,12 +11571,11 @@ def ring_validity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: edge windows partition by ring; the pair join fans out
     edges² bounded by the 12-vertex cap per ring, never data volume."""
     from osmgraft.operators.crossings import ring_self_crossings
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
     from pyspark.sql import Window as W
 
     orders = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_fixture(spark, sf_dir, "orders")
     )
     lat, lon = latlon_of_key(F.col("o_orderkey"))
 
@@ -11713,11 +11623,10 @@ def triangulate_customer_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     clip sequence itself are all pinned cross-engine.  100 TB: one bounded
     pair join + one hash agg per ring, then map-only."""
     from osmgraft.operators.triangulate import triangulate_rings, two_chain_ring
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
     from pyspark.sql import Window as W
 
-    orders = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    orders = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     lat, lon = latlon_of_key(F.col("o_orderkey"))
 
     pts = (
@@ -11775,10 +11684,9 @@ def gpx_roundtrip_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checksums.  Completes the track-format family: GeoJSON ⋄ polyline ⋄
     MVT ⋄ GPX.  One shuffle to assemble, map-only parse."""
     from osmgraft.functions.gpx import gpx_trk, gpx_trkpt, parse_gpx_trkpts
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    o = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     lat, lon = latlon_of_key(F.col("o_orderkey"))
     pts = o.select(
         (F.col("o_custkey") % 199).alias("ent"),
@@ -11800,8 +11708,7 @@ def gpx_roundtrip_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
         gpx_trk(F.concat(F.lit("ent"), F.col("ent").cast("string")), F.col("body")).alias("gpx"),
     )
     # 199 ~70KB track strings coalesce to ONE AQE partition after the
-    # assembly agg, serializing the regex parse — sandbox opt-in, as for
-    # the terrain render (at scale entity count >> cores)
+    # assembly agg, which would serialize the regex parse
     parsed = parse_gpx_trkpts(ensure_min_parallelism(tracks), "gpx")
     return parsed.groupBy("ent", "gpx").agg(
         F.count(F.lit(1)).cast("long").alias("n_vertices"),
@@ -11844,9 +11751,8 @@ def route_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one groups-by-route shuffle; chains are relation-sized
     (≤8 here, tens in OSM), so route COUNT carries scale, not route size."""
     from osmgraft.operators.multipolygon import chain_route_ways
-    from osmgraft.operators.util import ensure_min_parallelism
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 300)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 300)
     base = ensure_min_parallelism(
         spark.range(n).select(F.col("id").alias("r"))
     )
@@ -11971,10 +11877,9 @@ def bivariate_moran_z8(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: one outer-join union + broadcast stats + the 4-offset
     explode equi-join regroup."""
     from osmgraft.operators.density import bivariate_moran_quadrants
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import latlon_of_key
 
-    ev = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = ensure_min_parallelism(read_fixture(spark, sf_dir, "events"))
     lat, lon = latlon_of_key(F.col("event_id"))
     ev_cells = (
         ev.select(
@@ -12022,7 +11927,7 @@ def geofence_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     pts = points_from_orders(spark, sf_dir)
-    hits = pip_join(pts, _AB, how="inner", ensure_parallelism=True).select(
+    hits = pip_join(pts, _AB, how="inner").select(
         "point_id", "boundary_id"
     )
     sig = (
@@ -12039,7 +11944,7 @@ def geofence_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("zones")
         )
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = read_fixture(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("point_id"), F.col("o_custkey").alias("uid")
     )
     w = W.partitionBy("uid").orderBy("point_id")
@@ -12098,7 +12003,7 @@ def geofence_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.synth import ADMIN_BOUNDARIES as _AB
 
     pts = points_from_orders(spark, sf_dir)
-    hits = pip_join(pts, _AB, how="inner", ensure_parallelism=True).select(
+    hits = pip_join(pts, _AB, how="inner").select(
         "point_id", "boundary_id"
     )
     sig = (
@@ -12115,7 +12020,7 @@ def geofence_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("zones")
         )
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = read_fixture(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("point_id"),
         F.col("o_custkey").alias("uid"),
         F.datediff(
@@ -12204,7 +12109,7 @@ def track_sinuosity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.geom import haversine_m_col
 
     pts = points_from_orders(spark, sf_dir)
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = read_fixture(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("point_id"), F.col("o_custkey").alias("uid")
     )
     w = W.partitionBy("uid").orderBy("point_id")
@@ -12283,10 +12188,10 @@ def boundary_trend_mk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.synth import ADMIN_BOUNDARIES as _AB
 
     pts = points_from_orders(spark, sf_dir)
-    hits = pip_join(pts, _AB, how="inner", ensure_parallelism=True).select(
+    hits = pip_join(pts, _AB, how="inner").select(
         "point_id", "boundary_id"
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = read_fixture(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("point_id"),
         F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("long").alias("day"),
     )
@@ -12363,10 +12268,9 @@ def image_seam_energy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: map-only mapInArrow — no shuffle at any corpus width."""
     from osmgraft.operators.multimodal import image_seam_energy
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 400)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 400)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_seam_energy(imgs)
 
@@ -12392,10 +12296,9 @@ def image_bilinear_up2x_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     patterns).  The resize leg of the augmentation suite
     (image_augment_identity ⋄ image_patches ⋄ this).  100 TB: map-only."""
     from osmgraft.operators.multimodal import image_bilinear_up2x
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 400)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 400)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_bilinear_up2x(imgs)
 
@@ -12422,10 +12325,9 @@ def image_canny_nms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Completes the edge chain: gradient_rose → NMS edges → cc_blobs.
     100 TB: map-only."""
     from osmgraft.operators.multimodal import image_canny_nms
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 400)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 400)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_canny_nms(imgs)
 
@@ -12449,10 +12351,9 @@ def image_central_moments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     axis, eccentricity) in pure integers.  Twin aggregates the closed-form
     luma relationally and applies the same algebra.  100 TB: map-only."""
     from osmgraft.operators.multimodal import image_central_moments
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 400)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 400)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_central_moments(imgs)
 
@@ -12476,10 +12377,9 @@ def image_haar_energies_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     every coefficient in closed form (level 2 from 16 pixels each).
     100 TB: map-only."""
     from osmgraft.operators.multimodal import image_haar_energies
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 400)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 400)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_haar_energies(imgs)
 
@@ -12504,10 +12404,9 @@ def image_fast9_corners_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     image_harris_corner as the detector family's second member.
     100 TB: map-only."""
     from osmgraft.operators.multimodal import image_fast9_corners
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_formula_images
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 400)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 400)
     imgs = ensure_min_parallelism(synth_formula_images(spark, n))
     return image_fast9_corners(imgs, t=8)
 
@@ -12531,10 +12430,9 @@ def audio_pitch_lags_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audio chain: energy → DFT bins → active segments → landmarks →
     pitch.  100 TB: map-only."""
     from osmgraft.operators.multimodal import audio_pitch_lags
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_audio
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 200)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 200)
     auds = ensure_min_parallelism(synth_audio(spark, n))
     return audio_pitch_lags(auds)
 
@@ -12560,10 +12458,9 @@ def audio_zcr_windows_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     audio chain: energy → DFT → segments → landmarks → pitch → ZCR.
     100 TB: map-only."""
     from osmgraft.operators.multimodal import audio_zcr_windows
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_audio
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 200)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 200)
     auds = ensure_min_parallelism(synth_audio(spark, n))
     return audio_zcr_windows(auds)
 
@@ -12588,10 +12485,9 @@ def video_block_motion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the closed-form luma.  Completes the video chain: frame sample →
     scene cuts → temporal sig → motion field.  100 TB: map-only."""
     from osmgraft.operators.multimodal import video_block_motion
-    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import synth_videos
 
-    n = min(spark.read.parquet(f"{sf_dir}/orders.parquet").count(), 200)
+    n = min(read_fixture(spark, sf_dir, "orders").count(), 200)
     vids = ensure_min_parallelism(synth_videos(spark, n))
     return video_block_motion(vids)
 
@@ -12650,7 +12546,7 @@ def hrw_shard_moves(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: map-only — no shuffle at any width, B md5s per row."""
     from osmgraft.operators.sharding import hrw_bucket
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = read_fixture(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     return o.select(
         k.alias("point_id"),

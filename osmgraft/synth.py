@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osmgraft.functions.timestamps import ntz_from_epoch
+from osmgraft.io import read_fixture
 
 from osmgraft.schema import ADMIN_BOUNDARY_SCHEMA, IMAGE_SCHEMA
 
@@ -50,7 +51,7 @@ def points_from_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmgraft.operators.util import ensure_min_parallelism
 
     return points_projection(
-        ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+        ensure_min_parallelism(read_fixture(spark, sf_dir, "orders"))
     )
 
 
@@ -574,7 +575,7 @@ def osm_objs_from_orders(spark: SparkSession, sf_dir: str) -> list[dict]:
     FIXTURE WRITER only (bounded by the sandbox SFs; the distributed read
     path is what the queries exercise)."""
     rows = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_fixture(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey")
         .collect()
     )
@@ -598,7 +599,7 @@ def pbf_fixture_path(spark: SparkSession, sf_dir: str) -> str:
     """Write-once cached `.osm.pbf` fixture for ``sf_dir`` (atomic replace)."""
     import os
 
-    n = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    n = read_fixture(spark, sf_dir, "orders").count()
     d = "/tmp/osmgraft_fixtures"
     os.makedirs(d, exist_ok=True)
     path = os.path.join(d, f"pbf_{os.path.basename(sf_dir.rstrip('/'))}_{n}.osm.pbf")
@@ -616,7 +617,7 @@ def osm_objs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     osm_objs_from_orders — the DataFrame the codec roundtrip queries feed
     through XML/OPL serialization. Shapes must stay in lock-step with
     node_obj/way_obj/rel_obj (the driver-side fixture twins)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_fixture(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
     k = F.col("o_orderkey")
@@ -727,7 +728,7 @@ def osm_objs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fixture_file(spark: SparkSession, sf_dir: str, kind: str, ext: str, build) -> str:
     import os
 
-    n = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    n = read_fixture(spark, sf_dir, "orders").count()
     d = "/tmp/osmgraft_fixtures"
     os.makedirs(d, exist_ok=True)
     path = os.path.join(
@@ -749,7 +750,7 @@ def osc_fixture_path(spark: SparkSession, sf_dir: str) -> str:
 
         keys = [
             int(r.o_orderkey)
-            for r in spark.read.parquet(f"{sf_dir}/orders.parquet")
+            for r in read_fixture(spark, sf_dir, "orders")
             .select("o_orderkey")
             .collect()
         ]
@@ -776,7 +777,7 @@ def changesets_fixture_path(spark: SparkSession, sf_dir: str) -> str:
     def build(tmp: str) -> None:
         from osmgraft.sources.xml_files import write_changesets_file
 
-        rows = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        rows = read_fixture(spark, sf_dir, "events").select(
             "event_id", "event_type", "value"
         ).collect()
         out = []

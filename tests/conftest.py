@@ -22,3 +22,24 @@ SF_CORRECT = "/root/testdata/sf0.01"
 @pytest.fixture(scope="session")
 def sf_smoke():
     return SF_SMOKE
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` -> (fn(), ids of the Spark jobs fn launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-of-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "jobs launched by one call")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store is fed by the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -4,12 +4,27 @@ not assumed)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
-from osmgraft.io import TableIO, has_iceberg
+from osmgraft.io import TableIO, has_iceberg, read_fixture
 from osmgraft.synth import points_from_orders
 
 SF_DIR = "/root/testdata/sf0.001"
+TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+@pytest.mark.parametrize("table", TABLES)
+def test_read_fixture_schema_is_inferred_schema_without_a_job(spark, jobs_of, sf, table):
+    """The footer schema equals Spark's inference (timestamps as NTZ), and
+    the read launches no schema-inference job."""
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), sf)
+    df, jobs = jobs_of(lambda: read_fixture(spark, sf_dir, table))
+    assert jobs == []
+    assert df.schema == spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
 
 
 def test_format_resolution_without_iceberg(spark):

@@ -62,3 +62,27 @@ def test_no_fetch_fragile_oracle_output_types(con):
         "oracle output columns with fetch-path-fragile types "
         f"(cast to BIGINT at the outer SELECT): {offenders}"
     )
+
+
+def test_raising_oracle_fails_its_own_gate_only(con):
+    """A callable oracle that raises (e.g. the h3 polyfill tie assertion)
+    must not take down oracle_sql() for every other gate."""
+    import __spark_entry__ as e
+    from osmgraft.queries import REGISTRY
+
+    def broken() -> str:
+        raise AssertionError("polyfill tie at 'cell 7'")
+
+    REGISTRY["_broken_oracle"] = (lambda spark, sf_dir: None, broken)
+    try:
+        oracles = e.oracle_sql()
+    finally:
+        del REGISTRY["_broken_oracle"]
+    others = {n for n, (_, o) in REGISTRY.items() if o is not None}
+    assert others <= set(oracles)
+    assert not [n for n in others if "oracle build failed" in oracles[n]]
+    with pytest.raises(
+        duckdb.InvalidInputException,
+        match="oracle build failed: AssertionError: polyfill tie at 'cell 7'",
+    ):
+        con.sql(oracles["_broken_oracle"]).fetchall()

@@ -51,12 +51,13 @@ def main() -> None:
         print(f"# degraded window (ceiling {ceiling:.2f}) — waiting", file=sys.stderr)
         time.sleep(20)
 
+    from osmgraft.io import read_fixture
     from osmgraft.queries import REGISTRY
     from osmgraft.session import get_spark
 
     spark = get_spark("bench-drift", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    read_fixture(spark, sf_dir, "orders").count()
     spark.range(1000).repartition(32).mapInPandas(lambda it: it, schema="id long").count()
 
     walls: dict[str, list[float]] = {q: [] for q in QUERIES}

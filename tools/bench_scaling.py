@@ -58,7 +58,7 @@ def flagship():
         F.col("id").alias("o_orderkey")
     )
     pts = points_projection(orders)
-    joined = pip_join(pts, ADMIN_BOUNDARIES, how="inner", ensure_parallelism=True)
+    joined = pip_join(pts, ADMIN_BOUNDARIES, how="inner")
     return (
         joined.select(
             "boundary_id",

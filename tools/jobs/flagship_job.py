@@ -30,13 +30,14 @@ def main() -> None:
     from osmgraft.checkpoint import Checkpointer
     from osmgraft.functions import tiles
     from osmgraft.operators.pip import pip_join
+    from osmgraft.operators.util import ensure_min_parallelism
     from osmgraft.synth import ADMIN_BOUNDARIES, points_projection
 
     spark = SparkSession.builder.appName("osmgraft-flagship").getOrCreate()
 
     def transform(orders):
         joined = pip_join(
-            points_projection(orders), ADMIN_BOUNDARIES, how="inner", ensure_parallelism=True
+            points_projection(ensure_min_parallelism(orders)), ADMIN_BOUNDARIES, how="inner"
         )
         return (
             joined.select(
