@@ -39,13 +39,6 @@ def deg_to_fixed(col: Column) -> Column:
     )
 
 
-def deg_to_fixed32(col: Column, is_lat: bool) -> Column:
-    """Validated narrow form: out-of-range → NULL, else int32."""
-    f = deg_to_fixed(col)
-    bound = LAT_MAX7 if is_lat else LON_MAX7
-    return F.when(F.abs(f) <= F.lit(bound), f).cast("int")
-
-
 def fixed_to_deg(col: Column) -> Column:
     """F1: fixed-point int → degrees double (osmio lib.rs:82-84,124-126)."""
     return col.cast("double") / F.lit(COORD_SCALE)
@@ -54,10 +47,6 @@ def fixed_to_deg(col: Column) -> Column:
 def valid_lat7(col: Column) -> Column:
     """Range check mirroring osmio's TryFrom<f64> (lib.rs:173-182)."""
     return F.abs(col) <= F.lit(LAT_MAX7)
-
-
-def valid_lon7(col: Column) -> Column:
-    return F.abs(col) <= F.lit(LON_MAX7)
 
 
 # --- numpy kernel forms (same rounding, for UDF interiors) -----------------

@@ -40,12 +40,6 @@ def tile_y(lat7: Column, z: int) -> Column:
     return F.least(F.greatest(y, F.lit(0)), F.lit(2**z - 1))
 
 
-def tile_id(lon7: Column, lat7: Column, z: int) -> Column:
-    """Single sortable long: z in high bits, then interleave-free x,y block id."""
-    return (F.lit(z).cast("long") * F.lit(2 ** (2 * z)) + tile_x(lon7, z) * F.lit(2**z)
-            + tile_y(lat7, z))
-
-
 # --- numpy kernel form -------------------------------------------------------
 def np_tile_xy(lon7: np.ndarray, lat7: np.ndarray, z: int) -> tuple[np.ndarray, np.ndarray]:
     lon = lon7.astype(np.float64) / 1e7
@@ -77,19 +71,6 @@ def sql_tile_y(lat7_expr: str, z: int) -> str:
 
 
 # --- raster -> vector (inverse slippy: tile id -> geometry) ---------------------
-def tile_lon7_west(x: Column, z: int) -> Column:
-    """Exact fixed-point west edge of tile column x: x·span/2^z − half.
-    Integer arithmetic — bitwise identical on every engine."""
-    return (x.cast("long") * F.lit(LON_SPAN) / F.lit(2**z)).cast("long") - F.lit(LON_MAX7)
-
-
-def sql_tile_lon7_west(x_expr: str, z: int) -> str:
-    return (
-        f"(CAST(CAST(({x_expr}) AS BIGINT) * {LON_SPAN} / {2**z} AS BIGINT)"
-        f" - {LON_MAX7})"
-    )
-
-
 def np_tile_lat_bounds(y: np.ndarray, z: int) -> tuple[np.ndarray, np.ndarray]:
     """(south, north) latitude degrees of tile row y — inverse gudermannian
     lat = atan(sinh(pi·(1 − 2y/2^z))). Float (libm); pinned by the roundtrip

@@ -1,6 +1,6 @@
-"""Geometry kernels: vectorized ray-casting point-in-polygon, STR-tree bbox
-index and haversine. (The exact wrap-aware planar metric of kNN and its cell
-grid live in functions/cells.py.)
+"""Geometry kernels: vectorized ray-casting point-in-polygon, the polygon
+cover that turns it into a join condition, and haversine. (The exact
+wrap-aware planar metric of kNN and its cell grid live in functions/cells.py.)
 
 All coordinates are fixed-point int (lat7/lon7 = degrees × 1e7 — osmio
 lib.rs:66-71). PIP arithmetic runs in float64 on the raw fixed-point values
@@ -46,19 +46,6 @@ def pnpoly(lat7: np.ndarray, lon7: np.ndarray, edges: np.ndarray) -> np.ndarray:
     return (crosses.sum(axis=1) % 2).astype(bool)
 
 
-def pnpoly_pairs(lat7: np.ndarray, lon7: np.ndarray, poly: np.ndarray, edges, test) -> np.ndarray:
-    """Even-odd test of candidate (point, polygon) pairs → bool mask (P,).
-
-    lat7/lon7/poly are per-pair arrays; ``edges[g]`` is polygon g's edge
-    array and ``test`` the kernel (:func:`pnpoly` or :func:`pnpoly_int`),
-    called once per distinct polygon over that polygon's pairs."""
-    inside = np.zeros(len(poly), dtype=bool)
-    for g in np.unique(poly):
-        sel = np.flatnonzero(poly == g)
-        inside[sel] = test(lat7[sel], lon7[sel], edges[g])
-    return inside
-
-
 def sql_pip_predicate(polys: list[dict]) -> str:
     """DuckDB SQL computing (point_id, boundary_id) pairs for points CTE ``pts``
     (point_id, lat7, lon7) — same arithmetic as :func:`pnpoly`."""
@@ -82,93 +69,6 @@ pip AS (
   SELECT point_id, boundary_id FROM crossings
   GROUP BY point_id, boundary_id HAVING sum(c) % 2 = 1)
 """.strip()
-
-
-# --- STR-tree (sorted-tile-recursive bbox packing; Leutenegger et al. 1997) ----
-class STRTree:
-    """Static bbox index over polygons, built once on the driver and shipped to
-    executors inside the broadcast PIP kernel (SURVEY.md §4 item 2).
-
-    Packing: sort by x-center into vertical slices of ~sqrt(n/cap) tiles, sort
-    each slice by y-center, chunk into leaves of ``cap``; build upper levels the
-    same way until one root. Query is an iterative stack walk over numpy arrays
-    (no Python objects per node beyond level slices).
-    """
-
-    def __init__(self, bboxes: np.ndarray, cap: int = 16):
-        # bboxes: (n, 4) [ymin, xmin, ymax, xmax] float64
-        self.bboxes = np.asarray(bboxes, dtype=np.float64)
-        n = len(self.bboxes)
-        self.levels: list[tuple[np.ndarray, np.ndarray]] = []  # (boxes, child_index_lists)
-        idx = np.arange(n)
-        boxes = self.bboxes
-        while len(idx) > cap:
-            order = self._str_order(boxes)
-            idx, boxes = idx[order], boxes[order]
-            groups = [np.arange(i, min(i + cap, len(idx))) for i in range(0, len(idx), cap)]
-            gboxes = np.array(
-                [
-                    [boxes[g, 0].min(), boxes[g, 1].min(), boxes[g, 2].max(), boxes[g, 3].max()]
-                    for g in groups
-                ]
-            )
-            self.levels.append((boxes.copy(), [idx[g] for g in groups]))
-            idx = np.arange(len(groups))
-            boxes = gboxes
-            # children of level k node i = self.levels[k][1][i] (original ids at k=0)
-        self.root_boxes = boxes
-        self.root_ids = idx
-
-    @staticmethod
-    def _str_order(boxes: np.ndarray) -> np.ndarray:
-        cx = (boxes[:, 1] + boxes[:, 3]) / 2
-        cy = (boxes[:, 0] + boxes[:, 2]) / 2
-        s = max(1, int(np.ceil(np.sqrt(len(boxes) / 16))))
-        xr = np.argsort(cx, kind="stable")
-        slice_of = np.empty(len(boxes), dtype=np.int64)
-        slice_of[xr] = np.arange(len(boxes)) // max(1, len(boxes) // s + 1)
-        return np.lexsort((cy, slice_of))
-
-    def query_point_batch(self, lat7: np.ndarray, lon7: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Return (point_row_idx, polygon_idx) candidate pairs by bbox contain."""
-        y = lat7.astype(np.float64)
-        x = lon7.astype(np.float64)
-        if not self.levels:
-            # brute bbox test against all polys (root-only tree)
-            hit = (
-                (y[:, None] >= self.bboxes[None, :, 0])
-                & (x[:, None] >= self.bboxes[None, :, 1])
-                & (y[:, None] <= self.bboxes[None, :, 2])
-                & (x[:, None] <= self.bboxes[None, :, 3])
-            )
-            pi, gi = np.nonzero(hit)
-            return pi, gi
-        # walk levels top-down keeping (point, node) frontier
-        pi = np.repeat(np.arange(len(y)), len(self.root_ids))
-        ni = np.tile(self.root_ids, len(y))
-        boxes = self.root_boxes
-        for level in range(len(self.levels) - 1, -1, -1):
-            keep = (
-                (y[pi] >= boxes[ni, 0]) & (x[pi] >= boxes[ni, 1])
-                & (y[pi] <= boxes[ni, 2]) & (x[pi] <= boxes[ni, 3])
-            )
-            pi, ni = pi[keep], ni[keep]
-            lboxes, children = self.levels[level]
-            new_pi, new_ni = [], []
-            for p, nid in zip(pi, ni):
-                ch = children[nid]
-                new_pi.append(np.full(len(ch), p))
-                new_ni.append(ch)
-            if not new_pi:
-                return np.array([], dtype=np.int64), np.array([], dtype=np.int64)
-            pi = np.concatenate(new_pi)
-            ni = np.concatenate(new_ni)
-            boxes = lboxes if level > 0 else self.bboxes
-        keep = (
-            (y[pi] >= self.bboxes[ni, 0]) & (x[pi] >= self.bboxes[ni, 1])
-            & (y[pi] <= self.bboxes[ni, 2]) & (x[pi] <= self.bboxes[ni, 3])
-        )
-        return pi[keep], ni[keep]
 
 
 def polygon_bbox(poly: dict) -> tuple[float, float, float, float]:
@@ -257,6 +157,172 @@ def pnpoly_int(lat7: np.ndarray, lon7: np.ndarray, edges: np.ndarray) -> np.ndar
     is_left = (x2 - x1) * (y - y1) - (x - x1) * (y2 - y1)
     crosses = straddles & np.where(y2 > y1, is_left > 0, is_left < 0)
     return (crosses.sum(axis=1) % 2).astype(bool)
+
+
+# --- polygon cover: the even-odd test as cover rows ---------------------------
+COVER_MARGIN = 2.0  # fixed-point units an edge's longitude extent is widened by
+COVER_CAP = 4  # most edges a boundary row carries before its strip is halved
+
+
+def polygon_cover(polys: list[dict], cell_size: int, integer: bool = False):
+    """Cover rows that decide :func:`pnpoly` (``integer``: :func:`pnpoly_int`,
+    whose truncated edges the cover then uses) for every point and polygon.
+
+    Each polygon is cut into latitude strips of ``cell_size``. In a strip, the
+    longitude extents of the edges meeting it, clipped to it and widened by
+    COVER_MARGIN, merge into *boundary* ranges; the *gaps* between them hold no
+    edge, so a gap is inside or outside as a whole, and the kernel at its
+    centre says which. A strip whose range holds more than COVER_CAP edges is
+    halved inside that range, down to one unit of latitude, for as long as
+    halving sheds edges (vertical teeth spanning a strip would otherwise
+    double its rows at every halving). Rows:
+
+    * *interior*: an inside gap (``inside`` true, no edges);
+    * *boundary*: a range, with the status east of it in ``inside`` and its
+      edges; a point in it is inside iff that status flips an odd number of
+      times, once per edge its ray crosses.
+
+    Outside gaps have no rows. Returns ``(rows, edges)``: ``rows`` maps
+    ``poly`` (index into ``polys``), ``cell`` (the ``cells.grid_cell`` key of
+    ``cell_size``), ``ylo``, ``yhi``, ``xlo``, ``xhi`` (the half-open ranges),
+    ``inside`` and ``interior`` to arrays with one entry per row and grid cell
+    it spans; ``edges`` is (entries, width, 4) [y1, x1, y2, x2], padded with
+    horizontal edges, which cross nothing."""
+    test = pnpoly_int if integer else pnpoly
+    g = float(cell_size)
+    ncl = LON_SPAN // cell_size
+    poly_edges = [polygon_edges(p) for p in polys]
+    e = np.concatenate([np.trunc(pe) if integer else pe for pe in poly_edges] or [np.zeros((0, 4))])
+    e_poly = np.repeat(np.arange(len(polys)), [len(pe) for pe in poly_edges])
+    ymin, ymax = np.minimum(e[:, 0], e[:, 2]), np.maximum(e[:, 0], e[:, 2])
+    # A horizontal edge crosses no ray, so no row carries it, but it bounds
+    # the ranges like any other edge: a gap must hold no boundary point.
+    slanted = ymin != ymax
+
+    def meets(pe, ylo, yhi):
+        """Edge pe has a point in the strip [ylo, yhi)."""
+        return (ymin[pe] < yhi) & ((ymax[pe] > ylo) | (ymin[pe] >= ylo))
+
+    # (edge, strip) pairs of the first level: every cell_size band an edge meets
+    b_lo = ymin // g
+    b_hi = np.maximum(b_lo, -(-ymax // g) - 1)
+    pe = np.repeat(np.arange(len(e)), (b_hi - b_lo + 1).astype(np.int64))
+    band = b_lo[pe] + _ranks(pe)
+    reg, pr = np.unique(np.stack([e_poly[pe], band], axis=1), axis=0, return_inverse=True)
+    pr = pr.reshape(-1)
+    r_poly, r_ylo = reg[:, 0].astype(np.int64), reg[:, 1] * g
+    r_yhi = r_ylo + g
+    r_xlo, r_xhi = np.full(len(reg), -np.inf), np.full(len(reg), np.inf)
+    r_east = np.zeros(len(reg), dtype=bool)
+    r_n = np.full(len(reg), np.inf)  # edges of the range a strip was halved in
+
+    def status(reg_i: np.ndarray, x: np.ndarray) -> np.ndarray:
+        """The kernel at (strip centre, x) of regions ``reg_i``."""
+        y, poly = np.floor((r_ylo + r_yhi) / 2)[reg_i], r_poly[reg_i]
+        out = np.zeros(len(x), dtype=bool)
+        for p in np.unique(poly):
+            sel = poly == p
+            out[sel] = test(y[sel], np.floor(x[sel]), poly_edges[p])
+        return out
+
+    rows: list[tuple] = []  # (poly, ylo, yhi, xlo, xhi, inside, interior) per batch
+    slots: list[tuple] = []  # (row, slot, edge) arrays per batch of boundary rows
+    nrows = 0
+
+    def emit(reg_i, xlo, xhi, inside, row_pairs=None):
+        nonlocal nrows
+        interior = np.full(len(reg_i), row_pairs is None)
+        rows.append((r_poly[reg_i], r_ylo[reg_i], r_yhi[reg_i], xlo, xhi, inside, interior))
+        if row_pairs is not None:
+            slots.append((row_pairs[0] + nrows, row_pairs[1], row_pairs[2]))
+        nrows += len(reg_i)
+
+    while len(r_poly):
+        # clipped, widened extents; pairs sorted by region, then west end
+        y1, x1, y2, x2 = e[pe].T
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xa = x1 + (x2 - x1) * (np.maximum(ymin[pe], r_ylo[pr]) - y1) / (y2 - y1)
+            xb = x1 + (x2 - x1) * (np.minimum(ymax[pe], r_yhi[pr]) - y1) / (y2 - y1)
+        xa, xb = np.where(slanted[pe], xa, x1), np.where(slanted[pe], xb, x2)
+        lo, hi = np.minimum(xa, xb) - COVER_MARGIN, np.maximum(xa, xb) + COVER_MARGIN
+        order = np.lexsort((lo, pr))
+        pr, pe, lo, hi = pr[order], pe[order], lo[order], hi[order]
+        # a range starts where a pair's west end passes every east end before it
+        # in its region (running max over region-major ranks of hi)
+        by_hi = np.argsort(hi, kind="stable")
+        rank = np.empty(len(hi), dtype=np.int64)
+        rank[by_hi] = np.arange(len(hi))
+        run_hi = hi[by_hi][np.maximum.accumulate(pr * len(hi) + rank) - pr * len(hi)]
+        new = np.ones(len(pr), dtype=bool)
+        new[1:] = (pr[1:] != pr[:-1]) | (lo[1:] > run_hi[:-1])
+        first = np.flatnonzero(new)
+        iv = np.cumsum(new) - 1
+        i_reg, i_lo = pr[first], lo[first]
+        i_hi = np.maximum.reduceat(hi, first) if len(first) else hi
+        i_n = np.add.reduceat(slanted[pe].astype(np.int64), first) if len(first) else first
+        # the status east of each range: the next gap's, or the region's own
+        last = np.ones(len(i_reg), dtype=bool)
+        last[:-1] = i_reg[1:] != i_reg[:-1]
+        gap_hi = np.where(last, r_xhi[i_reg], np.roll(i_lo, -1))
+        east = r_east[i_reg].copy()
+        east[~last] = status(i_reg[~last], (i_hi[~last] + gap_hi[~last]) / 2)
+        # a gap west of a halved strip's first range (a first level's is outside)
+        lead = np.ones(len(i_reg), dtype=bool)
+        lead[1:] = last[:-1]
+        lead &= np.isfinite(r_xlo[i_reg]) & (i_lo > r_xlo[i_reg])
+        lead_reg = i_reg[lead]
+        lead_in = status(lead_reg, (r_xlo[lead_reg] + i_lo[lead]) / 2)
+        bare = np.setdiff1d(np.arange(len(r_poly)), i_reg)  # regions with no edge
+        bare = bare[r_east[bare]]
+
+        gaps = east & (i_hi < gap_hi)
+        emit(i_reg[gaps], i_hi[gaps], gap_hi[gaps], np.ones(gaps.sum(), dtype=bool))
+        emit(lead_reg[lead_in], r_xlo[lead_reg[lead_in]], i_lo[lead][lead_in],
+             np.ones(lead_in.sum(), dtype=bool))
+        emit(bare, r_xlo[bare], r_xhi[bare], np.ones(len(bare), dtype=bool))
+        fit = (i_n <= COVER_CAP) | ((r_yhi - r_ylo)[i_reg] <= 1) | (i_n >= r_n[i_reg])
+        row_of = np.cumsum(fit) - 1
+        on = fit[iv] & slanted[pe]
+        emit(i_reg[fit], i_lo[fit], i_hi[fit], east[fit], (row_of[iv[on]], _ranks(iv[on]), pe[on]))
+
+        # halve the strip of every range holding too many edges, inside it
+        big = np.flatnonzero(~fit)
+        child = np.full(len(i_reg), -1)
+        child[big] = np.arange(len(big))
+        ylo, yhi = r_ylo[i_reg[big]], r_yhi[i_reg[big]]
+        mid = np.floor((ylo + yhi) / 2)
+        r_ylo = np.stack([ylo, mid], axis=1).reshape(-1)
+        r_yhi = np.stack([mid, yhi], axis=1).reshape(-1)
+        r_poly = np.repeat(r_poly[i_reg[big]], 2)
+        r_xlo, r_xhi = np.repeat(i_lo[big], 2), np.repeat(i_hi[big], 2)
+        r_east, r_n = np.repeat(east[big], 2), np.repeat(i_n[big], 2)
+        sel = child[iv] >= 0
+        pr = np.concatenate([2 * child[iv[sel]], 2 * child[iv[sel]] + 1])
+        pe = np.concatenate([pe[sel], pe[sel]])
+        keep = meets(pe, r_ylo[pr], r_yhi[pr])
+        pr, pe = pr[keep], pe[keep]
+
+    poly, ylo, yhi, xlo, xhi, inside, interior = (
+        (np.concatenate(c) for c in zip(*rows)) if rows else [np.zeros(0)] * 7)
+    row, slot, edge = (np.concatenate(c) for c in zip(*slots)) if slots else ([np.zeros(0, int)] * 3)
+    edges = np.zeros((nrows, int(slot.max()) + 1 if len(slot) else 0, 4))
+    edges[row, slot] = e[edge]
+    # one entry per grid cell a row spans (never two of one wrapped cell)
+    c_lo = xlo // g
+    span = np.minimum(-(-xhi // g) - c_lo, ncl).astype(np.int64)
+    at = np.repeat(np.arange(nrows), span)
+    cell = (ylo[at] // g) * ncl + (c_lo[at] + _ranks(at)) % ncl
+    cols = {"poly": poly.astype(np.int64), "cell": cell.astype(np.int64), "ylo": ylo, "yhi": yhi,
+            "xlo": xlo, "xhi": xhi, "inside": inside.astype(bool), "interior": interior.astype(bool)}
+    return {k: (v if k == "cell" else v[at]) for k, v in cols.items()}, edges[at]
+
+
+def _ranks(group: np.ndarray) -> np.ndarray:
+    """0, 1, 2, ... within each run of equal values of ``group``."""
+    if not len(group):
+        return np.zeros(0, dtype=np.int64)
+    starts = np.flatnonzero(np.append(True, group[1:] != group[:-1]))
+    return np.arange(len(group)) - np.repeat(starts, np.diff(np.append(starts, len(group))))
 
 
 def sql_spherical_tri_excess(

@@ -266,37 +266,6 @@ WHERE inter_cnt * 1000 >= {thr} * (sa.n_sh + sb.n_sh - inter_cnt)
 SIMHASH_BITS = 60  # md5_long is 60 bits
 
 
-def _simhash_from_hashes(hs, bits: int):
-    """Sum of 60 bit-majority terms; j is a Python int so shiftright gets a
-    literal (Spark's shiftright numBits is not Column-typed)."""
-    def bit_filter(j):
-        # NB: must stay a ONE-arg lambda — pyspark treats two-arg lambdas as
-        # (element, index), so a `j=j` default would receive the index Column
-        return lambda h: F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1
-
-    terms = [
-        F.when(
-            F.size(F.filter(hs, bit_filter(j))) * 2 > F.size(hs),
-            F.lit(1 << j).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        for j in range(bits)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def simhash_col(text, bits: int = SIMHASH_BITS):
-    """60-bit SimHash over distinct lowercase tokens: bit j set iff more than
-    half the token hashes have bit j set (strict majority — deterministic)."""
-    from osmgraft.functions.text import tokens
-
-    toks = F.array_distinct(tokens(normalize_text(text)))
-    hs = F.transform(toks, lambda t: md5_long(t))
-    return _simhash_from_hashes(hs, bits)
-
-
 def sql_simhash(expr: str, bits: int = SIMHASH_BITS) -> str:
     toks = f"list_distinct({sql_tokens(sql_normalize_text(expr))})"
     hs = f"list_transform({toks}, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT)"

@@ -71,40 +71,6 @@ def tags_json(tags: Column) -> Column:
     return F.to_json(tags)
 
 
-# --- F9: object type ↔ char/name (lib.rs:494-547) --------------------------------
-_TYPE_CHAR = {"node": "n", "way": "w", "relation": "r"}
-
-
-def obj_type_char(name: Column) -> Column:
-    out = None
-    for full, ch in _TYPE_CHAR.items():
-        cond = (name == full) | (name == ch) | (name == full[:3])
-        out = F.when(cond, F.lit(ch)) if out is None else out.when(cond, F.lit(ch))
-    return out  # null for unknown (reference errors; null is our sentinel)
-
-
-def obj_type_name(ch: Column) -> Column:
-    out = None
-    for full, c in _TYPE_CHAR.items():
-        out = F.when(ch == c, F.lit(full)) if out is None else out.when(ch == c, F.lit(full))
-    return out
-
-
-# --- P1/P2: typed accessors over the union stream (lib.rs:614-642) ----------------
-def nodes_only(objs: DataFrame) -> DataFrame:
-    """reader.nodes() — with the lake partitioned by obj_type this prunes
-    whole files, mirroring the reference's skip-decode (stringpbf :375-439)."""
-    return objs.filter(F.col("obj_type") == "n")
-
-
-def ways_only(objs: DataFrame) -> DataFrame:
-    return objs.filter(F.col("obj_type") == "w")
-
-
-def relations_only(objs: DataFrame) -> DataFrame:
-    return objs.filter(F.col("obj_type") == "r")
-
-
 def osc_apply(
     base: DataFrame,
     changes: DataFrame,

@@ -1,59 +1,129 @@
 """Broadcast point-in-polygon join (the flagship spatial join).
 
-Design for 100 TB / 1000 executors: the polygon side (admin boundaries,
-~1e5 rings worldwide ≈ tens of MB) is broadcast ONCE — an STR-tree over
-polygon bboxes plus packed edge arrays — and each input partition streams
-through a ``mapInArrow`` numpy kernel: bbox candidates from the tree, then
-vectorized even-odd ray casting per polygon over its candidate points. No
-shuffle of the (huge) point side at all; output is pipelined. This mirrors the
-reference's "resolve against a side lookup structure" pattern
-(osmio nodestore.rs:55-64) lifted to a broadcast hash/rtree join.
+The polygon side (admin boundaries, ~1e5 rings worldwide) becomes a *cover*
+on the driver (``geom.polygon_cover``) that is broadcast once; the points
+stream through one ``BroadcastHashJoin`` on their 1° grid cell
+(``cells.grid_cell`` of the floored coordinates), whose join condition is the
+exact even-odd test. No point leaves the JVM and the point side never
+shuffles.
 
-Semi/anti variants implement "images inside/outside any boundary"
-(SURVEY.md §2.3 J-suite).
+**The cover.** Each polygon is cut into 1° latitude bands. In a band, the
+longitude extents of the edges meeting it, clipped to the band and widened by
+a 2-unit margin, merge into *boundary intervals*; the gaps between them hold
+no edge. The selected kernel (``geom.pnpoly`` or ``geom.pnpoly_int``), run
+once at a gap's centre, gives the status of every point in the gap. An inside
+gap is an *interior* row; each interval is a *boundary* row carrying its
+edges, unrolled into columns, and the status of the gap east of it (outside
+for the last one). A row is repeated for each 1° cell it spans. An interval
+with more than 4 edges halves its band's latitude range, inside the
+interval, until it fits or its strip is one unit tall; rows carry their
+``[ylo, yhi)`` and ``[xlo, xhi)`` ranges in the condition.
 
-The kernel's cost is mostly the JVM↔Python boundary, not the ray cast, so
-for inner and semi joins only points that can match cross it: a broadcast
-left-semi join in the JVM first keeps the points whose 1° grid cell
-(``cells.grid_cell``) meets some polygon bbox. Every point inside a bbox lies
-in one of the bbox's cells, so the kernel sees every point it could match and
-the result is unchanged. On the benchmark's admin set 64 % of the points (and
-of the bytes sent to Python) are dropped before the boundary; where every
-point lies inside some bbox the extra join is pure cost (about 0.2 s per 4M
-points on 4 cores). The cell table has at most 181 × 360 rows whatever the
-polygon count. The anti join keeps one pass over the input: it needs every
-point, and splitting it into "outside every cell" ∪ "kernel on the rest"
-would evaluate the input twice.
-The other fixed cost of the boundary, per-task start-up in the Python worker,
-is cut by the worker daemon (``osmgraft._pydaemon``, set by ``get_spark``).
+**Why it is exact.** Take a point P in boundary interval I. Every edge
+outside I is at least 2 units from P and from the gap east of I, far beyond
+float error, so it crosses P's ray exactly when it lies east of I and
+straddles P's latitude; the gap has no boundary point, so those crossings
+have the parity of the gap's status. Hence ``pnpoly(P)`` is the status east
+of I XOR the crossings of I's own edges, which the condition evaluates in
+``pnpoly``'s own expression shape: the float divide for ``raycast``, the
+integer cross-product sign for ``parity_int`` (with the edges and the point
+truncated, as ``pnpoly_int`` truncates them). Each edge's test sits under
+``CASE WHEN straddle``, so nothing divides by zero under ANSI. A point that
+matches no row is outside; a NaN or null coordinate gets a null key and
+matches nothing. ``left_semi`` and ``left_anti`` are the same join with their
+own join type.
+
+**Measured dead ends.** A Python refine of the boundary rows (a
+``mapInArrow`` ray cast in a union with the interior rows) gave nothing on
+12M points (1.89 s per op against 1.90 s for the STR-tree kernel it
+replaced): the Python stage still starts a task per partition and the union
+scans the points twice. A higher-order function for the test (``F.aggregate``
+over an edge array) is ``CodegenFallback`` and turns whole-stage codegen off
+for the join (2.68 s per op). Keying rows on the latitude band alone probes
+5.7 build rows per point (2.4 s per op); the 1° cell key is what makes the
+join cheap.
 """
 
 from __future__ import annotations
 
 import logging
-from typing import Iterator
+import time
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import DoubleType, FloatType
 
 from osmgraft.functions.cells import grid_cell
-from osmgraft.geom import STRTree, pnpoly, pnpoly_int, pnpoly_pairs, polygon_bbox, polygon_edges
-from osmgraft.operators.celljoin import polygon_cover_cells
+from osmgraft.geom import polygon_cover
 
 log = logging.getLogger(__name__)
 
-PREFILTER_CELL = 10_000_000  # 1° cells for the bbox-cell prefilter
+PIP_CELL = 10_000_000  # 1° cells: the cover's bands and join key
+_EDGE = ("y1", "x1", "y2", "x2")
 
 
-def _prepare(polys: list[dict]):
-    bboxes = np.array([polygon_bbox(p) for p in polys], dtype=np.float64).reshape(-1, 4)
-    tree = STRTree(bboxes)
-    edges = [polygon_edges(p) for p in polys]
+def cover_table(polys: list[dict], cell_size: int, refine: str) -> tuple[pa.Table, int, str]:
+    """The cover of ``polys`` keyed at ``cell_size`` as an Arrow table (from
+    Arrow, not a Python list: a list becomes a Python-mapped RDD, which runs a
+    Python stage on every call), its unrolled edge width and a DEBUG note."""
+    t0 = time.perf_counter()
+    integer = refine == "parity_int"
+    rows, edges = polygon_cover(polys, cell_size, integer)
     ids = np.array([p["boundary_id"] for p in polys], dtype=np.int64)
-    return tree, edges, ids
+    etype, ntype = (pa.int64(), np.int64) if integer else (pa.float64(), np.float64)
+    cols = {
+        "_pip_cell": pa.array(rows["cell"], pa.int64()),
+        "boundary_id": pa.array(ids[rows["poly"]], pa.int64()),
+        **{f"_pip_{k}": pa.array(rows[k], pa.float64()) for k in ("ylo", "yhi", "xlo", "xhi")},
+        "_pip_in": pa.array(rows["inside"], pa.bool_()),
+    }
+    for k in range(edges.shape[1]):
+        for j, name in enumerate(_EDGE):
+            cols[f"_pip_{name}_{k}"] = pa.array(edges[:, k, j].astype(ntype), etype)
+    table = pa.table(cols, schema=pa.schema([pa.field(n, c.type, False) for n, c in cols.items()]))
+    n = table.num_rows
+    note = (
+        f"rows={n} cells={len(np.unique(rows['cell']))} width={edges.shape[1]} "
+        f"interior={rows['interior'].mean() if n else 0.0:.3f} build_s={time.perf_counter() - t0:.3f}"
+    )
+    return table, edges.shape[1], note
+
+
+def cover_point(points: DataFrame, lat_col: str, lon_col: str, refine: str) -> tuple[Column, Column]:
+    """(y, x): the point as the kernel tests it — doubles for ``raycast``,
+    truncated longs for ``parity_int`` — null where a coordinate is NaN."""
+
+    def coord(name: str) -> Column:
+        c = points[name]
+        if isinstance(points.schema[name].dataType, (FloatType, DoubleType)):
+            c = F.when(~F.isnan(c), c)
+        return c.cast("double" if refine == "raycast" else "long")
+
+    return coord(lat_col), coord(lon_col)
+
+
+def cover_key(y: Column, x: Column, cell_size: int) -> Column:
+    """The point's cover key: its grid cell from floored coordinates."""
+    return grid_cell(F.floor(y), F.floor(x), cell_size)
+
+
+def cover_condition(cover: DataFrame, y: Column, x: Column, refine: str, width: int) -> Column:
+    """True iff the point (y, x) lies in the cover row's ranges and inside its
+    polygon: the row's status flipped by each of its edges the ray crosses."""
+    c = lambda name: cover[f"_pip_{name}"]  # noqa: E731
+    inside = c("in")
+    for k in range(width):
+        y1, x1, y2, x2 = (c(f"{name}_{k}") for name in _EDGE)
+        if refine == "raycast":
+            left = x < (x2 - x1) * (y - y1) / (y2 - y1) + x1
+        else:
+            is_left = (x2 - x1) * (y - y1) - (x - x1) * (y2 - y1)
+            left = F.when(y2 > y1, is_left > 0).otherwise(is_left < 0)
+        inside = inside != F.when((y1 > y) != (y2 > y), left).otherwise(F.lit(False))
+    in_ranges = (x >= c("xlo")) & (x < c("xhi")) & (y >= c("ylo")) & (y < c("yhi"))
+    return in_ranges & inside
 
 
 def pip_join(
@@ -73,72 +143,19 @@ def pip_join(
     refine='raycast' (default) is the float even-odd kernel; 'parity_int'
     swaps in the division-free exact-integer test (geom.pnpoly_int) — same
     semantics away from float knife edges, gated against the same oracle.
-
-    The Python ray cast runs one task per partition of ``points``; a caller
-    with a small single-file input applies
-    :func:`osmgraft.operators.util.ensure_min_parallelism` to its scan first.
     """
     if how not in ("inner", "left_semi", "left_anti"):
         raise ValueError(how)
     if refine not in ("raycast", "parity_int"):
         raise ValueError(refine)
-    pip_test = pnpoly if refine == "raycast" else pnpoly_int
-    spark = points.sparkSession
-    bc = spark.sparkContext.broadcast(_prepare(polys))
-
-    in_schema = points.schema
-    prefilter = how != "left_anti"
-    ncells = 0
-    if prefilter:
-        cells = sorted({c for p in polys for c in polygon_cover_cells(p, PREFILTER_CELL)})
-        ncells = len(cells)
-        # From Arrow, not a Python list: a list becomes a Python-mapped RDD,
-        # which would run a Python stage before the broadcast on every call.
-        cell_df = spark.createDataFrame(pa.table({"_pip_cell": pa.array(cells, pa.int64())}))
-        # Floored, not cast (which truncates), so that a fractional negative
-        # coordinate lands in the cell below, as the bbox cells do; an
-        # integral one comes through floor unchanged.
-        cell = grid_cell(F.floor(lat_col), F.floor(lon_col), PREFILTER_CELL)
-        points = points.join(F.broadcast(cell_df), cell == cell_df["_pip_cell"], "left_semi")
-    log.debug(
-        "pip_join: how=%s refine=%s prefilter=%s grid=%d cells=%d",
-        how, refine, prefilter, PREFILTER_CELL, ncells,
+    table, width, note = cover_table(polys, PIP_CELL, refine)
+    log.debug("pip_join: how=%s refine=%s %s", how, refine, note)
+    cover = F.broadcast(points.sparkSession.createDataFrame(table))
+    y, x = cover_point(points, lat_col, lon_col, refine)
+    cond = (cover_key(y, x, PIP_CELL) == cover["_pip_cell"]) & cover_condition(
+        cover, y, x, refine, width
     )
-    if how == "inner":
-        out_schema = StructType(in_schema.fields + [StructField("boundary_id", LongType(), False)])
-    else:
-        out_schema = in_schema
-
-    lat_idx = [f.name for f in in_schema.fields].index(lat_col)
-    lon_idx = [f.name for f in in_schema.fields].index(lon_col)
-
-    # mapInArrow (not mapInPandas): the kernel is pure numpy over the Arrow
-    # buffers — skipping the per-batch Arrow→pandas→Arrow conversion roughly
-    # halves python-worker CPU on this hot path.
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tree, edges, ids = bc.value
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            lat = rb.column(lat_idx).to_numpy(zero_copy_only=False)
-            lon = rb.column(lon_idx).to_numpy(zero_copy_only=False)
-            pi, gi = tree.query_point_batch(lat, lon)
-            hit = pnpoly_pairs(lat[pi], lon[pi], gi, edges, pip_test)
-            all_pi, all_gi = pi[hit], gi[hit]
-            if how == "inner":
-                taken = rb.take(pa.array(all_pi, type=pa.int64()))
-                yield pa.RecordBatch.from_arrays(
-                    list(taken.columns) + [pa.array(ids[all_gi], type=pa.int64())],
-                    schema=pa.schema(
-                        list(taken.schema) + [pa.field("boundary_id", pa.int64(), False)]
-                    ),
-                )
-            elif how == "left_semi":
-                yield rb.take(pa.array(np.unique(all_pi), type=pa.int64()))
-            else:  # left_anti
-                mask = np.ones(rb.num_rows, dtype=bool)
-                mask[np.unique(all_pi)] = False
-                yield rb.take(pa.array(np.flatnonzero(mask), type=pa.int64()))
-
-    return points.mapInArrow(kernel, schema=out_schema)
-
+    joined = points.join(cover, cond, how)
+    if how != "inner":
+        return joined
+    return joined.select(*[points[c] for c in points.columns], cover["boundary_id"])

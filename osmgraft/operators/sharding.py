@@ -25,7 +25,7 @@ Map-only: B codegen'd md5 calls per row, no shuffle at any width.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 MAX_BUCKETS = 64
@@ -47,10 +47,6 @@ def hrw_bucket(key: Column, n_buckets: int) -> Column:
     if n_buckets == 1:
         return F.lit(0)
     return F.greatest(*[_packed(key, b) for b in range(n_buckets)]) % MAX_BUCKETS
-
-
-def hrw_assign(df: DataFrame, key_col: str, n_buckets: int, out: str = "bucket") -> DataFrame:
-    return df.withColumn(out, hrw_bucket(F.col(key_col), n_buckets).cast("int"))
 
 
 # --- DuckDB SQL twin -----------------------------------------------------------

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def ensure_min_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -28,22 +28,3 @@ def ensure_min_parallelism(df: DataFrame, min_parts: int | None = None) -> DataF
     if plan.nodeName() == "AdaptiveSparkPlan" or df.rdd.getNumPartitions() < min_parts:
         return df.repartition(min_parts)
     return df
-
-
-def set_arrow_batch_rows(spark: SparkSession, rows: int) -> None:
-    """Cap the JVM→Python Arrow feed at ``rows`` rows per batch.
-
-    The session keeps ``spark.sql.execution.arrow.maxBytesPerBatch`` at
-    Int.MaxValue (any finite value re-enables a per-appended-row
-    ``ArrowWriter.sizeInBytes()`` scan that costs >50% of executor CPU on hot
-    Arrow stages — see session.py). That leaves row count as the only batch
-    bound, which is unsafe for binary-heavy rows: 65536 rows × ~50 KB image
-    payload ≈ 3.2 GB per in-flight batch per core. Operators that feed wide
-    binary rows through mapInArrow/mapInPandas call this with a small cap
-    (e.g. 4096 → ≤~200 MB worst case) right before building their plan.
-
-    The conf is session-scoped and read at *execution* time, so this is safe
-    for the build-then-collect flow used by the query registry and bench, but
-    two concurrently-executing queries share whatever value was set last.
-    """
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(rows))

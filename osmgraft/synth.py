@@ -226,12 +226,6 @@ def admin_boundaries_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(rows, ADMIN_BOUNDARY_SCHEMA)
 
 
-def usable_areas() -> list[dict]:
-    """Polygons that osmio is_area semantics admit (closed & tags[area]!='no',
-    lib.rs:465-472)."""
-    return [b for b in ADMIN_BOUNDARIES if b["tags"].get("area") != "no"]
-
-
 # --- 2b. audio fixture: PCM16 WAV clips with SQL-derivable samples -----------
 def synth_audio(spark: SparkSession, n: int, n_samples: int = 1024,
                 rate: int = 16_000) -> DataFrame:

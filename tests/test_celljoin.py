@@ -6,7 +6,7 @@ import logging
 import numpy as np
 import pyarrow as pa
 
-from osmgraft.operators.celljoin import cell_pip_join, polygon_cover_cells
+from osmgraft.operators.celljoin import cell_pip_join
 from osmgraft.operators.pip import pip_join
 from osmgraft.synth import ADMIN_BOUNDARIES
 
@@ -65,9 +65,10 @@ def test_no_salting_path(spark):
 
 
 def test_salted_plan_has_no_python_list_scan(spark, caplog):
-    """The polygon-cell and salt tables are local relations: a table built
-    from a Python list is a Python-mapped RDD (``Scan ExistingRDD``), which
-    adds a Python-worker stage to every call."""
+    """The cover and salt tables are local relations: a table built from a
+    Python list is a Python-mapped RDD (``Scan ExistingRDD``), which adds a
+    Python-worker stage to every call. The refine is the join's condition,
+    so no candidate goes to Python either."""
     caplog.set_level(logging.DEBUG, logger="osmgraft.operators.celljoin")
     joined = cell_pip_join(
         _pts_df(spark, n=800), ADMIN_BOUNDARIES, skew_threshold=100, salt_target=50, max_salts=16
@@ -77,13 +78,4 @@ def test_salted_plan_has_no_python_list_scan(spark, caplog):
     fields = dict(f.split("=") for f in line.split()[1:])
     assert int(fields["hot_cells"]) >= 1 and int(fields["max_salts"]) > 1, line
     plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" not in plan, plan
-
-
-def test_cover_cells_contains_polygon_points(spark):
-    from osmgraft.functions.cells import py_grid_cell
-
-    for p in ADMIN_BOUNDARIES:
-        cells = set(polygon_cover_cells(p, 50_000_000))
-        for lat, lon in p["ring"]:
-            assert py_grid_cell(lat, lon, 50_000_000) in cells
+    assert "ExistingRDD" not in plan and "MapInArrow" not in plan, plan

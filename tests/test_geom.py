@@ -1,9 +1,13 @@
-"""PIP truth table (FIXTURES.md golden_pip cases), STR-tree candidate
-correctness, and the PIP join operator incl. semi/anti."""
+"""PIP truth table (FIXTURES.md golden_pip cases), the polygon cover, and
+the PIP join operator incl. semi/anti."""
+
+import logging
+import re
+from fractions import Fraction
 
 import numpy as np
 
-from osmgraft.geom import STRTree, pnpoly, pnpoly_int, pnpoly_pairs, polygon_bbox, polygon_edges
+from osmgraft.geom import COVER_CAP, pnpoly, pnpoly_int, polygon_bbox, polygon_cover, polygon_edges
 from osmgraft.operators.pip import pip_join
 from osmgraft.synth import ADMIN_BOUNDARIES, admin_boundaries_df
 
@@ -43,23 +47,6 @@ def test_lshape_nonconvex():
     # (70,70) is outside the L (bbox-inside, hull-inside)
     pts = [(20, 20), (70, 20), (20, 70), (70, 70)]
     assert _inside(LSHAPE, pts) == [True, True, True, False]
-
-
-def test_strtree_candidates_superset():
-    polys = ADMIN_BOUNDARIES
-    bboxes = np.array([polygon_bbox(p) for p in polys])
-    tree = STRTree(bboxes, cap=4)  # force multi-level
-    rng = np.random.default_rng(3)
-    lat = rng.integers(-900_000_000, 900_000_000, 2000)
-    lon = rng.integers(-1_800_000_000, 1_800_000_000, 2000)
-    pi, gi = tree.query_point_batch(lat, lon)
-    got = set(zip(pi.tolist(), gi.tolist()))
-    # brute force bbox truth
-    want = set()
-    for g, bb in enumerate(bboxes):
-        hit = (lat >= bb[0]) & (lon >= bb[1]) & (lat <= bb[2]) & (lon <= bb[3])
-        want |= {(int(i), g) for i in np.nonzero(hit)[0]}
-    assert got == want
 
 
 def test_pip_join_variants(spark):
@@ -117,21 +104,6 @@ def test_pip_join_matches_brute_force(spark):
             got = sorted(map(tuple, pip_join(pts, ADMIN_BOUNDARIES, how=how,
                                              refine=refine).collect()))
             assert got == sorted(rows_want), (refine, how)
-
-
-def test_pnpoly_pairs_matches_per_pair_kernel():
-    """One kernel call per distinct polygon gives the same mask as testing
-    each (point, polygon) pair alone; no pairs gives an empty mask."""
-    rng = np.random.default_rng(8)
-    edges = {7: polygon_edges(SQUARE), 9: polygon_edges(DONUT), 11: polygon_edges(LSHAPE)}
-    lat = rng.integers(-20, 120, 500)
-    lon = rng.integers(-20, 120, 500)
-    poly = rng.choice([7, 9, 11], 500)
-    for test in (pnpoly, pnpoly_int):
-        got = pnpoly_pairs(lat, lon, poly, edges, test)
-        want = [bool(test(lat[i:i + 1], lon[i:i + 1], edges[poly[i]])[0]) for i in range(500)]
-        assert got.tolist() == want and 0 < got.sum() < 500
-        assert pnpoly_pairs(lat[:0], lon[:0], poly[:0], edges, test).shape == (0,)
 
 
 def test_haversine_m_col_matches_numpy(spark):
@@ -256,11 +228,17 @@ def test_spherical_excess_golden_and_planar_agreement():
 
 
 # Polygons whose bboxes sit on, inside and across 1° cell lines (1° = 1e7):
-# a triangle with vertices on cell corners, a concave ring with a hole
-# straddling the 0° lines, a sliver touching the antimeridian, where the
-# prefilter's wrapped cells alias lon −180° onto +180°, and a box with
-# fractional vertices a quarter unit inside a cell's negative borders.
+# a triangle with vertices on cell corners and a second one sharing its west
+# edge; a concave ring with a hole straddling the 0° lines; a sliver touching
+# the antimeridian, where wrapped cells alias lon −180° onto +180°; a box with
+# fractional vertices a quarter unit inside a cell's negative borders; a
+# shallow triangle whose long edge crosses the −49° line at an integer point
+# the float kernel puts an ulp west of the edge (the integer kernel has it on
+# the edge); a sawtooth whose ten teeth share one boundary interval until its
+# band is halved; and a comb of vertical teeth 2 units apart, which halving
+# cannot thin.
 _G = 10_000_000
+_X0 = -100 * _G
 PLANTED_POLYS = [
     {"boundary_id": 1, "ring": [(10 * _G, 20 * _G), (12 * _G, 20 * _G), (11 * _G, 23 * _G),
                                 (10 * _G, 20 * _G)], "holes": []},
@@ -276,15 +254,33 @@ PLANTED_POLYS = [
     {"boundary_id": 4, "ring": [(-41 * _G + 0.75, -60 * _G + 0.75), (-41 * _G + 0.75, -59 * _G - 0.25),
                                 (-40 * _G - 0.25, -59 * _G - 0.25), (-40 * _G - 0.25, -60 * _G + 0.75),
                                 (-41 * _G + 0.75, -60 * _G + 0.75)], "holes": []},
+    {"boundary_id": 5, "ring": [(10 * _G, 20 * _G), (11 * _G, 17 * _G), (12 * _G, 20 * _G),
+                                (10 * _G, 20 * _G)], "holes": []},
+    {"boundary_id": 6, "ring": [(-500_685_133, -1_535_775_958), (-487_191_592, -325_855_115),
+                                (-500_685_133, -325_855_115), (-500_685_133, -1_535_775_958)],
+     "holes": []},
+    {"boundary_id": 7,
+     "ring": [(30 * _G + 1_000_000, 50 * _G), (30 * _G + 1_000_000, 52 * _G)]
+     + [(30 * _G + 1_000_000 + k * 700_000, 52 * _G + k % 2 * 300_000) for k in range(1, 11)]
+     + [(30 * _G + 8_000_000, 50 * _G), (30 * _G + 1_000_000, 50 * _G)], "holes": []},
+    {"boundary_id": 8,
+     "ring": [(60 * _G + 1_000, _X0)]
+     + [v for t in range(5) for v in ((60 * _G + 5_000_000, _X0 + 4 * t),
+                                      (60 * _G + 5_000_000, _X0 + 4 * t + 2),
+                                      (60 * _G + 1_002, _X0 + 4 * t + 2),
+                                      (60 * _G + 1_002, _X0 + 4 * t + 4))]
+     + [(60 * _G + 1_000, _X0 + 20), (60 * _G + 1_000, _X0)], "holes": []},
 ]
 
 
 def _planted_points(polys, rng):
-    """Bbox corners and edge midpoints, polygon vertices, the 1° cell corners
-    around each bbox, points one unit either side of each bbox and of each
-    bbox-cell border, their lon −180° aliases, and random points near each
-    bbox."""
+    """Bbox corners and edge midpoints, every point within 2 units of a
+    polygon vertex, the 1° cell corners around each bbox, points one unit
+    either side of each bbox and of each bbox-cell border, the integer points
+    where an edge crosses a 1° band line and their neighbours, their lon −180°
+    aliases, and random points near each bbox."""
     pts = set()
+    near = [(da, do) for da in range(-2, 3) for do in range(-2, 3)]
     for p in polys:
         lat0, lon0, lat1, lon1 = (int(v) for v in polygon_bbox(p))
         lats = {lat0, lat1, (lat0 + lat1) // 2, lat0 - 1, lat1 + 1}
@@ -295,7 +291,14 @@ def _planted_points(polys, rng):
         lons |= {c * _G + d for c in c_lon for d in (-1, 0, 1)}
         pts |= {(a, o) for a in lats for o in lons}
         for ring in [p["ring"]] + p["holes"]:
-            pts |= {(int(a), int(o)) for a, o in ring}
+            pts |= {(int(a) + da, int(o) + do) for a, o in ring for da, do in near}
+            for (y1, x1), (y2, x2) in zip(ring[:-1], ring[1:]):
+                for k in range(int(min(y1, y2)) // _G + 1, int(max(y1, y2)) // _G + 1):
+                    if y1 != y2 and k * _G != max(y1, y2):
+                        x = Fraction(x1) + (Fraction(x2) - Fraction(x1)) * (k * _G - Fraction(y1)) / (
+                            Fraction(y2) - Fraction(y1))
+                        if x.denominator == 1:
+                            pts |= {(k * _G + da, int(x) + do) for da, do in near}
         h, w = max(lat1 - lat0, _G), max(lon1 - lon0, _G)
         pts |= set(zip(rng.integers(lat0 - h, lat1 + h, 400).tolist(),
                        rng.integers(lon0 - w, lon1 + w, 400).tolist()))
@@ -305,37 +308,84 @@ def _planted_points(polys, rng):
 
 
 def test_pip_join_planted_points_match_brute_force(spark):
-    """pip_join (bbox-cell prefilter + STR-tree + refine) equals every point
-    against every polygon with the plain kernel, for all three join modes and
-    both refine kernels, on points planted where a wrong prefilter would drop
-    a match; also on fractional coordinates half a unit below the planted
-    ones (raycast), and with no polygons. Inner and semi joins carry the
-    prefilter join; anti has none."""
+    """pip_join equals every point against every polygon with the plain
+    kernel, for all three join modes and both refine kernels, on int columns
+    and on double columns (the planted points half a unit lower), on points
+    planted where a cover with a wrong margin, gap status or strip split
+    would err, and where the float and integer kernels disagree; null and
+    NaN coordinates match no polygon; no polygons match nothing."""
     from pyspark.sql import functions as F
 
     pts = _planted_points(PLANTED_POLYS, np.random.default_rng(11))
     rows = [(i, a, o) for i, (a, o) in enumerate(pts)]
-    df = spark.createDataFrame(rows, "point_id long, lat7 int, lon7 int").repartition(3)
+    n = len(rows)
+    nulls = [(n, None, 5), (n + 1, 5, None), (n + 2, None, None)]
+    df = spark.createDataFrame(rows + nulls, "point_id long, lat7 int, lon7 int").repartition(3)
     half = [(i, a - 0.5, o - 0.5) for i, a, o in rows]
-    dfh = df.select("point_id", *[(F.col(c) - 0.5).alias(c) for c in ("lat7", "lon7")])
+    nans = [(i, *(None if v is None else v - 0.5 for v in r)) for i, *r in nulls]
+    nans += [(n + 3, float("nan"), 0.0), (n + 4, 0.0, float("nan"))]
+    dfh = df.select("point_id", *[(F.col(c) - 0.5).alias(c) for c in ("lat7", "lon7")]).union(
+        spark.createDataFrame(nans[len(nulls):], "point_id long, lat7 double, lon7 double"))
+    lat, lon = np.array([r[1] for r in rows]), np.array([r[2] for r in rows])
+    assert (pnpoly(lat, lon, polygon_edges(PLANTED_POLYS[5]))
+            != pnpoly_int(lat, lon, polygon_edges(PLANTED_POLYS[5]))).any()
     bids = [p["boundary_id"] for p in PLANTED_POLYS]
-    for refine, test, frame, fr_rows in (("raycast", pnpoly, df, rows),
-                                         ("parity_int", pnpoly_int, df, rows),
-                                         ("raycast", pnpoly, dfh, half)):
+    for frame, fr_rows, missing in ((df, rows, nulls), (dfh, half, nans)):
         lat = np.array([r[1] for r in fr_rows])
         lon = np.array([r[2] for r in fr_rows])
-        inside = np.stack([test(lat, lon, polygon_edges(p)) for p in PLANTED_POLYS], axis=1)
-        assert inside.any(axis=0).all() and not inside.all()
-        want = {
-            "inner": [fr_rows[i] + (bids[g],) for i, g in zip(*np.nonzero(inside))],
-            "left_semi": [fr_rows[i] for i in np.flatnonzero(inside.any(axis=1))],
-            "left_anti": [fr_rows[i] for i in np.flatnonzero(~inside.any(axis=1))],
-        }
-        for how, rows_want in want.items():
-            joined = pip_join(frame, PLANTED_POLYS, how=how, refine=refine)
-            got = sorted(map(tuple, joined.collect()))
-            assert got == sorted(rows_want), (refine, how)
-            plan = joined._jdf.queryExecution().optimizedPlan().toString()
-            assert ("LeftSemi" in plan) == (how != "left_anti"), (how, plan)
-    for how, n in (("inner", 0), ("left_semi", 0), ("left_anti", len(pts))):
-        assert pip_join(df, [], how=how).count() == n, how
+        for refine, test in (("raycast", pnpoly), ("parity_int", pnpoly_int)):
+            inside = np.stack([test(lat, lon, polygon_edges(p)) for p in PLANTED_POLYS], axis=1)
+            assert inside.any(axis=0).all() and not inside.all()
+            want = {
+                "inner": [fr_rows[i] + (bids[g],) for i, g in zip(*np.nonzero(inside))],
+                "left_semi": [fr_rows[i] for i in np.flatnonzero(inside.any(axis=1))],
+                "left_anti": [fr_rows[i] for i in np.flatnonzero(~inside.any(axis=1))] + missing,
+            }
+            for how, rows_want in want.items():
+                got = pip_join(frame, PLANTED_POLYS, how=how, refine=refine).collect()
+                key = lambda r: tuple(str(v) for v in r)  # noqa: E731 (None and NaN sort)
+                assert sorted(map(key, got)) == sorted(map(key, rows_want)), (refine, how)
+    for how, n_out in (("inner", 0), ("left_semi", 0), ("left_anti", len(rows) + len(nulls))):
+        assert pip_join(df, [], how=how).count() == n_out, how
+
+
+def test_pip_join_plan_is_one_broadcast_cover_join(spark):
+    """Every join mode is one broadcast hash join of the points against the
+    cover, and no point goes to Python."""
+    pts = spark.createDataFrame([(1, 0, 0)], "point_id long, lat7 int, lon7 int")
+    for how, jtype in (("inner", "Inner"), ("left_semi", "LeftSemi"), ("left_anti", "LeftAnti")):
+        for refine in ("raycast", "parity_int"):
+            plan = pip_join(pts, PLANTED_POLYS, how=how, refine=refine)._jdf.queryExecution()
+            plan = plan.executedPlan().toString()
+            joins = re.findall(r"(\w+Join) \[.*?\], \[.*?\], (\w+), (\w+),", plan)
+            assert joins == [("BroadcastHashJoin", jtype, "BuildRight")], (how, joins)
+            for node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+                assert node not in plan, (how, node)
+
+
+def test_pip_join_logs_its_cover_once(spark, caplog):
+    """One DEBUG line per call names the cover's rows, cells, unrolled edge
+    width, interior-row share and build seconds."""
+    caplog.set_level(logging.DEBUG, logger="osmgraft.operators.pip")
+    pts = spark.createDataFrame([(1, 0, 0)], "point_id long, lat7 int, lon7 int")
+    pip_join(pts, ADMIN_BOUNDARIES, how="left_semi")
+    lines = [r.getMessage() for r in caplog.records if r.getMessage().startswith("pip_join:")]
+    assert len(lines) == 1, lines
+    fields = dict(f.split("=") for f in lines[0].split()[1:])
+    assert set(fields) == {"how", "refine", "rows", "cells", "width", "interior", "build_s"}
+    assert int(fields["rows"]) >= int(fields["cells"]) > 0 and 0 < int(fields["width"]) <= COVER_CAP
+    assert 0 < float(fields["interior"]) < 1 and float(fields["build_s"]) >= 0
+
+
+def test_polygon_cover_halves_crowded_strips():
+    """The sawtooth's ten teeth share one interval of its 1° band: halving
+    the band leaves no row with more than COVER_CAP edges. The comb's teeth
+    span every strip, so halving stops at once instead of doubling its rows
+    down to one-unit strips."""
+    saw, comb = PLANTED_POLYS[6], PLANTED_POLYS[7]
+    rows, edges = polygon_cover([saw], _G)
+    assert edges.shape[1] <= COVER_CAP
+    assert ((rows["yhi"] - rows["ylo"]) < _G / 2).any()
+    for integer in (False, True):
+        rows, edges = polygon_cover([comb], _G, integer)
+        assert edges.shape[1] > COVER_CAP and len(rows["cell"]) < 20

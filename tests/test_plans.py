@@ -41,12 +41,12 @@ def test_pip_join_scan_is_pruned_and_shuffle_free(spark):
 
     pts = points_from_orders(spark, SF)
     plan = plan_of(pip_join(pts, ADMIN_BOUNDARIES, how="inner"))
-    # point side: no exchange at all (broadcast STR-tree inside the UDF). The
-    # one join is the bbox-cell prefilter: the small cell table is broadcast
-    # (BuildRight) and the points stream through a left-semi probe.
+    # point side: no exchange at all. The one join is the cover join: the
+    # polygon cover is broadcast (BuildRight) and the points stream through
+    # an inner probe whose condition is the exact test.
     assert "SortMergeJoin" not in plan and "Exchange hashpartitioning" not in plan
-    joins = re.findall(r"BroadcastHashJoin .*", plan)
-    assert joins and all(j.endswith("LeftSemi, BuildRight, false") for j in joins), joins
+    joins = re.findall(r"(\w+Join) \[.*?\], \[.*?\], (\w+), (\w+),", plan)
+    assert joins == [("BroadcastHashJoin", "Inner", "BuildRight")], joins
     # parquet scan reads only the projection the points need
     m = re.search(r"ReadSchema: ([^\n]+)", plan)
     assert m and "o_orderkey" in m.group(1)

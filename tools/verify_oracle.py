@@ -17,6 +17,10 @@ only five probed queries whose oracles then had uncast HUGEINT outputs).
 The repo rule is now: oracle output columns must be BIGINT/VARCHAR/BOOL/
 DOUBLE — never HUGEINT or DECIMAL (tests/test_oracle_types.py enforces);
 this harness runs under all three fetch paths to prove fetch-invariance.
+
+DuckDB runs with a fixed 5 GB memory limit: its default of 80 % of RAM,
+beside the Spark JVM, gets the sweep SIGKILLed on a 16 GB host at
+``tile_render_png_phash_z10``, whose oracle peaks at about 4.5 GB.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+DUCK_MEMORY_LIMIT = "5GB"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
@@ -83,7 +88,7 @@ def main():
         cpus=int(os.environ.get("VERIFY_CPUS", "8")),
         **{"spark.ui.showConsoleProgress": "false"},
     )
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": DUCK_MEMORY_LIMIT})
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
