@@ -35,8 +35,8 @@ own join type.
 
 **Measured dead ends.** A Python refine of the boundary rows (a
 ``mapInArrow`` ray cast in a union with the interior rows) gave nothing on
-12M points (1.89 s per op against 1.90 s for the STR-tree kernel it
-replaced): the Python stage still starts a task per partition and the union
+12M points, local[4] on 4 vCPUs (1.89 s per op against 1.90 s for the
+STR-tree kernel it replaced): the Python stage still starts a task per partition and the union
 scans the points twice. A higher-order function for the test (``F.aggregate``
 over an edge array) is ``CodegenFallback`` and turns whole-stage codegen off
 for the join (2.68 s per op). Keying rows on the latitude band alone probes
